@@ -187,7 +187,7 @@ object Ann {
   /** Drop all cached segment graphs (call after overwriting an index path). */
   def clearSegmentCache(): Unit =
     { SegmentCache.clear(); TransientGraphCache.clear(); SegCountCache.clear()
-      CentroidCache.clear(); ClusteredMarkerCache.clear(); CoarseCache.clear()
+      CentroidCache.clear(); ClusteredMarkerCache.clear()
       SidecarModelCache.clear(); SessMemoCache.clear() }
 
   /** Write a fresh content token (`_build_id`) at an index root. Mutators
@@ -434,7 +434,7 @@ object Ann {
       /** Minimum ADC (compressed) search frontier as a multiple of topK.
         * PQ rank-inversion error grows with rank depth, so a compressed
         * beam of only ~2x topK loses true neighbors that ADC ordering
-        * pushes below the cutoff — measured on sf0.1 (K100Probe, NOTES_r6):
+        * pushes below the cutoff — measured on sf0.1 (NOTES_r6):
         * at k=100 the exact beam at ef=200 has recall 1.0 while the ADC
         * beam's top-200 contains only 0.833 of the truth; frontier 4x k
         * restores 0.967. The exact path is unaffected (its beam is ef).
@@ -1175,8 +1175,8 @@ object Ann {
         * — the beam is a minority of a serving batch — against degree-x
         * residual-code memory and a third scorer variant; NOTES_r14 §6).
         * Results are identical to gathered (spec-asserted). Default OFF —
-        * the data (kernel micro `tools.FusedMicro`, 50k x 64d, AVX-512 box,
-        * Panama strip-gather `adcBlockF` active, re-measured r9 2026-08):
+        * the data (kernel micro, 50k x 64d, AVX-512 box, Panama
+        * strip-gather `adcBlockF` active, re-measured r9 2026-08; NOTES_r14 §6):
         * m=8 fused 66ms vs gathered 76ms (1.15x), m=16 fused 78ms vs
         * gathered 89-117ms (1.15-1.30x, gathered-side variance) — real but
         * under the 1.3x flip bar at the m=8 the gates serve, while the
@@ -2784,11 +2784,6 @@ object Ann {
     * RPC on object storage. */
   private val ClusteredMarkerCache = new TokenKeyedMemo[Boolean]
 
-  /** Coarse-router memo (one k-means over the centroid set per
-    * (path, build-token) — seconds at 10^5 cells, amortized across every
-    * serving batch; see [[CoarseRouter]]). */
-  private val CoarseCache = new TokenKeyedMemo[CoarseRouter]
-
   /** Write-through memo for a persisted session's SMALL durable state
     * (guard fields + candidate-pool rows — never the cursor blobs), keyed
     * by statePath and validated by a filesystem FINGERPRINT of the state
@@ -2882,42 +2877,6 @@ object Ann {
     else fs.listStatus(p).map(s =>
       s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
       .sorted.mkString("|")
-
-  /** Cell count at which routing switches from the exact O(S) centroid
-    * scan to two-level coarse routing (see [[CoarseRouter]]). Below it
-    * picks are bit-identical to the historical exact scan.
-    *
-    * DEFAULT: OFF at every scale (Int.MaxValue). The r14 end-to-end
-    * measurements on REAL k-means trees killed auto-engagement honestly:
-    * recall parity with the flat scan needs overscan 8 at 16k-32k cells
-    * but 32 at 131k (ClusteredLifecycleProbe + CoarseTuneProbe, 4M x
-    * 131072: flat 0.9845; os=8 0.9555, os=16 0.9715, os=32 0.9835) — the
-    * parity pool covers ~50-70% of ALL cells and roughly doubles per 4x
-    * cells, i.e. it grows ~linearly in S. Coarse routing on real centroid
-    * sets is therefore a CONSTANT-FACTOR routing-stage win at best
-    * (1.2-1.4x on the routing stage alone at fixed sub-parity pools,
-    * RoutingScaleMicro), and routing is < 5% of end-to-end serving CPU at
-    * every measured scale — the lifecycle batch walls at 131k cells are
-    * equal within noise across all arms. Opt in (env
-    * `SPARK_GRAFT_COARSE_CELLS`) only if a deployment at >= 10^5 cells
-    * measures driver routing CPU as a real bottleneck AND accepts the
-    * 1-3 pt routed-recall trade at the default overscan. A var so A/B
-    * probes (tools/CoarseRouteProbe, tools/CoarseTuneProbe,
-    * tools/ClusteredLifecycleProbe) can flip arms in one JVM. */
-  private[graft] var CoarseRouteCells: Int =
-    sys.env.get("SPARK_GRAFT_COARSE_CELLS").map(_.toInt).getOrElse(Int.MaxValue)
-
-  /** Coarse-pool depth multiplier: unfiltered pools run 8x this times the
-    * pick count, filtered walks 2x this times the prefix (see routePick).
-    * 8 (64x picks) is recall-parity depth at 16k-32k cells; 131k cells
-    * measured os=8 -2.9 pt / os=16 -1.3 pt / os=32 -0.1 pt vs flat
-    * (CoarseTuneProbe on the ClusteredLifecycleProbe tree, 4M x 131072,
-    * rerankK=40) — parity depth grows with the cell count, which is why
-    * coarse routing is opt-in (see [[CoarseRouteCells]]). A var (env
-    * `SPARK_GRAFT_COARSE_OVERSCAN`) so the A/B probes can sweep depth on
-    * one built tree. */
-  private[graft] var CoarseOverscan: Int =
-    sys.env.get("SPARK_GRAFT_COARSE_OVERSCAN").map(_.toInt).getOrElse(8)
 
   /** seg -> RDD-partition map of a session's index layout (one tiny entry
     * per segment), memoized per (path + pin identity, build token): lets
@@ -3016,14 +2975,8 @@ object Ann {
             // Work stays sublinear: 2*sqrt(S) cells, and the walk still
             // stops early when eligible cells run out.
             val floor = if (perSegAcc.isDefined) 2 * base else base
-            // two-level routing at very large cell counts: build the
-            // coarse structure once per (path, token) — see [[CoarseRouter]]
-            val coarse: CoarseRouter =
-              if (centsSorted.length >= CoarseRouteCells)
-                CoarseCache.getOrCompute((path, tok), CoarseRouter.build(centsSorted))
-              else null
             val picks = routePick(qArr.map(_._2), p.metric, centsSorted,
-              eff, floor, want, perSegAcc.orNull, eligible, coarse)
+              eff, floor, want, perSegAcc.orNull, eligible)
             val m = scala.collection.mutable.Map.empty[String, scala.collection.mutable.ArrayBuffer[Int]]
             qArr.indices.foreach { qi =>
               picks(qi).foreach { s =>
@@ -3069,15 +3022,7 @@ object Ann {
         * [[Vamana.similarity]] — same accumulation order, the norm product
         * is just computed once per (query, centroid) instead of re-derived
         * element-wise. null = score via Vamana.similarity directly. */
-      centNorms: Array[Double] = null,
-      /** Two-level routing ([[CoarseRouter]]), engaged by [[routeQueries]]
-        * at >= [[CoarseRouteCells]] cells: candidate pools come from the
-        * best super-centroids' member lists instead of the full scan.
-        * null = exact scan (bit-identical to the historical behavior). */
-      coarse: CoarseRouter = null,
-      /** Bitset over centroid indexes mirroring `eligible` (built once per
-        * batch by [[routePick]]); only read when `coarse` is set. */
-      eligMask: Array[Long] = null): scala.collection.Seq[String] = {
+      centNorms: Array[Double] = null): scala.collection.Seq[String] = {
 
     val qNorm: Double = if (centNorms == null) 0.0 else {
       var na = 0.0; var i = 0
@@ -3144,14 +3089,7 @@ object Ann {
     }
 
     if (perSeg == null) {
-      // 8x the filtered multiplier (= 32x the picks): real k-means centroid
-      // rankings are noisy and spread across supers — 4x pools measured
-      // 0.9325 routed recall_abs on a real 16384-cell tree vs 0.9930 flat,
-      // 32x restores 0.9735 (>= the 0.95 contract) while still scoring
-      // ~8x fewer cells than the flat scan at 16384+ (CoarseRouteProbe)
-      val pool0 = if (coarse == null) null
-        else coarse.pool(qvec, metric, 8 * CoarseOverscan * eff, null, 0)
-      val idxs = topM(pool0, eff)
+      val idxs = topM(null, eff)
       val out = new Array[String](idxs.length)
       var i = 0
       while (i < idxs.length) { out(i) = cents(idxs(i))._1; i += 1 }
@@ -3161,24 +3099,7 @@ object Ann {
       var m = math.max(base, 16)
       var done = false
       while (!done) {
-        // coarse pool per prefix size; once the doubling prefix covers the
-        // whole eligible set, fall back to EXACTLY that set — termination
-        // and the worst-case walk are the historical exact behavior
-        // masked pools run 2x the unfiltered overscan AND at least half
-        // the eligible set: an accept-list deepens the relevant ranking
-        // (truth spreads into lower-ranked eligible cells), thins each
-        // super's masked member yield, and — for DENSE masks — makes the
-        // walk's 2*sqrt(S)-cell floor intrinsically wide, so a pool
-        // proportional to the picks alone loses contract recall (measured
-        // at 16384 cells: sel50 0.91 at 8m pool vs 1.00 at eligible/2;
-        // RoutingScaleMicro). Net: >= 2x cheaper than the flat walk on
-        // dense masks, 10-20x on sparse ones, recall >= 0.95 everywhere.
-        val cand =
-          if (coarse == null || m >= eligible.length) eligible
-          else coarse.pool(qvec, metric,
-            math.max(2 * CoarseOverscan * m, eligible.length / 2), eligMask,
-            eligible.length)
-        val pref = topM(cand, m)
+        val pref = topM(eligible, m)
         out.clear()
         var acc = 0L
         var i = 0
@@ -3209,23 +3130,12 @@ object Ann {
       base: Int,
       want: Long,
       perSeg: Map[String, Long],
-      eligible: Array[Int],
-      /** Two-level router for very large cell counts (see [[CoarseRouter]]);
-        * null = exact scan. */
-      coarse: CoarseRouter = null): Array[scala.collection.Seq[String]] = {
+      eligible: Array[Int]): Array[scala.collection.Seq[String]] = {
     val centNorms: Array[Double] =
       if (metric.toUpperCase == "COSINE") centsSorted.map { case (_, c) =>
         var nb = 0.0; var i = 0
         while (i < c.length) { nb += c(i).toDouble * c(i).toDouble; i += 1 }
         math.sqrt(nb)
-      } else null
-    // eligibility bitset built once per batch (coarse pools check it per
-    // member; an Array[Int].contains would be O(|eligible|) per member)
-    val eligMask: Array[Long] =
-      if (coarse != null && eligible != null) {
-        val mk = new Array[Long]((centsSorted.length + 63) >> 6)
-        eligible.foreach(c => mk(c >>> 6) |= 1L << (c & 63))
-        mk
       } else null
     val picks = new Array[scala.collection.Seq[String]](qvecs.length)
     // dedicated sized pool, not the global Scala pool: routing runs on the
@@ -3235,7 +3145,7 @@ object Ann {
     if (qvecs.length <= 1) {
       qvecs.indices.foreach { qi =>
         picks(qi) = pickSegments(qvecs(qi), metric, centsSorted, eff, base, want,
-          perSeg, eligible, centNorms, coarse, eligMask)
+          perSeg, eligible, centNorms)
       }
     } else {
       val threads = math.min(qvecs.length,
@@ -3246,7 +3156,7 @@ object Ann {
           pool.submit(new Runnable {
             def run(): Unit =
               picks(qi) = pickSegments(qvecs(qi), metric, centsSorted, eff, base,
-                want, perSeg, eligible, centNorms, coarse, eligMask)
+                want, perSeg, eligible, centNorms)
           })
         }
         futs.foreach(_.get())

@@ -88,9 +88,10 @@ object Ivf {
 
     /** Candidate centroid pool: supers ranked by the row's similarity,
       * member lists appended (deduped — spill) until `need` candidates and
-      * a sqrt(ns) breadth floor. Same constants as the serving-side
-      * [[CoarseRouter]] (validated >= 0.95 truth recall at 4096-65536
-      * cells, tools/RoutingScaleMicro). */
+      * a sqrt(ns) breadth floor. The constants are pinned by
+      * CoarseAssignSpec (>= 0.99 assignment agreement and >= 0.95 probe-set
+      * recall vs the exact scan at 4096 cells) and held end to end on real
+      * 32768- and 131072-cell trees (NOTES_r14 §1, §10). */
     private def coarsePool(v: Array[Double], vn: Double, need: Int): Array[Int] = {
       val (sup, members) = coarseLevel.get
       val ns = sup.length

@@ -81,13 +81,7 @@ object Dedup {
         * NOT similar to the hub can lose edges it would have had — the
         * standard recall/safety trade for capped LSH). Default off so the
         * uncapped semantics stay oracle-exact. */
-      hubCap: Int = Int.MaxValue,
-      /** Probe switch (tools/DedupPassProbe): false restores the
-        * pre-materialization shape where the signature and shingle passes
-        * run once per consuming subtree — the A/B evidence that the
-        * single-pass fix wins wall clock at corpus scale. Always true in
-        * query paths. */
-      singlePass: Boolean = true): DataFrame = {
+      hubCap: Int = Int.MaxValue): DataFrame = {
 
     // signatures are the expensive per-row step — make sure they compute
     // across cores even when the corpus is one parquet split (no-op at scale)
@@ -103,10 +97,10 @@ object Dedup {
     // would be substituted into the NEXT call's matching plan — silent
     // cross-invocation result reuse (see Bm25.search for the full
     // rationale and the cluster-durability caveat).
-    val withBands0 = base
+    val withBands = base
       .withColumn("sig", minhashSignature(col("text"), numHashes))
       .select(col("id"), explode(lshBands(col("sig"), numHashes, rowsPerBand)).as("band_hash"))
-    val withBands = if (singlePass) withBands0.localCheckpoint(true) else withBands0
+      .localCheckpoint(true)
 
     val cand =
       if (hubCap == Int.MaxValue) {
@@ -136,9 +130,9 @@ object Dedup {
     // Materialized once for the same reason as withBands: both join sides
     // consumed it as separate subtrees, re-scanning and re-hashing the
     // corpus tokens twice per call.
-    val tokSets0 = base.select(col("id"),
+    val tokSets = base.select(col("id"),
       graft.functions.HashExpressions.ngramShingles(col("text"), 1).as("toks"))
-    val tokSets = if (singlePass) tokSets0.localCheckpoint(true) else tokSets0
+      .localCheckpoint(true)
     cand
       .join(tokSets.select(col("id").as("id1"), col("toks").as("toks1")), "id1")
       .join(tokSets.select(col("id").as("id2"), col("toks").as("toks2")), "id2")
@@ -333,11 +327,7 @@ object Dedup {
       /** Skew guard passed through to [[embeddingNearDup]]: clusters larger
         * than this emit verified star edges instead of all pairs, so one
         * mega-cluster cannot go quadratic. Default off (oracle-exact). */
-      hubCap: Int = Int.MaxValue,
-      /** Probe switch (tools/DedupPassProbe): false restores the shape
-        * where the nearest-centroid assignment re-runs per consuming
-        * subtree (~4x). Always true in query paths. */
-      singlePass: Boolean = true): DataFrame = {
+      hubCap: Int = Int.MaxValue): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(Set("far", "near", "min_id")(keep), s"unknown keep policy: $keep")
     val model = graft.index.Ivf.train(emb, vecCol, nClusters, metric, seed = seed)
@@ -350,14 +340,14 @@ object Dedup {
     // join), and as lazy subtrees each re-ran the per-row
     // nearest-centroid scan — the most expensive per-row step on this
     // path, executed ~4x at any corpus size (same fix as minhashLsh).
-    val assigned0 = graft.index.Ivf
+    val assigned = graft.index.Ivf
       .assign(emb.select(col(idCol).cast("long").as("id"), col(vecCol).as("v")),
         "v", model, "cluster_id")
       .join(broadcast(cents), "cluster_id")
       .withColumn("c_sim", round(VectorFunctions.similarity(metric)(
         col("v").cast("array<double>"), col("centroid")), 9))
       .drop("centroid")
-    val assigned = if (singlePass) assigned0.localCheckpoint(true) else assigned0
+      .localCheckpoint(true)
     val pairs = embeddingNearDup(assigned, "id", "v", "cluster_id", threshold, hubCap)
     val groups = duplicateGroups(assigned.select("id"), "id", pairs)
     val keepOrder = keep match {

@@ -12,14 +12,12 @@ import org.apache.spark.sql.SparkSession
   *     cells >= Ivf.HierTrainCells)
   *   - coarse two-level assignment       (IvfModel.coarseLevel,
   *     cells >= Ivf.CoarseAssignCells)
-  *   - coarse two-level routing          (CoarseRouter — forced on via
-  *     Ann.CoarseRouteCells for the coarse arm)
   *   - residual ADC two-phase serving    (pqM > 0 clustered build:
   *     res_code + _pqres_model)
   *
-  * and A/Bs routed serving with coarse routing ON vs OFF (flat exact
-  * centroid scan) on the SAME tree, plus a filtered arm (the reference's
-  * >= 0.95-under-filters contract, TestLowCardinalityFiltering.java:54-57).
+  * and serves it routed (exact centroid scan), unfiltered and under an
+  * accept-list (the reference's >= 0.95-under-filters contract,
+  * TestLowCardinalityFiltering.java:54-57).
   * recall_abs is vs a brute-force oracle over the full corpus — composition
   * is where pairing/threshold bugs hide, so the bar is the end answer, not
   * any stage's own metric.
@@ -97,27 +95,22 @@ object ClusteredLifecycleProbe {
     // rerankK=40 (the oq4 slack the serving default uses at topK=10); the
     // beam traverses on RESIDUAL ADC on every segment (pairing asserted
     // above), pages rerank exactly
-    for (arm <- Seq("coarse", "flat")) {
-      Ann.CoarseRouteCells = if (arm == "coarse") 4096 else Int.MaxValue
-      Ann.clearSegmentCache()
-      Ann.unpin(path); Ann.pin(spark, path)
-      Ann.searchIndex(spark, path, queries, 10, ef = 64, params,
-        probeSegments = Ann.AutoProbe, rerankK = 40).count() // warm
-      val tb = System.nanoTime()
-      val got = Ann.searchIndex(spark, path, queries, 10, ef = 64, params,
-        probeSegments = Ann.AutoProbe, rerankK = 40)
-      val rec = recallOf(got, truth, truthN)
-      val wall = (System.nanoTime() - tb) / 1e9
-      Ann.searchIndex(spark, path, queries, 10, ef = 64, params,
-        probeSegments = Ann.AutoProbe, rerankK = 40, accepts = Some(accepts)).count()
-      val tf = System.nanoTime()
-      val gotF = Ann.searchIndex(spark, path, queries, 10, ef = 64, params,
-        probeSegments = Ann.AutoProbe, rerankK = 40, accepts = Some(accepts))
-      val recF = recallOf(gotF, truthF, truthFN)
-      val wallF = (System.nanoTime() - tf) / 1e9
-      System.err.println(f"[lifecycle] $arm%-6s recall_abs=$rec%.4f batch=${wall}%.2fs " +
-        f"filtered_recall=$recF%.4f filtered_batch=${wallF}%.2fs")
-    }
+    Ann.searchIndex(spark, path, queries, 10, ef = 64, params,
+      probeSegments = Ann.AutoProbe, rerankK = 40).count() // warm
+    val tb = System.nanoTime()
+    val got = Ann.searchIndex(spark, path, queries, 10, ef = 64, params,
+      probeSegments = Ann.AutoProbe, rerankK = 40)
+    val rec = recallOf(got, truth, truthN)
+    val wall = (System.nanoTime() - tb) / 1e9
+    Ann.searchIndex(spark, path, queries, 10, ef = 64, params,
+      probeSegments = Ann.AutoProbe, rerankK = 40, accepts = Some(accepts)).count()
+    val tf = System.nanoTime()
+    val gotF = Ann.searchIndex(spark, path, queries, 10, ef = 64, params,
+      probeSegments = Ann.AutoProbe, rerankK = 40, accepts = Some(accepts))
+    val recF = recallOf(gotF, truthF, truthFN)
+    val wallF = (System.nanoTime() - tf) / 1e9
+    System.err.println(f"[lifecycle] recall_abs=$rec%.4f batch=${wall}%.2fs " +
+      f"filtered_recall=$recF%.4f filtered_batch=${wallF}%.2fs")
     Ann.unpin(path)
     spark.stop()
   }

@@ -217,4 +217,43 @@ class DedupGroupsSpec extends SparkSpec {
       assigned.filter(col("id") >= 1000L), "id", "v", "blk", 0.0, hubCap = 64)
     assert(smallPairs.count() === 50L * 49 / 2, "under-cap blocks keep all-pairs semantics")
   }
+
+  test("minhashLsh and semantic compute their per-row pass only inside checkpointed leaves") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.expressions.Expression
+    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+    import org.apache.spark.sql.execution.LogicalRDD
+    import graft.functions.{MinHashSignatureExpr, NearestCentroidExpr, NgramShinglesExpr}
+    // a checkpointed leaf carries rows, not expressions: any match found in
+    // the plan would be re-evaluated by every subtree that consumes it
+    def live(plan: LogicalPlan)(hit: Expression => Boolean): Boolean =
+      plan.collectWithSubqueries { case n => n.expressions.exists(_.exists(hit)) }
+        .contains(true)
+    def fromCheckpoint(plan: LogicalPlan, column: String): Boolean =
+      plan.collectWithSubqueries {
+        case r: LogicalRDD if r.output.exists(_.name == column) => r
+      }.nonEmpty
+
+    val docs = Seq(
+      (0L, "the quick brown fox jumps over the lazy dog"),
+      (1L, "the quick brown fox jumps over the lazy cat"),
+      (2L, "a completely different document about spark engines")
+    ).toDF("doc_id", "text")
+    val mh = Dedup.minhashLsh(docs, "doc_id", "text",
+      numHashes = 32, rowsPerBand = 4, threshold = 0.5).queryExecution.analyzed
+    assert(!live(mh)(_.isInstanceOf[MinHashSignatureExpr]),
+      "MinHash signatures must be computed once, inside a checkpointed leaf")
+    assert(!live(mh)(_.isInstanceOf[NgramShinglesExpr]),
+      "verify shingles must be computed once, inside a checkpointed leaf")
+    assert(fromCheckpoint(mh, "band_hash") && fromCheckpoint(mh, "toks"))
+
+    val emb = (0 until 40).map { i =>
+      (i.toLong, Array.tabulate(8)(j => if (j == i % 4) 10f else (i * j % 7).toFloat))
+    }.toDF("vec_id", "embedding")
+    val sem = Dedup.semantic(emb, "vec_id", "embedding",
+      nClusters = 4, threshold = 0.999).queryExecution.analyzed
+    assert(!live(sem)(_.isInstanceOf[NearestCentroidExpr]),
+      "nearest-centroid assignment must be computed once, inside a checkpointed leaf")
+    assert(fromCheckpoint(sem, "cluster_id"))
+  }
 }
