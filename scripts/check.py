@@ -2,6 +2,7 @@
 """Local mimic of the driver's correctness gate.
 
 Usage: python3 scripts/check.py [sfdir] [outdir] [--no-run]
+       python3 scripts/check.py [sfdir] [outdir] --against <other_outdir>
 
 1. runs graft.Verify via sbt against sfdir (unless --no-run)
 2. loads oracle_sql.json, runs each SQL in DuckDB with the parquet tables
@@ -9,6 +10,12 @@ Usage: python3 scripts/check.py [sfdir] [outdir] [--no-run]
 3. compares each Spark result parquet to the DuckDB result: row count,
    column names, and value hash (columns sorted by name, rows sorted by all
    columns, values stringified)
+
+With --against, step 1 runs as usual, then every entry of outdir is
+compared with the same entry of another Verify output (for example one
+made from the parent commit) under the same normalization, oracle or not.
+Each entry that differs or exists on one side only is listed, and the exit
+status is non-zero on any difference.
 """
 import json
 import subprocess
@@ -29,11 +36,54 @@ def norm(df):
     return df
 
 
+def stringified(con, d):
+    """One result dir's rows, normalized and stringified like the oracle
+    compare; None when unreadable."""
+    try:
+        gn = norm(con.sql(f"SELECT * FROM '{d}/*.parquet'").df())
+    except Exception:
+        return None
+    return list(gn.columns), gn.astype(str).values.tolist()
+
+
+def against(outdir, other):
+    con = duckdb.connect()
+    mine = {d.name for d in Path(outdir).iterdir() if d.is_dir()}
+    theirs = {d.name for d in Path(other).iterdir() if d.is_dir()}
+    n_same = n_diff = 0
+    for name in sorted(mine | theirs):
+        if name not in mine or name not in theirs:
+            print(f"DIFF {name}: only in {outdir if name in mine else other}")
+            n_diff += 1
+            continue
+        a = stringified(con, f"{outdir}/{name}")
+        b = stringified(con, f"{other}/{name}")
+        if a is None or a != b:
+            what = "unreadable" if a is None or b is None else (
+                f"columns {a[0]} != {b[0]}" if a[0] != b[0] else
+                f"rows {len(a[1])} != {len(b[1])}" if len(a[1]) != len(b[1])
+                else "values differ")
+            print(f"DIFF {name}: {what}")
+            n_diff += 1
+        else:
+            n_same += 1
+    print(f"\n{n_same} identical, {n_diff} differing (against {other})")
+    return n_diff
+
+
 def main():
-    args = [a for a in sys.argv[1:] if not a.startswith("--")]
+    argv = sys.argv[1:]
+    other = None
+    if "--against" in argv:
+        i = argv.index("--against")
+        if i + 1 >= len(argv):
+            sys.exit("--against needs the other Verify output dir")
+        other = argv[i + 1]
+        del argv[i:i + 2]
+    args = [a for a in argv if not a.startswith("--")]
     sfdir = args[0] if len(args) > 0 else "/root/testdata/sf0.001"
     outdir = args[1] if len(args) > 1 else "/tmp/verify_out"
-    if "--no-run" not in sys.argv:
+    if "--no-run" not in argv:
         r = subprocess.run(
             ["sbt", "-batch", f'runMain graft.Verify {sfdir} {outdir}'],
             cwd="/root/repo", capture_output=True, text=True, timeout=3600)
@@ -94,7 +144,8 @@ def main():
                 print(f"FAIL {d.name}: unreadable: {e}")
                 n_fail += 1
     print(f"\n{n_pass} pass, {n_fail} fail")
-    sys.exit(1 if n_fail else 0)
+    n_diff = against(outdir, other) if other else 0
+    sys.exit(1 if n_fail or n_diff else 0)
 
 
 if __name__ == "__main__":

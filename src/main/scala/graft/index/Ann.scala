@@ -22,6 +22,23 @@ import org.apache.spark.util.LongAccumulator
   * build cost is per-partition O(n_p * beamWidth * degree), search touches
   * each segment's graph independently. The index can be persisted
   * (`buildIndex`/`searchIndex`) so build cost amortizes across query sets.
+  *
+  * Serving scaffold. Like jvector's one `GraphSearcher` for top-k,
+  * threshold and resume queries (`GraphSearcher.java:221-243, 298-303,
+  * 509-547`), every search route here makes its serving decisions in one
+  * place and keeps only its per-query beam call and its merge:
+  *
+  *   - persisted routes ([[searchIndex]], [[searchIndexPaged]],
+  *     [[thresholdSearchIndex]]) run on `servePersisted`: query collect,
+  *     pinned or read rows, routing, liveness, sidecar models, pruning,
+  *     chunk fan-out, co-location, the warm fast path and the effort
+  *     counters;
+  *   - every persisted route, the session pages included, sees a segment
+  *     through one `SegView`: the assembly, its liveness, and the choice
+  *     of residual, global or no approximate scorer per query;
+  *   - transient routes ([[searchWithMetrics]], [[searchPaged]],
+  *     [[thresholdSearch]]) run on `serveTransient`: segmenting, the
+  *     content-keyed graph cache and the per-query loop.
   */
 object Ann {
 
@@ -553,65 +570,14 @@ object Ann {
       baseId: String = "id",
       baseVec: String = "vec",
       acceptCol: Option[String] = None): (DataFrame, SearchMetrics) = {
-
-    val spark = base.sparkSession
-    import spark.implicits._
-
-    val qArr: Array[(Long, Array[Float])] = queries
-      .select(col("qid").cast("long"), col("qvec").cast("array<float>"))
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-    val qB = new QueryCarrier(spark, qArr)
-
-    val visitedAcc = spark.sparkContext.longAccumulator("ann.visited")
-    val scannedAcc = spark.sparkContext.longAccumulator("ann.segment.rows")
-    val expandedAcc = spark.sparkContext.longAccumulator("ann.expanded")
-    val metrics = SearchMetrics(visitedAcc, scannedAcc, expanded = expandedAcc)
-
-    val p = params
-    val withAccept = segmented(acceptCol match {
-      case Some(a) => base.select(col(baseId).cast("long"), col(baseVec).cast("array<float>"), col(a).cast("boolean"))
-      case None => base.select(col(baseId).cast("long"), col(baseVec).cast("array<float>"), lit(true))
-    }, p)
-
-    val perSegment = withAccept
-      .as[(Long, Array[Float], Boolean)]
-      .mapPartitions { it =>
-        val rows = it.toArray
-        if (rows.isEmpty) Iterator.empty
-        else {
-          val ids = rows.map(_._1)
-          val vecs = rows.map(_._2)
-          val accept = rows.map(_._3)
-          scannedAcc.add(rows.length)
-          // segments are deterministic (seeded build over a stable scan
-          // order), so the built graph is content-addressable: repeated
-          // transient searches over the same table reuse it instead of
-          // rebuilding (~1k vec/s). The accept filter is NOT part of the
-          // key — it applies per-query inside the beam.
-          val g = TransientGraphCache.getOrCompute(
-            TransientGraphCache.key(ids, vecs, p),
-            new Vamana(vecs, p.metric, p.maxDegree, p.beamWidth,
-              p.alpha, p.neighborOverflow, p.seed, p.maxDegreeByLevel).build(p.buildThreads))
-          val vc = new Vamana.VisitCounter
-          val out = qB.value.iterator.flatMap { case (qid, qv) =>
-            g.search(qv, topK, ef, i => accept(i), vc)
-              .iterator.map { case (local, s) => (qid, ids(local), s) }
-          }.toArray
-          visitedAcc.add(vc.n)
-          expandedAcc.add(vc.expanded)
-          out.iterator
-        }
-      }
-      .toDF("qid", "nid", "score")
-
-    val agg = TopK.udf(topK)
-    val merged = perSegment.groupBy("qid")
-      .agg(agg(col("nid"), col("score")).as("t"))
-      .select(col("qid"), posexplode(col("t")))
-      .select(col("qid"), (col("pos") + 1).cast("int").as("rank"),
-        col("col._1").as("nid"), col("col._2").as("score"))
-    (merged, metrics)
+    val sc = base.sparkSession.sparkContext
+    val metrics = SearchMetrics(sc.longAccumulator("ann.visited"),
+      sc.longAccumulator("ann.segment.rows"), expanded = sc.longAccumulator("ann.expanded"))
+    val perSegment = serveTransient(base, queries, params, baseId, baseVec, acceptCol,
+        Some(metrics)) { (g, qv, accept, vc) =>
+      g.search(qv, topK, ef, accept, vc).iterator
+    }
+    (mergeTopK(perSegment, topK), metrics)
   }
 
   def search(
@@ -1185,13 +1151,74 @@ object Ann {
         * (pq_fused_qps < pq_gathered_qps). Bench reports both QPS keys at
         * EVERY shed level so the trade stays re-measured every round. */
       fusedAdc: Boolean = false): DataFrame = {
-    import spark.implicits._
-    val qArr: Array[(Long, Array[Float])] = queries
-      .select(col("qid").cast("long"), col("qvec").cast("array<float>"))
+    val p = params
+    val perSegment = servePersisted(spark, path, queries, p, deletes, probeSegments,
+        rerankK, metrics, accepts, wantK = topK) { qs =>
+      // per-task rerank floors, keyed by query index: segments searched
+      // sequentially within this task tighten each other's floors
+      val floors = scala.collection.mutable.Map.empty[Int, Double]
+      seg => seg.qIdx.iterator.flatMap { qi =>
+        val (qid, qv) = qs(qi)
+        val found = seg.approx(qi, qv) match {
+          case Some(approx) =>
+            val floor = if (shareRerankFloor)
+              floors.getOrElse(qi, Double.NegativeInfinity)
+            else Double.NegativeInfinity
+            // ADC frontier floor (Params.adcFrontierPerK): the compressed
+            // beam must over-visit relative to topK or PQ rank inversion
+            // drops true neighbors below the cutoff
+            val adcBeam = math.max(math.max(rerankK, ef), p.adcFrontierPerK * topK)
+            val (r, worstApprox) =
+              if (fusedAdc && seg.fusable) seg.searchFused(qi, qv, topK, adcBeam, floor)
+              else seg.graph.searchTwoPhaseWithFloor(qv, approx, topK, adcBeam,
+                seg.accept, seg.vc, rerankFloor = floor, rc = seg.rc)
+            if (shareRerankFloor &&
+                worstApprox > floors.getOrElse(qi, Double.NegativeInfinity))
+              floors(qi) = worstApprox
+            r
+          case None => seg.graph.search(qv, topK, ef, seg.accept, seg.vc)
+        }
+        found.iterator.map { case (local, s) => (qid, seg.ids(local), s) }
+      }
+    }
+    mergeTopK(perSegment, topK)
+  }
+
+  /** Bounded global top-k merge of per-segment (qid, nid, score) rows into
+    * (qid, rank, nid, score) — the final half of the partial/final shape. */
+  private def mergeTopK(perSegment: DataFrame, topK: Int): DataFrame = {
+    val agg = TopK.udf(topK)
+    perSegment.groupBy("qid")
+      .agg(agg(col("nid"), col("score")).as("t"))
+      .select(col("qid"), posexplode(col("t")))
+      .select(col("qid"), (col("pos") + 1).cast("int").as("rank"),
+        col("col._1").as("nid"), col("col._2").as("score"))
+  }
+
+  /** A search call's query batch, collected to the driver as (qid, qvec):
+    * serving batches are the small side (broadcast or task-inlined). */
+  private[graft] def collectQueries(queries: DataFrame): Array[(Long, Array[Float])] =
+    queries.select(col("qid").cast("long"), col("qvec").cast("array<float>"))
       .collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
+
+  /** The persisted serving scaffold behind [[searchIndex]],
+    * [[searchIndexPaged]] and [[thresholdSearchIndex]]: the whole serving
+    * plan (each step commented below) lives here once, and a route
+    * supplies only its per-query beam and its merge. `task` runs once per
+    * Spark task with the query batch and returns the body each routed
+    * segment runs as a [[SegView]]; it must not capture a DataFrame or the
+    * SparkSession. Returns per-segment (qid, nid, score); `metrics` gets
+    * the serving scan plan and the scanned/visited/expanded/reranked
+    * counts. */
+  private def servePersisted(spark: SparkSession, path: String, queries: DataFrame,
+      p: Params, deletes: Option[DataFrame], probeSegments: Int, rerankK: Int,
+      metrics: Option[SearchMetrics] = None, accepts: Option[DataFrame] = None,
+      wantK: Int = 10)(
+      task: Array[(Long, Array[Float])] => SegView => Iterator[(Long, Long, Double)]): DataFrame = {
+    import spark.implicits._
+    val qArr = collectQueries(queries)
     val qB = new QueryCarrier(spark, qArr)
-    val p = params
     val tok = buildToken(spark, path)
     val segToks = segTokens(spark, path, tok)
 
@@ -1224,7 +1251,7 @@ object Ann {
         live.groupBy("seg").count()
           .collect().map(r => (r.getString(0), r.getLong(1))).toMap
       }),
-      wantK = topK)
+      wantK = wantK)
     val withDel = withLiveCol(raw, deletes)
     val withLive = accepts match {
       case Some(a) =>
@@ -1235,10 +1262,10 @@ object Ann {
       case None => withDel
     }
 
-    // two-phase mode: load the PQ sidecar + precompute per-query ADC tables
+    // two-phase mode: the PQ sidecar models (per-query ADC tables build
+    // in-task); residual-ADC models on clustered trees — segments without
+    // the payload fall back to global ADC individually
     val adcB = loadAdcTables(spark, path, tok, rerankK)
-    // residual-ADC serving (clustered trees): per-query residual tables;
-    // segments without the payload fall back to global ADC individually
     val resAdcB = loadResAdc(spark, path, tok, rerankK)
 
     // with routing active, prune unprobed segments BEFORE the read/shuffle —
@@ -1250,27 +1277,28 @@ object Ann {
       case None => withLive
     }
 
-    // shared eleven-column projection (segmentSelect) + the route-specific
-    // query fan-out: tasks parallelize across SEGMENTS, so an index with
-    // fewer segments than cores would search its query batch serially in
-    // one task per segment. Replicate each segment's rows across
-    // cores/numSegments chunk-tasks, each searching a modulo-slice of the
-    // query set — the warm SegmentCache assembles the graph once per
-    // executor regardless, and at scale (segments >= cores) chunks = 1 and
-    // nothing is replicated. (jvector parallelizes queries across threads
-    // over one shared index — "one searcher per thread", DiskIntro.java —
-    // this is the same shape with tasks as threads.)
+    // shared eleven-column projection (segmentSelect) + the query fan-out:
+    // tasks parallelize across SEGMENTS, so an index with fewer segments
+    // than cores would search its query batch serially in one task per
+    // segment. Replicate each segment's rows across cores/numSegments
+    // chunk-tasks, each searching a modulo-slice of the query set — the
+    // warm SegmentCache assembles the graph once per executor regardless,
+    // and at scale (segments >= cores) chunks = 1 and nothing is
+    // replicated. (jvector parallelizes queries across threads over one
+    // shared index — "one searcher per thread", DiskIntro.java — this is
+    // the same shape with tasks as threads.)
     val chunks: Int = chunkFanout(spark, raw, path, tok, qArr.length, segQueriesB)
-    val sel9 = segmentSelect(pruned)
+    val sel = segmentSelect(pruned)
     // both branches emit an int __chunk (lit(0) is int; the exploded array
     // element is int), appended after segmentSelect's eleven columns
     val selected =
-      if (chunks <= 1) sel9.withColumn("__chunk", lit(0))
-      else sel9.withColumn("__chunk", explode(typedLit((0 until chunks).toArray)))
+      if (chunks <= 1) sel.withColumn("__chunk", lit(0))
+      else sel.withColumn("__chunk", explode(typedLit((0 until chunks).toArray)))
     // pinned + no chunk fan-out: the cached rows are already partitioned by
     // seg and everything since the pin is narrow (broadcast joins, filters,
     // projections), so the batch runs WITHOUT a shuffle — the whole point
-    // of pinning. Any other case must co-locate (seg, chunk) here.
+    // of pinning. Any other case must co-locate (seg, chunk) here: each
+    // task assembles whole segments, a correctness requirement.
     val selPlan = (if (pinnedOpt.isDefined && chunks <= 1) selected
                    else selected.repartition(col("seg"), col("__chunk")))
     // Warm-serving fast path over raw InternalRows (no Dataset decode):
@@ -1283,10 +1311,7 @@ object Ann {
     // 0.27s/batch — half the ROUTED batch — and at 4M x 64 it dominated
     // (~75%), pinning routed QPS at exhaustive parity (34.2 vs 33.1)
     // despite an 8x visited-work gap.
-    // Column order (segmentSelect + __chunk): 0 seg, 1 local_id,
-    // 2 node_id, 3 vec, 4 neighbors, 5 is_entry, 6 __live, 7 pq_code,
-    // 8 upper_nbrs, 9 res_code, 10 res_cell, 11 __chunk.
-    // the scan plan (with its seg-partition pruning) now lives BELOW an RDD
+    // The scan plan (with its seg-partition pruning) lives BELOW an RDD
     // boundary, invisible in the returned DataFrame's explain — expose it
     // per-call for the plan-shape gates (ann_routed asserts
     // PartitionFilters INSET on the metrics it passed)
@@ -1294,16 +1319,14 @@ object Ann {
     // no deletes + no accept-list => __live is constant true and the warm
     // scan skips per-row flag extraction entirely
     val liveConst = deletes.isEmpty && accepts.isEmpty
+    val mc = adcMetricCode(p.metric)
     val perSegment = selPlan.queryExecution.toRdd.mapPartitions { it =>
-      // per-task rerank floors, keyed by query index: segments searched
-      // sequentially within this task tighten each other's floors
-      val floors = scala.collection.mutable.Map.empty[Int, Double]
+      val body = task(qB.value)
       // task-local ADC table memo, shared across this task's segments and
       // models (global + any per-batch residual models)
       val tabs = new TaskAdcTables
       groupSegTask(it, path, tok, segToks, p, segQueriesB, qB.value.length, chunks,
-        liveConst = liveConst)
-        .flatMap { sg =>
+        liveConst).flatMap { sg =>
         // scanned = rows of segments searched by ANY query this batch;
         // counted by chunk 0 (always present) even when ITS slice is
         // empty, else another chunk's search would undercount and inflate
@@ -1312,83 +1335,123 @@ object Ann {
           metrics.foreach(_.scanned.add(sg.count))
         if (sg.qIdx.isEmpty) Iterator.empty
         else {
-          val (entry, live) = sg.resolve()
-          val qIdx = sg.qIdx
-          locally {
-            val g = entry.graph
-            val ids = entry.ids
-            val codes = entry.codes
-            val hasCodes = codes != null && codes.length > 0 && codes(0) != null
-            // residual serving state, once per (task, segment): cell LUTs
-            val resSeg = resSegState(entry, sg.segId, resAdcB)
-            // global two-phase model paired with THIS segment's dir (per-
-            // batch models: multi-batch trees two-phase correctly instead
-            // of never engaging under a root-only lookup)
-            val gMod = adcB.flatMap(_.forSeg(sg.segId))
-            val vc = new Vamana.VisitCounter // task-local: exact under shared cached graphs
-            val rc = new Vamana.VisitCounter // exact reranks performed
-            val out = qIdx.map { qi =>
-              val (qid, qv) = qB.value(qi)
-              val found = gMod match {
-                case Some(gm) if hasCodes =>
-                  val m = gm.m; val kk = gm.codebooks(0).length
-                  val (dots, mags, qn) = tabs(gm, qi, qv)
-                  val mc = adcMetricCode(p.metric)
-                  val floor = if (shareRerankFloor)
-                    floors.getOrElse(qi, Double.NegativeInfinity)
-                  else Double.NegativeInfinity
-                  // ADC frontier floor (Params.adcFrontierPerK): the
-                  // compressed beam must over-visit relative to topK or PQ
-                  // rank inversion drops true neighbors below the cutoff
-                  val adcBeam = math.max(math.max(rerankK, ef), p.adcFrontierPerK * topK)
-                  val (r, worstApprox) =
-                    // residual payload takes precedence over an explicit
-                    // fused opt-in: the fused blocks hold GLOBAL codes,
-                    // which are ordering noise inside tight cells (the 1M
-                    // A/B: 0.16 vs 0.63 recall_abs, NOTES_r13 §1) — a Q7
-                    // throughput experiment must not silently cost 4x
-                    // recall on clustered trees
-                    if (fusedAdc && entry.fused != null && resSeg.isEmpty)
-                      // fused traversal (Q7): batch-score the unvisited
-                      // neighbors of the expanded node from its transposed
-                      // code block
-                      g.searchTwoPhaseFused(qv, entry.codesFlat, entry.fused, dots, mags, qn,
-                        m, kk, mc, topK, adcBeam, i => live(i), vc,
-                        rerankFloor = floor, rc = rc)
-                    else {
-                      // gathered path over a FLAT code array (node i's code
-                      // at [i*m, (i+1)*m), no per-node object hop): residual
-                      // ADC when this segment carries the payload, global
-                      // ADC otherwise
-                      val approx = pickApproxScorer(entry, resSeg, tabs,
-                        qi, qv, mc, m, kk, dots, mags, qn)
-                      g.searchTwoPhaseWithFloor(qv, approx, topK,
-                        adcBeam, i => live(i), vc, rerankFloor = floor, rc = rc)
-                    }
-                  if (shareRerankFloor &&
-                      worstApprox > floors.getOrElse(qi, Double.NegativeInfinity))
-                    floors(qi) = worstApprox
-                  r
-                case _ => g.search(qv, topK, ef, i => live(i), vc)
-              }
-              found.map { case (local, s) => (qid, ids(local), s) }
-            }
-            metrics.foreach(_.visited.add(vc.n))
-            metrics.foreach(m => if (m.expanded != null) m.expanded.add(vc.expanded))
-            metrics.foreach(m => if (m.reranked != null) m.reranked.add(rc.n))
-            out.iterator.flatten
+          val seg = new SegView(sg, adcB, resAdcB, mc, tabs)
+          val out = body(seg)
+          metrics.fold(out) { m =>
+            val rows = out.toArray
+            m.visited.add(seg.vc.n)
+            if (m.expanded != null) m.expanded.add(seg.vc.expanded)
+            if (m.reranked != null) m.reranked.add(seg.rc.n)
+            rows.iterator
           }
         }
       }
     }
-    val perSegmentDf = spark.createDataset(perSegment).toDF("qid", "nid", "score")
+    spark.createDataset(perSegment).toDF("qid", "nid", "score")
+  }
 
-    val agg = TopK.udf(topK)
-    perSegmentDf.groupBy("qid")
-      .agg(agg(col("nid"), col("score")).as("t"))
-      .select(col("qid"), posexplode(col("t")))
-      .select(col("qid"), (col("pos") + 1).cast("int").as("rank"),
-        col("col._1").as("nid"), col("col._2").as("score"))
+  /** One segment as every index search route serves it: the assembly and
+    * its liveness from [[SegTaskGroup.resolve]], plus the scorer choice —
+    * made once per (task, segment), the way jvector's `GraphSearcher`
+    * picks the approximate or exact score provider once per search
+    * (`GraphSearcher.java:221-243`). Only build it when `sg.qIdx` is
+    * non-empty. */
+  private final class SegView(val sg: SegTaskGroup,
+      adcB: Option[SidecarModels], resAdcB: Option[ResAdc], mc: Int,
+      tabs: TaskAdcTables) {
+    private val (entry, live) = sg.resolve()
+    val graph: Vamana = entry.graph
+    val ids: Array[Long] = entry.ids
+    val accept: Int => Boolean = i => live(i)
+    /** Task-local effort counters (exact under shared cached graphs):
+      * nodes visited/expanded, and exact reranks performed. */
+    val vc = new Vamana.VisitCounter
+    val rc = new Vamana.VisitCounter
+    def qIdx: Array[Int] = sg.qIdx
+    // the global two-phase model paired with THIS segment's dir (per-batch
+    // models: multi-batch trees two-phase correctly instead of never
+    // engaging under a root-only lookup); None when two-phase is off
+    private val gMod: Option[graft.operators.PQModel] =
+      if (entry.codes == null || entry.codes.length == 0 || entry.codes(0) == null) None
+      else adcB.flatMap(_.forSeg(sg.segId))
+    // residual serving state, once per (task, segment): cell LUTs
+    private lazy val resSeg = resSegState(entry, sg.segId, resAdcB)
+
+    /** The approximate scorer for query `qKey`, or None to traverse on
+      * exact scores: residual ADC when the segment carries the payload,
+      * global ADC otherwise. */
+    def approx(qKey: Long, qv: Array[Float]): Option[Int => Double] =
+      gMod.map(gm => pickApproxScorer(entry, resSeg, tabs, gm, qKey, qv, mc))
+
+    /** The fused traversal (Q7) applies: global codes with the transposed
+      * blocks built. The residual payload takes precedence over a fused
+      * opt-in: the fused blocks hold GLOBAL codes, which are ordering noise
+      * inside tight cells (the 1M A/B: 0.16 vs 0.63 recall_abs, NOTES_r13
+      * §1) — a Q7 throughput experiment must not silently cost 4x recall
+      * on clustered trees. */
+    def fusable: Boolean = gMod.isDefined && resSeg.isEmpty && entry.fused != null
+
+    /** Two-phase search over the fused transposed neighbor-code blocks:
+      * batch-score the unvisited neighbors of each expanded node. */
+    def searchFused(qKey: Long, qv: Array[Float], topK: Int, beam: Int,
+        floor: Double): (Array[(Int, Double)], Double) = {
+      val gm = gMod.get
+      val (dots, mags, qn) = tabs(gm, qKey, qv)
+      graph.searchTwoPhaseFused(qv, entry.codesFlat, entry.fused, dots, mags, qn,
+        gm.m, gm.codebooks(0).length, mc, topK, beam, accept, vc,
+        rerankFloor = floor, rc = rc)
+    }
+  }
+
+  /** The transient serving scaffold behind [[searchWithMetrics]],
+    * [[searchPaged]] and [[thresholdSearch]]: segment the base
+    * ([[segmented]]), build or reuse each partition's graph
+    * ([[TransientGraphCache]]) and run `perQuery` against it for every
+    * query. Returns per-segment (qid, nid, score); the caller merges.
+    * `perQuery` gets (graph, query, accept, visit counter) and returns
+    * (local id, score). `acceptCol` is fused into the beam's accept;
+    * `metrics` counts scanned rows and visited/expanded nodes. */
+  private def serveTransient(base: DataFrame, queries: DataFrame, p: Params,
+      baseId: String, baseVec: String, acceptCol: Option[String] = None,
+      metrics: Option[SearchMetrics] = None)(
+      perQuery: (Vamana, Array[Float], Int => Boolean, Vamana.VisitCounter) => Iterator[(Int, Double)])
+      : DataFrame = {
+    val spark = base.sparkSession
+    import spark.implicits._
+    val qB = new QueryCarrier(spark, collectQueries(queries))
+    val accept = acceptCol.map(a => col(a).cast("boolean")).getOrElse(lit(true))
+    segmented(base.select(col(baseId).cast("long"), col(baseVec).cast("array<float>"), accept), p)
+      .as[(Long, Array[Float], Boolean)]
+      .mapPartitions { it =>
+        val rows = it.toArray
+        if (rows.isEmpty) Iterator.empty
+        else {
+          val ids = rows.map(_._1)
+          val vecs = rows.map(_._2)
+          val acc = rows.map(_._3)
+          metrics.foreach(_.scanned.add(rows.length))
+          // segments are deterministic (seeded build over a stable scan
+          // order), so the built graph is content-addressable: repeated
+          // transient searches over the same table reuse it instead of
+          // rebuilding (~1k vec/s). The accept filter is NOT part of the
+          // key — it applies per-query inside the beam.
+          val g = TransientGraphCache.getOrCompute(
+            TransientGraphCache.key(ids, vecs, p),
+            new Vamana(vecs, p.metric, p.maxDegree, p.beamWidth,
+              p.alpha, p.neighborOverflow, p.seed, p.maxDegreeByLevel).build(p.buildThreads))
+          val vc = new Vamana.VisitCounter
+          val out = qB.value.iterator.flatMap { case (qid, qv) =>
+            perQuery(g, qv, i => acc(i), vc).map { case (l, s) => (qid, ids(l), s) }
+          }
+          metrics.fold(out) { m =>
+            val found = out.toArray
+            m.visited.add(vc.n)
+            m.expanded.add(vc.expanded)
+            found.iterator
+          }
+        }
+      }
+      .toDF("qid", "nid", "score")
   }
 
   /** Per-(path, token) memo of the two-phase model broadcasts: a hot
@@ -1573,16 +1636,14 @@ object Ann {
   }
 
   /** The per-query gathered approx scorer for one segment: residual ADC
-    * when the segment + tree carry the payload, else global ADC.
-    * `resTables` is the task-local residual table builder (memoized per
-    * query across the task's segments) — non-null whenever `resSeg` is
-    * defined. */
+    * when the segment + tree carry the payload, else global ADC under the
+    * segment's paired model `gm`. `tabs` memoizes each query's tables
+    * across the task's segments. */
   private def pickApproxScorer(
       entry: SegmentCache.Entry,
       resSeg: Option[(graft.operators.PQModel, Array[Int], Array[Double], Array[Double], Double)],
-      tabs: TaskAdcTables,
-      qKey: Long, qv: Array[Float], mc: Int,
-      m: Int, kk: Int, dots: Array[Double], mags: Array[Double], qn: Double): Int => Double =
+      tabs: TaskAdcTables, gm: graft.operators.PQModel,
+      qKey: Long, qv: Array[Float], mc: Int): Int => Double =
     resSeg match {
       case Some((model, rcf, cdots, rmags, cn)) =>
         val (rdots, _, rqn) = tabs(model, qKey, qv)
@@ -1591,7 +1652,9 @@ object Ann {
         while (j < qv.length) { qc += qv(j) * cell(j); j += 1 }
         resAdcScorer(rcf, model.m, model.codebooks(0).length, mc,
           rdots, cdots, rmags, rqn, cn, qc)
-      case None => adcScorer(entry.codesFlat, m, kk, mc, dots, mags, qn)
+      case None =>
+        val (dots, mags, qn) = tabs(gm, qKey, qv)
+        adcScorer(entry.codesFlat, gm.m, gm.codebooks(0).length, mc, dots, mags, qn)
     }
 
   /** Metric code for the ADC score combiner (0 = EUCLIDEAN, 1 = DOT,
@@ -1657,35 +1720,11 @@ object Ann {
       baseId: String = "id",
       baseVec: String = "vec"): DataFrame = {
     require(pages.nonEmpty && pages.forall(_ > 0), "pages must be positive")
-    val spark = base.sparkSession
-    import spark.implicits._
-    val qArr: Array[(Long, Array[Float])] = queries
-      .select(col("qid").cast("long"), col("qvec").cast("array<float>"))
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-    val qB = new QueryCarrier(spark, qArr)
-    val p = params
     val pagesB = pages.toArray
-    val perSegment = segmented(base.select(col(baseId).cast("long"), col(baseVec).cast("array<float>")), p)
-      .as[(Long, Array[Float])]
-      .mapPartitions { it =>
-        val rows = it.toArray
-        if (rows.isEmpty) Iterator.empty
-        else {
-          val ids = rows.map(_._1)
-          val vecs = rows.map(_._2)
-          val g = TransientGraphCache.getOrCompute(
-            TransientGraphCache.key(ids, vecs, p),
-            new Vamana(vecs, p.metric, p.maxDegree, p.beamWidth,
-              p.alpha, p.neighborOverflow, p.seed, p.maxDegreeByLevel).build(p.buildThreads))
-          qB.value.iterator.flatMap { case (qid, qv) =>
-            val (first, st) = g.searchResumable(qv, pagesB(0), ef)
-            val rest = pagesB.drop(1).iterator.flatMap(k => g.resume(st, k))
-            (first.iterator ++ rest).map { case (l, s) => (qid, ids(l), s) }
-          }
-        }
-      }
-      .toDF("qid", "nid", "score")
+    val perSegment = serveTransient(base, queries, params, baseId, baseVec) { (g, qv, _, _) =>
+      val (first, st) = g.searchResumable(qv, pagesB(0), ef)
+      first.iterator ++ pagesB.drop(1).iterator.flatMap(k => g.resume(st, k))
+    }
     mergePaged(perSegment, pages)
   }
 
@@ -1712,12 +1751,16 @@ object Ann {
       // the fan-out from those, not the whole index
       val nSegs = segQueriesB match {
         case Some(b) => math.max(1, b.value.size)
-        case None => SegCountCache.getOrCompute(s"$path|$tok",
-          math.max(1, raw.filter(col("local_id") === 0).select("seg").distinct().count().toInt))
+        case None => segmentCount(raw, path, tok)
       }
       math.min(16, math.max(1, math.min(cores / nSegs, byQueries)))
     }
   }
+
+  /** Segments in the tree (at least 1), memoized per (path, token). */
+  private def segmentCount(raw: DataFrame, path: String, tok: String): Int =
+    SegCountCache.getOrCompute(s"$path|$tok",
+      math.max(1, raw.filter(col("local_id") === 0).select("seg").distinct().count().toInt))
 
   /** Shared projection for persisted-segment assembly: every index search
     * route reads the same eleven columns so their assemblies (and warm
@@ -1746,18 +1789,19 @@ object Ann {
   }
 
   /** One cache key shape for ALL search routes over a persisted segment —
-    * the assemblies are identical ([[assembleSegment]]), so top-k, paged
-    * and threshold searches share each other's warm entries. */
+    * the assemblies are identical ([[assembleSegment]]), so the routes of
+    * the [[servePersisted]] scaffold (top-k, paged, threshold) and the
+    * persisted session share each other's warm entries. */
   private def segmentCacheKey(path: String, tok: String, segId: String, p: Params): String =
     s"$path|$tok|$segId|${p.metric}|${p.maxDegree}|${p.beamWidth}|${p.alpha}|${p.seed}"
 
-  /** Per-(segment, chunk) task group for the warm-serving fast path shared
-    * by the top-k / paged / threshold routes: the one-pass InternalRow scan
-    * ([[groupSegTask]]) touches only (seg, __chunk, local_id, __live) per
-    * row when the segment's assembled graph is cache-resident; rows are
-    * copied for decode + assembly ONLY on a miss. See searchIndex's inline
-    * note for the measurements (tuple decode was ~75% of a routed 4M x 64
-    * batch). */
+  /** Per-(segment, chunk) task group for the warm-serving fast path of the
+    * [[servePersisted]] scaffold (top-k, paged, threshold) and the
+    * persisted session: the one-pass InternalRow scan ([[groupSegTask]])
+    * touches only (seg, __chunk, local_id, __live) per row when the
+    * segment's assembled graph is cache-resident; rows are copied for
+    * decode + assembly ONLY on a miss. See the scaffold's inline note for
+    * the measurements (tuple decode was ~75% of a routed 4M x 64 batch). */
   private final class SegTaskGroup(
       val segId: String, val chunk: Int,
       path: String, tok: String, segToks: Map[String, String], p: Params,
@@ -1901,9 +1945,9 @@ object Ann {
     * and each segment's page survivors are reranked exactly before the
     * merge — jvector's resume runs on the SAME compressed
     * SearchScoreProvider as the initial search (`GraphSearcher.java:
-    * 298-303,509-547`). The assembly carries codes + persisted hierarchy
-    * and is IDENTICAL to [[searchIndex]]'s, so the two routes share warm
-    * [[SegmentCache]] entries. */
+    * 298-303,509-547`). Serving plan, assembly and scorer choice come from
+    * the [[servePersisted]] scaffold shared with [[searchIndex]], so the
+    * routes share warm [[SegmentCache]] entries. */
   def searchIndexPaged(
       spark: SparkSession,
       path: String,
@@ -1919,91 +1963,34 @@ object Ann {
         * rerank of each segment's page survivors. 0 = exact traversal. */
       rerankK: Int = 0): DataFrame = {
     require(pages.nonEmpty && pages.forall(_ > 0), "pages must be positive")
-    import spark.implicits._
-    val qArr: Array[(Long, Array[Float])] = queries
-      .select(col("qid").cast("long"), col("qvec").cast("array<float>"))
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-    val qB = new QueryCarrier(spark, qArr)
     val p = params
-    val tok = buildToken(spark, path)
-    val segToks = segTokens(spark, path, tok)
-    // warm-serving: a pinned index is already materialized in executor
-    // storage partitioned by segment — the batch then runs shuffle-free,
-    // exactly like the top-k route
-    val pinnedOpt = pinnedIndexes.get(pinKey(path))
-    val raw = pinnedOpt.getOrElse(readIndex(spark, path))
-    val segQueriesB = routeQueries(spark, raw, qArr, p, probeSegments, path, tok)
-    val withLive = withLiveCol(raw, deletes)
-    val adcB = loadAdcTables(spark, path, tok, rerankK)
-    val resAdcB = loadResAdc(spark, path, tok, rerankK)
-    val pruned = segQueriesB match {
-      case Some(b) if b.value.nonEmpty =>
-        withLive.filter(col("seg").isin(b.value.keys.toSeq: _*))
-      case Some(_) => withLive.filter(lit(false))
-      case None => withLive
-    }
     val pagesB = pages.toArray
-    // same query-chunk fan-out as the top-k route: queries parallelize
-    // across chunk-tasks when probed segments < cores
-    val chunks: Int = chunkFanout(spark, raw, path, tok, qArr.length, segQueriesB)
-    val selectedPg = {
-      val base9 = segmentSelect(pruned)
-      if (chunks <= 1) base9.withColumn("__chunk", lit(0))
-      else base9.withColumn("__chunk", explode(typedLit((0 until chunks).toArray)))
-    }
-    // segment completeness per task is a CORRECTNESS requirement (each task
-    // assembles whole graphs); the pin's seg partitioning already provides
-    // it and everything since is narrow, so skip the shuffle when pinned.
-    // Same warm fast path as the top-k route (groupSegTask): resident
-    // segments are served without decoding their rows.
-    val deletesEmpty = deletes.isEmpty // Boolean — the Option[DataFrame] must not enter the closure
-    val perSegmentRdd = (if (pinnedOpt.isDefined && chunks <= 1) selectedPg
-                         else selectedPg.repartition(col("seg"), col("__chunk")))
-      .queryExecution.toRdd.mapPartitions { it =>
-        val tabs = new TaskAdcTables
-        groupSegTask(it, path, tok, segToks, p, segQueriesB, qB.value.length, chunks,
-          liveConst = deletesEmpty)
-          .flatMap { sg =>
-          if (sg.qIdx.isEmpty) Iterator.empty
-          else {
-            val (entry, live) = sg.resolve()
-            val g = entry.graph
-            val ids = entry.ids
-            val hasCodes = entry.codes != null && entry.codes.length > 0 && entry.codes(0) != null
-            val resSeg = resSegState(entry, sg.segId, resAdcB)
-            val gMod = adcB.flatMap(_.forSeg(sg.segId))
-            sg.qIdx.iterator.flatMap { qi =>
-              val (qid, qv) = qB.value(qi)
-              gMod match {
-                case Some(gm) if hasCodes =>
-                  val m = gm.m; val kk = gm.codebooks(0).length
-                  // Compressed route: [[mergePaged]] re-slices global pages
-                  // from the exact-ordered union of per-segment candidates,
-                  // so per-segment page boundaries don't matter — only the
-                  // candidate pool's quality. One widened ADC cursor per
-                  // (query, segment) with the same frontier floor as the
-                  // top-k route, then one exact rerank of the pool
-                  // (jvector resume reranks each phase on the same
-                  // compressed SSP, `GraphSearcher.java:509-547`).
-                  val totalK = pagesB.sum
-                  val width = math.max(math.max(rerankK, ef), p.adcFrontierPerK * totalK)
-                  val (dots, mags, qn) = tabs(gm, qi, qv)
-                  val approx = pickApproxScorer(entry, resSeg, tabs,
-                    qi, qv, adcMetricCode(p.metric), m, kk, dots, mags, qn)
-                  val (cands, _) = g.searchResumableScored(approx, width, width, i => live(i))
-                  val exact = g.exactScorer(qv)
-                  cands.iterator.map { case (l, _) => (qid, ids(l), exact(l)) }
-                case _ =>
-                  val (first, st) = g.searchResumable(qv, pagesB(0), ef, i => live(i))
-                  val rest = pagesB.drop(1).iterator.flatMap(k => g.resume(st, k))
-                  (first.iterator ++ rest).map { case (l, s) => (qid, ids(l), s) }
-              }
-            }
-          }
+    val perSegment = servePersisted(spark, path, queries, p, deletes, probeSegments,
+        rerankK) { qs =>
+      seg => seg.qIdx.iterator.flatMap { qi =>
+        val (qid, qv) = qs(qi)
+        val g = seg.graph
+        seg.approx(qi, qv) match {
+          case Some(approx) =>
+            // Compressed route: [[mergePaged]] re-slices global pages from
+            // the exact-ordered union of per-segment candidates, so
+            // per-segment page boundaries don't matter — only the candidate
+            // pool's quality. One widened ADC cursor per (query, segment)
+            // with the same frontier floor as the top-k route, then one
+            // exact rerank of the pool (jvector resume reranks each phase
+            // on the same compressed SSP, `GraphSearcher.java:509-547`).
+            val width = math.max(math.max(rerankK, ef), p.adcFrontierPerK * pagesB.sum)
+            val (cands, _) = g.searchResumableScored(approx, width, width, seg.accept)
+            val exact = g.exactScorer(qv)
+            cands.iterator.map { case (l, _) => (qid, seg.ids(l), exact(l)) }
+          case None =>
+            val (first, st) = g.searchResumable(qv, pagesB(0), ef, seg.accept)
+            val rest = pagesB.drop(1).iterator.flatMap(k => g.resume(st, k))
+            (first.iterator ++ rest).map { case (l, s) => (qid, seg.ids(l), s) }
         }
       }
-    mergePaged(spark.createDataset(perSegmentRdd).toDF("qid", "nid", "score"), pages)
+    }
+    mergePaged(perSegment, pages)
   }
 
   /** Cross-invocation pagination session (T6 beyond the reference's
@@ -2101,17 +2088,16 @@ object Ann {
     val fs = new org.apache.hadoop.fs.Path(statePath)
       .getFileSystem(spark.sessionState.newHadoopConf())
 
-    val qArrOpt: Option[Array[(Long, Array[Float])]] = queriesOpt.map(q => q
-      .select(col("qid").cast("long"), col("qvec").cast("array<float>"))
-      .collect().map(r => (r.getLong(0), r.getSeq[Float](1).toArray)))
+    val qArrOpt: Option[Array[(Long, Array[Float])]] = queriesOpt.map(collectQueries)
     val qB = qArrOpt.map(spark.sparkContext.broadcast(_))
 
-    val raw = pinnedIndexes.get(pinKey(path)).getOrElse(readIndex(spark, path))
+    val pinnedOpt = pinnedIndexes.get(pinKey(path))
+    val raw = pinnedOpt.getOrElse(readIndex(spark, path))
     // The session gains the batch routes' clustered-serving default (r13,
     // the durable-state bound): on a routable tree, ONLY the per-query
-    // probed segments get cursors — the same routeQueries call as
-    // searchIndexPaged, so session pages stay page-for-page identical to
-    // the batch route. State then scales O(sqrt(S)) per query instead of
+    // probed segments get cursors — the same routeQueries call as the
+    // batch routes' scaffold ([[servePersisted]]), so session pages stay
+    // page-for-page identical to the batch route. State then scales O(sqrt(S)) per query instead of
     // O(S): at 4M x 64 the exhaustive session exported 64 cursor blobs per
     // query where the batch route probed 8. Routing happens ONLY on
     // create — later pages resume exactly the cursors that exist.
@@ -2128,7 +2114,6 @@ object Ann {
     // groupSegTask also shares the batch routes' SegmentCache assemblies
     // (codes + hierarchy included) instead of a shadow "session|" entry.
     val parts = spark.sessionState.conf.numShufflePartitions
-    val pinnedOpt = pinnedIndexes.get(pinKey(path))
     // create page: prune unprobed segments BEFORE the scan (directory-level
     // on unpinned trees), exactly like the batch routes. Next pages must
     // NOT prune — the cursor set dictates which segments resume.
@@ -2149,6 +2134,7 @@ object Ann {
     val idxRdd = sel.queryExecution.toRdd
     val liveConst = deletes.isEmpty
     val nQ = qB.map(_.value.length).getOrElse(1)
+    val mc = adcMetricCode(p.metric)
 
     // BIG-session decision, made BEFORE the page materializes: it shapes
     // the cursors READ (smaller columnar batches), the cursors WRITE (no
@@ -2162,9 +2148,7 @@ object Ann {
       if (queriesOpt.isDefined) {
         val cursorRows: Long = segQueriesB match {
           case Some(b) => b.value.valuesIterator.map(_.length.toLong).sum
-          case None => nQ.toLong * SegCountCache.getOrCompute(s"$path|$tok",
-            math.max(1, raw.filter(col("local_id") === 0)
-              .select("seg").distinct().count().toInt))
+          case None => nQ.toLong * segmentCount(raw, path, tok)
         }
         val big = cursorRows * math.max(k, pageCands) > BigSessionRows
         if (big) fs.create(bigMarker, true).close() else fs.delete(bigMarker, false)
@@ -2195,30 +2179,22 @@ object Ann {
             .flatMap { sg =>
               if (sg.qIdx.isEmpty) Iterator.empty
               else {
-                val (entry, live) = sg.resolve()
-                val g = entry.graph
-                val ids = entry.ids
-                val hasCodes = entry.codes != null && entry.codes.length > 0 && entry.codes(0) != null
-                val resSeg = resSegState(entry, sg.segId, resAdcB)
-                val gMod = adcB.flatMap(_.forSeg(sg.segId))
+                val seg = new SegView(sg, adcB, resAdcB, mc, tabs)
+                val g = seg.graph
                 sg.qIdx.iterator.flatMap { qi =>
                   val (qid, qv) = qB.get.value(qi)
-                  gMod match {
-                    case Some(gm) if twoPhase && hasCodes =>
+                  seg.approx(qi, qv) match {
+                    case Some(approx) =>
                       // compressed cursor: approx traversal, exact rerank
                       // of this page's candidates before the pool merge
-                      val m = gm.m; val kk = gm.codebooks(0).length
-                      val (dots, mags, qn) = tabs(gm, qi, qv)
-                      val approx = pickApproxScorer(entry, resSeg, tabs,
-                        qi, qv, adcMetricCode(p.metric), m, kk, dots, mags, qn)
                       val (cands, st) = g.searchResumableScored(approx, pageCands,
-                        math.max(ef, pageCands), i => live(i))
+                        math.max(ef, pageCands), seg.accept)
                       val exact = g.exactScorer(qv)
-                      emit(sg.segId, qid, qv, g, ids, st,
+                      emit(sg.segId, qid, qv, g, seg.ids, st,
                         cands.map { case (l, _) => (l, exact(l)) })
-                    case _ =>
-                      val (first, st) = g.searchResumable(qv, k, ef, i => live(i))
-                      emit(sg.segId, qid, qv, g, ids, st, first)
+                    case None =>
+                      val (first, st) = g.searchResumable(qv, k, ef, seg.accept)
+                      emit(sg.segId, qid, qv, g, seg.ids, st, first)
                   }
                 }
               }
@@ -2328,31 +2304,23 @@ object Ann {
                   s"session cursor for segment $segId found no index rows — " +
                     s"index at $path changed under the open session")
               case Some(sg) =>
-                val (entry, live) = sg.resolve()
-                val g = entry.graph
-                val ids = entry.ids
-                val hasCodes = entry.codes != null && entry.codes.length > 0 && entry.codes(0) != null
-                val resSeg = resSegState(entry, segId, resAdcB)
-                val gMod = adcB.flatMap(_.forSeg(segId))
+                val seg = new SegView(sg, adcB, resAdcB, mc, tabs)
+                val g = seg.graph
                 curs.iterator.flatMap { c =>
-                  gMod match {
-                    case Some(gm) if twoPhase && hasCodes =>
+                  seg.approx(c._2, c._3) match {
+                    case Some(approx) =>
                       // resume on the SAME approx scorer the cursor was
                       // exported from (packed heap scores stay on one
                       // scale), exact-rerank the new candidates
-                      val m = gm.m; val kk = gm.codebooks(0).length
-                      val (dots, mags, qn) = tabs(gm, c._2, c._3)
-                      val approx = pickApproxScorer(entry, resSeg, tabs,
-                        c._2, c._3, adcMetricCode(p.metric), m, kk, dots, mags, qn)
-                      val st = g.importCursorScored(approx, i => live(i),
+                      val st = g.importCursorScored(approx, seg.accept,
                         c._4, c._5, c._6, c._7)
                       val exact = g.exactScorer(c._3)
-                      emit(segId, c._2, c._3, g, ids, st,
+                      emit(segId, c._2, c._3, g, seg.ids, st,
                         g.resume(st, pageCands, math.max(ef, pageCands))
                           .map { case (l, _) => (l, exact(l)) })
-                    case _ =>
-                      val st = g.importCursor(c._3, i => live(i), c._4, c._5, c._6, c._7)
-                      emit(segId, c._2, c._3, g, ids, st, g.resume(st, k, ef))
+                    case None =>
+                      val st = g.importCursor(c._3, seg.accept, c._4, c._5, c._6, c._7)
+                      emit(segId, c._2, c._3, g, seg.ids, st, g.resume(st, k, ef))
                   }
                 }
             }
@@ -2651,107 +2619,55 @@ object Ann {
         * SearchScoreProvider as top-k, `GraphSearcher.java:298-303`).
         * 0 = exact traversal. */
       rerankK: Int = 0): DataFrame = {
-    import spark.implicits._
-    val qArr: Array[(Long, Array[Float])] = queries
-      .select(col("qid").cast("long"), col("qvec").cast("array<float>"))
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-    val qB = new QueryCarrier(spark, qArr)
     val p = params
-    val tok = buildToken(spark, path)
-    val segToks = segTokens(spark, path, tok)
-    // warm-serving via pin, exactly like the paged/top-k routes
-    val pinnedOpt = pinnedIndexes.get(pinKey(path))
-    val raw = pinnedOpt.getOrElse(readIndex(spark, path))
-    val segQueriesB = routeQueries(spark, raw, qArr, p, probeSegments, path, tok)
-    val withLive = withLiveCol(raw, deletes)
-    val adcB = loadAdcTables(spark, path, tok, rerankK)
-    val resAdcB = loadResAdc(spark, path, tok, rerankK)
-    val pruned = segQueriesB match {
-      case Some(b) if b.value.nonEmpty =>
-        withLive.filter(col("seg").isin(b.value.keys.toSeq: _*))
-      case Some(_) => withLive.filter(lit(false))
-      case None => withLive
-    }
-    // same query-chunk fan-out as the top-k route
-    val chunks: Int = chunkFanout(spark, raw, path, tok, qArr.length, segQueriesB)
-    val selectedTh = {
-      val base9 = segmentSelect(pruned)
-      if (chunks <= 1) base9.withColumn("__chunk", lit(0))
-      else base9.withColumn("__chunk", explode(typedLit((0 until chunks).toArray)))
-    }
-    // same warm fast path as the top-k route (groupSegTask): resident
-    // segments are served without decoding their rows
-    val deletesEmpty = deletes.isEmpty // Boolean — the Option[DataFrame] must not enter the closure
-    val perSegmentRdd = (if (pinnedOpt.isDefined && chunks <= 1) selectedTh
-     else selectedTh.repartition(col("seg"), col("__chunk")))
-      .queryExecution.toRdd.mapPartitions { it =>
-        val tabs = new TaskAdcTables
-        groupSegTask(it, path, tok, segToks, p, segQueriesB, qB.value.length, chunks,
-          liveConst = deletesEmpty)
-          .flatMap { sg =>
-          if (sg.qIdx.isEmpty) Iterator.empty
-          else {
-            val (entry, live) = sg.resolve()
-            val g = entry.graph
-            val ids = entry.ids
-            val hasCodes = entry.codes != null && entry.codes.length > 0 && entry.codes(0) != null
-            val resSeg = resSegState(entry, sg.segId, resAdcB)
-            val gMod = adcB.flatMap(_.forSeg(sg.segId))
-            sg.qIdx.iterator.flatMap { qi =>
-              val (qid, qv) = qB.value(qi)
-              gMod match {
-                case Some(gm) if hasCodes =>
-                  val m = gm.m; val kk = gm.codebooks(0).length
-                  // Compressed traversal: collect + adaptive-stop on the
-                  // ADC scale, then exact rerank and threshold re-check.
-                  // Collection runs at a margin BELOW the threshold:
-                  // quantization score error would otherwise drop exact
-                  // hits sitting just above t whose approx score lands just
-                  // under it; the margin costs only the extra reranks in
-                  // [t - margin, t) while the exact re-check keeps the
-                  // precision contract intact. The margin itself is
-                  // calibrated from measured quantization error (see
-                  // Params.thresholdAdcMargin) — both scorers are already
-                  // in hand here, so the sample costs sN extra scores.
-                  val (dots, mags, qn) = tabs(gm, qi, qv)
-                  val approx = pickApproxScorer(entry, resSeg, tabs,
-                    qi, qv, adcMetricCode(p.metric), m, kk, dots, mags, qn)
-                  val exact = g.exactScorer(qv)
-                  val margin =
-                    if (!p.thresholdAdcMargin.isNaN) p.thresholdAdcMargin
-                    else {
-                      // sample MAX (not a quantile): the margin is a recall
-                      // bound, so it must cover the error tail, and 64
-                      // points estimate a max far better than a p95; the
-                      // 0.01 floor keeps slack when the sample happens to
-                      // see only overestimates (devs <= 0), the 0.25 cap
-                      // bounds rerank cost on a badly-fit model
-                      val nSeg = ids.length
-                      val sN = math.min(64, nSeg)
-                      var maxDev = 0.0
-                      var j = 0
-                      while (j < sN) {
-                        val i = (j.toLong * nSeg / sN).toInt
-                        val d = exact(i) - approx(i)
-                        if (d > maxDev) maxDev = d
-                        j += 1
-                      }
-                      math.max(0.01, math.min(0.25, maxDev))
-                    }
-                  g.thresholdSearchScored(approx, threshold - margin, ef, i => live(i)).iterator
-                    .map { case (l, _) => (l, exact(l)) }
-                    .filter(_._2 >= threshold)
-                    .map { case (l, s) => (qid, ids(l), s) }
-                case _ =>
-                  g.thresholdSearch(qv, threshold, ef, i => live(i)).iterator
-                    .map { case (l, s) => (qid, ids(l), s) }
+    servePersisted(spark, path, queries, p, deletes, probeSegments, rerankK) { qs =>
+      seg => seg.qIdx.iterator.flatMap { qi =>
+        val (qid, qv) = qs(qi)
+        val g = seg.graph
+        seg.approx(qi, qv) match {
+          case Some(approx) =>
+            // Compressed traversal: collect + adaptive-stop on the ADC
+            // scale, then exact rerank and threshold re-check. Collection
+            // runs at a margin BELOW the threshold: quantization score
+            // error would otherwise drop exact hits sitting just above t
+            // whose approx score lands just under it; the margin costs only
+            // the extra reranks in [t - margin, t) while the exact re-check
+            // keeps the precision contract intact. The margin itself is
+            // calibrated from measured quantization error (see
+            // Params.thresholdAdcMargin) — both scorers are already in hand
+            // here, so the sample costs sN extra scores.
+            val exact = g.exactScorer(qv)
+            val margin =
+              if (!p.thresholdAdcMargin.isNaN) p.thresholdAdcMargin
+              else {
+                // sample MAX (not a quantile): the margin is a recall
+                // bound, so it must cover the error tail, and 64 points
+                // estimate a max far better than a p95; the 0.01 floor
+                // keeps slack when the sample happens to see only
+                // overestimates (devs <= 0), the 0.25 cap bounds rerank
+                // cost on a badly-fit model
+                val nSeg = seg.ids.length
+                val sN = math.min(64, nSeg)
+                var maxDev = 0.0
+                var j = 0
+                while (j < sN) {
+                  val i = (j.toLong * nSeg / sN).toInt
+                  val d = exact(i) - approx(i)
+                  if (d > maxDev) maxDev = d
+                  j += 1
+                }
+                math.max(0.01, math.min(0.25, maxDev))
               }
-            }
-          }
+            g.thresholdSearchScored(approx, threshold - margin, ef, seg.accept).iterator
+              .map { case (l, _) => (l, exact(l)) }
+              .filter(_._2 >= threshold)
+              .map { case (l, s) => (qid, seg.ids(l), s) }
+          case None =>
+            g.thresholdSearch(qv, threshold, ef, seg.accept).iterator
+              .map { case (l, s) => (qid, seg.ids(l), s) }
         }
       }
-    spark.createDataset(perSegmentRdd).toDF("qid", "nid", "score")
+    }
   }
 
   /** Segment routing (IVF over segments) shared by the search entry points:
@@ -3217,35 +3133,10 @@ object Ann {
       ef: Int,
       params: Params = Params(),
       baseId: String = "id",
-      baseVec: String = "vec"): DataFrame = {
-    val spark = base.sparkSession
-    import spark.implicits._
-    val qArr: Array[(Long, Array[Float])] = queries
-      .select(col("qid").cast("long"), col("qvec").cast("array<float>"))
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-    val qB = new QueryCarrier(spark, qArr)
-    val p = params
-    segmented(base.select(col(baseId).cast("long"), col(baseVec).cast("array<float>")), p)
-      .as[(Long, Array[Float])]
-      .mapPartitions { it =>
-        val rows = it.toArray
-        if (rows.isEmpty) Iterator.empty
-        else {
-          val ids = rows.map(_._1)
-          val vecs = rows.map(_._2)
-          val g = TransientGraphCache.getOrCompute(
-            TransientGraphCache.key(ids, vecs, p),
-            new Vamana(vecs, p.metric, p.maxDegree,
-              p.beamWidth, p.alpha, p.neighborOverflow, p.seed, p.maxDegreeByLevel).build(p.buildThreads))
-          qB.value.iterator.flatMap { case (qid, qv) =>
-            g.thresholdSearch(qv, threshold, ef).iterator
-              .map { case (l, s) => (qid, ids(l), s) }
-          }
-        }
-      }
-      .toDF("qid", "nid", "score")
-  }
+      baseVec: String = "vec"): DataFrame =
+    serveTransient(base, queries, params, baseId, baseVec) { (g, qv, _, _) =>
+      g.thresholdSearch(qv, threshold, ef).iterator
+    }
 
   /** Plan-level search: returns a DataFrame whose plan IS a custom
     * [[graft.plans.KnnIndexScan]] logical node, planned by
@@ -3265,12 +3156,8 @@ object Ann {
     val strategies = spark.experimental.extraStrategies
     if (!strategies.contains(graft.plans.KnnIndexStrategy))
       spark.experimental.extraStrategies = strategies :+ graft.plans.KnnIndexStrategy
-    val qArr = queries
-      .select(col("qid").cast("long"), col("qvec").cast("array<float>"))
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
     org.apache.spark.sql.GraftColumnBridge.ofRows(spark,
-      graft.plans.KnnIndexScan(path, qArr, topK, ef, params,
+      graft.plans.KnnIndexScan(path, collectQueries(queries), topK, ef, params,
         deletes = deletes, probeSegments = probeSegments, rerankK = rerankK))
   }
 

@@ -322,8 +322,24 @@ object AnnQueries {
       .toSeq.toDF("qid", "cl").withColumn("pp", lit(1L))
     val assigned = Ivf.assign(emb, "embedding", model)
       .select(col("vec_id").cast("long").as("nid"), col("cluster_id").as("cl"))
-    exactAll.join(assigned, "nid")
-      .join(broadcast(probePairs), Seq("qid", "cl"), "left")
+    flagProbed(exactAll, assigned, probePairs)
+  }
+
+  /** Attach the probed flag to every exact hit (qid, nid): left-join the
+    * hit's cluster assignment (nid, cl), then the query's probe list
+    * (qid, cl, pp). A hit with no assignment counts as UNPROBED — an inner
+    * join would drop it and quietly shrink the recall denominator. One
+    * counting job asserts the join keeps the exact row count (an id with
+    * two assignments would otherwise inflate it). */
+  private[queries] def flagProbed(exactAll: DataFrame, assigned: DataFrame,
+      probePairs: DataFrame): DataFrame = {
+    val joined = exactAll.withColumn("__row", monotonically_increasing_id())
+      .join(assigned, Seq("nid"), "left")
+    val c = joined.agg(count(lit(1)), countDistinct(col("__row"))).head()
+    require(c.getLong(0) == c.getLong(1),
+      s"cluster assignment join changed the exact hit count (${c.getLong(1)} -> " +
+        s"${c.getLong(0)}): an id has more than one assignment")
+    joined.join(broadcast(probePairs), Seq("qid", "cl"), "left")
       .select(col("qid"), col("nid"), coalesce(col("pp"), lit(0L)).as("probed"))
   }
 

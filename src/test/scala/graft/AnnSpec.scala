@@ -1231,6 +1231,32 @@ class AnnSpec extends SparkSpec {
     assert(warmThr === coldThr, "pinned threshold route diverged from cold scan")
   }
 
+  test("one warm assembly serves every persisted route, exact and two-phase") {
+    // segmentCacheKey promises the routes share assemblies: once searchIndex
+    // has warmed the tree, no other route may add an entry of its own
+    val tmp = java.nio.file.Files.createTempDirectory("annwarmshare").toString
+    val params = Ann.Params(metric = "COSINE", maxDegree = 16, beamWidth = 64, pqM = 4, pqK = 32)
+    val vecs = randVectors(3000, 16, seed = 97)
+    val idx = s"$tmp/idx"
+    Ann.buildIndex(vecs.toDF("id", "vec").repartition(2), idx, params)
+    val queries = Seq((0L, vecs(9)._2), (1L, vecs(42)._2)).toDF("qid", "qvec")
+    Ann.clearSegmentCache()
+    try {
+      assert(Ann.searchIndex(spark, idx, queries, 10, 64, params).count() === 20L)
+      val warm = Ann.SegmentCache.currentBytes
+      assert(warm > 0L, "searchIndex must warm the segment cache")
+      for (rk <- Seq(0, 40)) {
+        Ann.searchIndex(spark, idx, queries, 10, 64, params, rerankK = rk).count()
+        Ann.searchIndexPaged(spark, idx, queries, Seq(5, 5), 64, params, rerankK = rk).count()
+        Ann.thresholdSearchIndex(spark, idx, queries, 0.9, 64, params, rerankK = rk).count()
+        Ann.openPagedSession(spark, idx, s"$tmp/sess$rk", queries, 5, 64, params,
+          rerankK = rk).count()
+        assert(Ann.SegmentCache.currentBytes === warm,
+          s"a route assembled its own segment copy (rerankK = $rk)")
+      }
+    } finally Ann.clearSegmentCache()
+  }
+
   test("mixed tree (full-res batch + NVQ batch) reads one uniform schema and searches both") {
     val tmp = java.nio.file.Files.createTempDirectory("annmixed").toString
     val params = Ann.Params(metric = "COSINE", maxDegree = 16, beamWidth = 64)

@@ -27,19 +27,16 @@ class CensusSpec extends AnyFunSuite {
     "graft.tools.Bm25Micro", "graft.tools.BuildPhaseMicro",
     "graft.tools.BuildPhaseProbe", "graft.tools.CcScaleBench",
     "graft.tools.ClusterBuildDecomp", "graft.tools.ClusteredLifecycleProbe",
-    "graft.tools.CompactMicro", "graft.tools.CorpusScaleBench",
-    "graft.tools.EffortProbe", "graft.tools.FlatXentProfile",
-    "graft.tools.GateSmoke", "graft.tools.HierBench",
-    "graft.tools.HierScaleBench", "graft.tools.IvfPqMicro",
-    "graft.tools.IvfProbe", "graft.tools.KernelAB",
-    "graft.tools.MsegBuildProbe", "graft.tools.MsegProbeSweep",
-    "graft.tools.MsegProfile", "graft.tools.PagedMicro",
-    "graft.tools.PinnedTailProbe", "graft.tools.PipelineDemo",
-    "graft.tools.PqBuildMicro", "graft.tools.RecallProbe",
-    "graft.tools.RouteMicro", "graft.tools.RoutedFilteredProbe",
-    "graft.tools.ScaleVecsBench", "graft.tools.SessScaleMicro",
-    "graft.tools.SimdMicro", "graft.tools.SpanScaleBench",
-    "graft.tools.TopKMicro", "graft.tools.TrainScaleMicro")
+    "graft.tools.CorpusScaleBench", "graft.tools.FlatXentProfile",
+    "graft.tools.GateSmoke", "graft.tools.HierScaleBench",
+    "graft.tools.IvfPqMicro", "graft.tools.MsegBuildProbe",
+    "graft.tools.MsegProbeSweep", "graft.tools.MsegProfile",
+    "graft.tools.PagedMicro", "graft.tools.PinnedTailProbe",
+    "graft.tools.PipelineDemo", "graft.tools.PqBuildMicro",
+    "graft.tools.RecallProbe", "graft.tools.RouteMicro",
+    "graft.tools.RoutedFilteredProbe", "graft.tools.ScaleVecsBench",
+    "graft.tools.SessScaleMicro", "graft.tools.SimdMicro",
+    "graft.tools.SpanScaleBench", "graft.tools.TrainScaleMicro")
 
   private lazy val sources: Seq[String] = {
     val root = Paths.get("src/main/scala")

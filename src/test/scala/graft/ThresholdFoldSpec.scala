@@ -54,6 +54,21 @@ class ThresholdFoldSpec extends SparkSpec {
     }
   }
 
+  test("flagProbed: an exact hit missing from the assignment counts, unprobed") {
+    val e = exact((1L, 10L), (1L, 11L), (2L, 12L))
+    // node 12 has no cluster assignment
+    val assigned = Seq((10L, 0), (11L, 1)).toDF("nid", "cl")
+    val probes = Seq((1L, 0, 1L), (2L, 1, 1L)).toDF("qid", "cl", "pp")
+    val f = AnnQueries.flagProbed(e, assigned, probes)
+    assert(f.as[(Long, Long, Long)].collect().sorted.toSeq ==
+      Seq((1L, 10L, 1L), (1L, 11L, 0L), (2L, 12L, 0L)))
+    val st = AnnQueries.probedThresholdStats(res((2L, 12L, 0.9)), f)
+    assert(st.exactRows == 3L && st.exactHitRows == 1L && st.probedDistinct == 1L)
+    // an id assigned twice would inflate the denominator: refused
+    val dup = Seq((10L, 0), (10L, 1), (11L, 1)).toDF("nid", "cl")
+    intercept[IllegalArgumentException](AnnQueries.flagProbed(e, dup, probes))
+  }
+
   test("thresholdStats folds match the r14 collected-set semantics") {
     // hand-computed reference: below = raw rows under t; recall num/denom =
     // raw exact rows hit / raw exact rows
