@@ -29,10 +29,11 @@ import org.apache.spark.util.LongAccumulator
   * place and keeps only its per-query beam call and its merge:
   *
   *   - persisted routes ([[searchIndex]], [[searchIndexPaged]],
-  *     [[thresholdSearchIndex]]) run on `servePersisted`: query collect,
-  *     pinned or read rows, routing, liveness, sidecar models, pruning,
-  *     chunk fan-out, co-location, the warm fast path and the effort
-  *     counters;
+  *     [[thresholdSearchIndex]]) run on `servePersisted`: pinned or read
+  *     rows, routing, liveness, sidecar models, pruning, chunk fan-out,
+  *     co-location, the warm fast path and the effort counters; what it
+  *     resolves from the tree is memoized per (path, build token) in one
+  *     `TreeGen` record;
   *   - every persisted route, the session pages included, sees a segment
   *     through one `SegView`: the assembly, its liveness, and the choice
   *     of residual, global or no approximate scorer per query;
@@ -170,6 +171,10 @@ object Ann {
     }
   }
 
+  /** Largest query batch that rides the task closure ([[QueryCarrier]])
+    * and whose per-segment rows [[searchIndex]] merges on the driver. */
+  private[graft] val InlineQueryCap: Int = 64
+
   /** Task-visible query batch: small batches ride the task closure
     * directly — a per-call broadcast costs block-manager writes plus
     * ContextCleaner churn, which is measurable per-query latency on the
@@ -178,34 +183,78 @@ object Ann {
   private final class QueryCarrier(spark: SparkSession, qArr: Array[(Long, Array[Float])])
       extends Serializable {
     private val inline: Array[(Long, Array[Float])] =
-      if (qArr.length <= 64) qArr else null
+      if (qArr.length <= InlineQueryCap) qArr else null
     private val bc: org.apache.spark.broadcast.Broadcast[Array[(Long, Array[Float])]] =
       if (inline == null) spark.sparkContext.broadcast(qArr) else null
     def value: Array[(Long, Array[Float])] = if (inline != null) inline else bc.value
   }
 
-  /** Driver-side segment-count memo per index path (one pushed-down scan of
-    * the centroid rows otherwise runs per search call). Streaming appends
-    * must invalidate via [[invalidateSegmentCounts]] or the chunk fan-out
-    * keeps sizing itself from a stale count. */
-  private object SegCountCache {
-    private val m = new scala.collection.concurrent.TrieMap[String, Int]()
-    def getOrCompute(k: String, f: => Int): Int = m.getOrElseUpdate(k, f)
-    def invalidatePrefix(p: String): Unit =
-      m.keys.filter(_.stripSuffix("/*").stripSuffix("/").startsWith(p)).foreach(m.remove)
-    def clear(): Unit = m.clear()
+  /** One persisted tree generation as the serving routes see it,
+    * resolved once per (path, build token) instead of once per search
+    * call: the unpinned read ([[readIndex]]: file listing and schema
+    * merge), the `_clustered` verdict, the per-segment tokens, the segment
+    * centroids and count, and the two-phase sidecar models. Every field is
+    * lazy, so a route pays only for what it uses, once per generation. The
+    * token is the invalidation: a rebuild, append, repair or compaction
+    * writes a new token (or a new path), and the stale record is never
+    * addressed again. Centroids and the count come from the pinned rows
+    * when the tree is pinned at first use. */
+  private final class TreeGen(val spark: SparkSession, path: String) {
+    lazy val raw: DataFrame = readIndex(spark, path)
+    /** The rows the routes serve: the pinned index if pinned, else [[raw]]. */
+    def served: DataFrame = pinnedIndexes.getOrElse(pinKey(path), raw)
+    lazy val clustered: Boolean = isClusteredTree(spark, path)
+    lazy val segToks: Map[String, String] = listSegTokens(spark, path)
+    /** Every segment's (seg, centroid), from its local_id=0 row; the
+      * centroid is null where the segment has none. */
+    lazy val centroids: Array[(String, Array[Float])] =
+      served.filter(col("local_id") === 0)
+        .select(col("seg"), col("seg_centroid"))
+        .collect()
+        .map(r => (r.getString(0),
+          if (r.isNullAt(1)) null else r.getSeq[Float](1).toArray))
+    /** Segments in the tree (at least 1). */
+    lazy val segmentCount: Int =
+      math.max(1, served.filter(col("local_id") === 0).select("seg").distinct().count().toInt)
+    /** sidecar name -> its per-batch model broadcasts ([[loadSidecarModels]]). */
+    val sidecars = new scala.collection.concurrent.TrieMap[String, SidecarModels]()
   }
 
-  /** Drop cached segment counts under `pathPrefix` (call after appending
-    * batch segments to an index tree). */
-  def invalidateSegmentCounts(pathPrefix: String): Unit =
-    SegCountCache.invalidatePrefix(pathPrefix.stripSuffix("/*").stripSuffix("/"))
+  private val TreeGens = new TokenKeyedMemo[TreeGen]
+
+  /** The [[TreeGen]] of `path` at build token `tok`. A tree without a token
+    * (written before tokens existed) has nothing that would invalidate a
+    * record, so it gets a fresh one per call; so does a caller on another
+    * session than the memoized record's. */
+  private def treeGen(spark: SparkSession, path: String, tok: String): TreeGen =
+    if (tok.isEmpty) new TreeGen(spark, path)
+    else {
+      val k = (pinKey(path), tok)
+      val g = TreeGens.getOrCompute(k, new TreeGen(spark, path))
+      if (g.spark eq spark) g
+      else { val fresh = new TreeGen(spark, path); TreeGens.put(k, fresh); fresh }
+    }
+
+  /** Generation records memoized now (one per live (path, token)). */
+  private[graft] def treeGenCount: Int = TreeGens.size
+
+  /** Drop the memoized generation records (segment counts, centroids,
+    * tokens, the unpinned read) of every tree at or under `pathPrefix`.
+    * Call after appending batch segments to a tree without a token, and
+    * when reclaiming a generation, whose record would otherwise stay for
+    * the life of the JVM. */
+  def invalidateSegmentCounts(pathPrefix: String): Unit = {
+    val p = pathPrefix.stripSuffix("/*").stripSuffix("/")
+    TreeGens.removePaths { k =>
+      val b = k.stripSuffix("/*").stripSuffix("/")
+      b == p || b.startsWith(p + "/")
+    }
+  }
 
   /** Drop all cached segment graphs (call after overwriting an index path). */
   def clearSegmentCache(): Unit =
-    { SegmentCache.clear(); TransientGraphCache.clear(); SegCountCache.clear()
-      CentroidCache.clear(); ClusteredMarkerCache.clear()
-      SidecarModelCache.clear(); SessMemoCache.clear() }
+    { SegmentCache.clear(); TransientGraphCache.clear(); TreeGens.clear()
+      SessMemoCache.clear() }
 
   /** Write a fresh content token (`_build_id`) at an index root. Mutators
     * call this after every write; search cache keys embed the token, so a
@@ -264,29 +313,30 @@ object Ann {
     * combined token would cold-start the WHOLE resident cache on every
     * streaming micro-batch append. Keyed per batch, an append leaves
     * every existing segment's key (and its resident graph) intact.
-    * Memoized per (path, combined token): one listing per mutation, and
-    * a single-root tree (no nested batches) resolves to an empty map —
-    * callers fall back to the combined token, which IS that root's token. */
-  private val SegTokenCache = new TokenKeyedMemo[Map[String, String]]
+    * Memoized per (path, combined token) in the tree's [[TreeGen]]: one
+    * listing per mutation, and a single-root tree (no nested batches)
+    * resolves to an empty map — callers fall back to the combined token,
+    * which IS that root's token. */
   private[graft] def segTokens(spark: SparkSession, path: String, combined: String): Map[String, String] =
-    SegTokenCache.getOrCompute((path, combined), {
-      try {
-        val base = path.stripSuffix("/*").stripSuffix("/")
-        val fs = new org.apache.hadoop.fs.Path(base)
-          .getFileSystem(spark.sessionState.newHadoopConf())
-        val nested =
-          try fs.globStatus(new org.apache.hadoop.fs.Path(s"$base/*/_build_id")).toSeq
-          catch { case _: Exception => Seq.empty }
-        nested.flatMap { st =>
-          val bdir = st.getPath.getParent
-          readTokenFile(fs, st.getPath).toSeq.flatMap { t =>
-            fs.listStatus(bdir).toSeq
-              .filter(_.getPath.getName.startsWith("seg="))
-              .map(d => d.getPath.getName.stripPrefix("seg=") -> t)
-          }
-        }.toMap
-      } catch { case _: Exception => Map.empty }
-    })
+    treeGen(spark, path, combined).segToks
+
+  private def listSegTokens(spark: SparkSession, path: String): Map[String, String] =
+    try {
+      val base = path.stripSuffix("/*").stripSuffix("/")
+      val fs = new org.apache.hadoop.fs.Path(base)
+        .getFileSystem(spark.sessionState.newHadoopConf())
+      val nested =
+        try fs.globStatus(new org.apache.hadoop.fs.Path(s"$base/*/_build_id")).toSeq
+        catch { case _: Exception => Seq.empty }
+      nested.flatMap { st =>
+        val bdir = st.getPath.getParent
+        readTokenFile(fs, st.getPath).toSeq.flatMap { t =>
+          fs.listStatus(bdir).toSeq
+            .filter(_.getPath.getName.startsWith("seg="))
+            .map(d => d.getPath.getName.stripPrefix("seg=") -> t)
+        }
+      }.toMap
+    } catch { case _: Exception => Map.empty }
 
   /** Read an index directory or a glob of batch sub-indexes. Index trees are
     * hive-partitioned (seg=..., optionally nested under batch=...), so a
@@ -302,7 +352,12 @@ object Ann {
     * footer, omit nvq_code, and silently null out compressed batches'
     * payloads. (New builds always write the nvq columns, so current trees
     * share one schema and the merge is a no-op; the option covers trees
-    * written before that.) */
+    * written before that.)
+    *
+    * The listing and the schema merge (a footer job) are paid per call, so
+    * the search routes do not call this per request: they take the read
+    * from the tree's [[TreeGen]] record, made once per (path, build
+    * token). */
   private[graft] def readIndex(spark: SparkSession, path: String): DataFrame = {
     val base = path.stripSuffix("/*").stripSuffix("/")
     val df = spark.read
@@ -1103,7 +1158,17 @@ object Ann {
 
   /** Search a persisted index: co-locate each segment's rows, rebuild the
     * adjacency in memory (no re-build of the graph — just array assembly),
-    * and run the same per-segment beam + global merge. */
+    * and run the same per-segment beam + global merge.
+    *
+    * A batch of at most [[InlineQueryCap]] queries runs its per-segment
+    * beam eagerly, collects those rows in one job and merges them on the
+    * driver with [[graft.operators.TopKAgg]]'s own reduce/finish; the
+    * result is a local relation, ordered by qid then rank. A larger batch
+    * returns the lazy distributed [[mergeTopK]] plan. Both give the same
+    * rows and schema. Unpinned, a small batch then runs 2 Spark jobs (the
+    * co-location exchange and the collect); pinned, 1. The tree's read,
+    * centroids and tokens come from its [[TreeGen]] record, resolved once
+    * per build token. */
   def searchIndex(
       spark: SparkSession,
       path: String,
@@ -1152,7 +1217,8 @@ object Ann {
         * EVERY shed level so the trade stays re-measured every round. */
       fusedAdc: Boolean = false): DataFrame = {
     val p = params
-    val perSegment = servePersisted(spark, path, queries, p, deletes, probeSegments,
+    val qArr = collectQueries(queries)
+    val perSegment = servePersisted(spark, path, qArr, p, deletes, probeSegments,
         rerankK, metrics, accepts, wantK = topK) { qs =>
       // per-task rerank floors, keyed by query index: segments searched
       // sequentially within this task tighten each other's floors
@@ -1181,7 +1247,8 @@ object Ann {
         found.iterator.map { case (local, s) => (qid, seg.ids(local), s) }
       }
     }
-    mergeTopK(perSegment, topK)
+    if (qArr.length <= InlineQueryCap) mergeTopKLocal(spark, perSegment.collect(), topK)
+    else mergeTopK(perSegmentFrame(spark, perSegment), topK)
   }
 
   /** Bounded global top-k merge of per-segment (qid, nid, score) rows into
@@ -1193,6 +1260,31 @@ object Ann {
       .select(col("qid"), posexplode(col("t")))
       .select(col("qid"), (col("pos") + 1).cast("int").as("rank"),
         col("col._1").as("nid"), col("col._2").as("score"))
+  }
+
+  /** [[mergeTopK]]'s columns and types. */
+  private val MergedSchema = org.apache.spark.sql.types.StructType.fromDDL(
+    "qid BIGINT NOT NULL, rank INT NOT NULL, nid BIGINT, score DOUBLE")
+
+  /** [[mergeTopK]] on the driver, for batches of at most [[InlineQueryCap]]
+    * queries (at most k x routed segments rows each): the same
+    * [[graft.operators.TopKAgg]] `reduce`/`finish`, so the same score-desc
+    * / id-asc order and id dedupe, with no groupBy job. Returns a local
+    * relation with mergeTopK's schema, ordered by qid then rank. */
+  private def mergeTopKLocal(spark: SparkSession, rows: Array[(Long, Long, Double)],
+      topK: Int): DataFrame = {
+    val agg = graft.operators.TopKAgg(topK)
+    val bufs = scala.collection.mutable.HashMap.empty[Long, graft.operators.TopKBuf]
+    rows.foreach { case (q, n, sc) =>
+      bufs(q) = agg.reduce(bufs.getOrElse(q, agg.zero), (n, sc))
+    }
+    val out = new java.util.ArrayList[org.apache.spark.sql.Row]()
+    bufs.keys.toArray.sorted.foreach { q =>
+      agg.finish(bufs(q)).iterator.zipWithIndex.foreach { case ((n, sc), i) =>
+        out.add(org.apache.spark.sql.Row(q, i + 1, n, sc))
+      }
+    }
+    spark.createDataFrame(out, MergedSchema)
   }
 
   /** A search call's query batch, collected to the driver as (qid, qvec):
@@ -1208,32 +1300,40 @@ object Ann {
     * supplies only its per-query beam and its merge. `task` runs once per
     * Spark task with the query batch and returns the body each routed
     * segment runs as a [[SegView]]; it must not capture a DataFrame or the
-    * SparkSession. Returns per-segment (qid, nid, score); `metrics` gets
-    * the serving scan plan and the scanned/visited/expanded/reranked
-    * counts. */
-  private def servePersisted(spark: SparkSession, path: String, queries: DataFrame,
+    * SparkSession. Returns the per-segment (qid, nid, score) rows as an
+    * RDD, so a small batch can collect them without a Dataset plan;
+    * `metrics` gets the serving scan plan and the
+    * scanned/visited/expanded/reranked counts. The query batch `qArr` is
+    * collected once, by the route. Everything resolved from the tree
+    * itself (the unpinned read, the `_clustered` verdict, centroids,
+    * segment tokens and count, sidecar models) comes from the tree's
+    * [[TreeGen]] record; only the build token is read per call. */
+  private def servePersisted(spark: SparkSession, path: String,
+      qArr: Array[(Long, Array[Float])],
       p: Params, deletes: Option[DataFrame], probeSegments: Int, rerankK: Int,
       metrics: Option[SearchMetrics] = None, accepts: Option[DataFrame] = None,
       wantK: Int = 10)(
-      task: Array[(Long, Array[Float])] => SegView => Iterator[(Long, Long, Double)]): DataFrame = {
-    import spark.implicits._
-    val qArr = collectQueries(queries)
+      task: Array[(Long, Array[Float])] => SegView => Iterator[(Long, Long, Double)])
+      : org.apache.spark.rdd.RDD[(Long, Long, Double)] = {
     val qB = new QueryCarrier(spark, qArr)
+    // the generation record: the token is read per call, everything
+    // resolved from the tree itself is read once per token
     val tok = buildToken(spark, path)
-    val segToks = segTokens(spark, path, tok)
+    val gen = treeGen(spark, path, tok)
+    val segToks = gen.segToks
 
     // Tombstones are merge-on-read (jvector liveNodes filter fused into the
     // beam loop, GraphSearcher.java:337): the graph stays intact, deleted
     // nodes just stop being acceptable results. compact() repairs for real.
     val pinnedOpt = pinnedIndexes.get(pinKey(path))
-    val raw = pinnedOpt.getOrElse(readIndex(spark, path))
+    val raw = pinnedOpt.getOrElse(gen.raw)
 
     // Segment routing (IVF over segments): with probeSegments > 0, each
     // query searches only its probeSegments nearest segment centroids —
     // at 100 TB this is what keeps per-query work sublinear in segment
     // count. Centroids are one tiny row per segment. With an accept-list,
     // AUTO widens probes by filter selectivity (see routeQueries).
-    val segQueriesB = routeQueries(spark, raw, qArr, p, probeSegments, path, tok,
+    val segQueriesB = routeQueries(spark, gen, qArr, p, probeSegments,
       acceptPerSeg = accepts.map(a => () => {
         val acc = raw.join(
             broadcast(a.select(col(a.columns.head).cast("long").as("__acc")).distinct()),
@@ -1287,7 +1387,7 @@ object Ann {
     // replicated. (jvector parallelizes queries across threads over one
     // shared index — "one searcher per thread", DiskIntro.java — this is
     // the same shape with tasks as threads.)
-    val chunks: Int = chunkFanout(spark, raw, path, tok, qArr.length, segQueriesB)
+    val chunks: Int = chunkFanout(spark, gen, qArr.length, segQueriesB)
     val sel = segmentSelect(pruned)
     // both branches emit an int __chunk (lit(0) is int; the exploded array
     // element is int), appended after segmentSelect's eleven columns
@@ -1320,7 +1420,7 @@ object Ann {
     // scan skips per-row flag extraction entirely
     val liveConst = deletes.isEmpty && accepts.isEmpty
     val mc = adcMetricCode(p.metric)
-    val perSegment = selPlan.queryExecution.toRdd.mapPartitions { it =>
+    selPlan.queryExecution.toRdd.mapPartitions { it =>
       val body = task(qB.value)
       // task-local ADC table memo, shared across this task's segments and
       // models (global + any per-batch residual models)
@@ -1347,7 +1447,13 @@ object Ann {
         }
       }
     }
-    spark.createDataset(perSegment).toDF("qid", "nid", "score")
+  }
+
+  /** [[servePersisted]]'s per-segment rows as a (qid, nid, score) frame. */
+  private def perSegmentFrame(spark: SparkSession,
+      rows: org.apache.spark.rdd.RDD[(Long, Long, Double)]): DataFrame = {
+    import spark.implicits._
+    spark.createDataset(rows).toDF("qid", "nid", "score")
   }
 
   /** One segment as every index search route serves it: the assembly and
@@ -1454,19 +1560,6 @@ object Ann {
       .toDF("qid", "nid", "score")
   }
 
-  /** Per-(path, token) memo of the two-phase model broadcasts: a hot
-    * serving loop calls searchIndex per batch, and a fresh broadcast per
-    * call is block-manager writes + ContextCleaner churn on the serving
-    * path. The token keys invalidation exactly like the segment caches —
-    * a rebuild/repair/compact changes it and the stale entry is simply
-    * never hit again (bounded: one tiny model broadcast per live tree). */
-  private object SidecarModelCache {
-    private val m = new scala.collection.concurrent.TrieMap[(String, String, String), Option[SidecarModels]]()
-    def getOrCompute(k: (String, String, String), f: => Option[SidecarModels]): Option[SidecarModels] =
-      m.getOrElseUpdate(k, f)
-    def clear(): Unit = m.clear()
-  }
-
   /** Per-batch PQ-model broadcasts for the two-phase routes: one model
     * per sidecar dir (tree root and/or each batch dir) plus the
     * segment → dir pairing — a batch's codes only ever score under the
@@ -1494,27 +1587,44 @@ object Ann {
       tok: String,
       rerankK: Int,
       sidecarName: String): Option[SidecarModels] =
-    if (rerankK > 0) SidecarModelCache.getOrCompute((pinKey(path), tok, sidecarName), {
-      try {
-        val base = path.stripSuffix("/*").stripSuffix("/")
-        val fs = new org.apache.hadoop.fs.Path(base)
-          .getFileSystem(spark.sessionState.newHadoopConf())
-        def segsUnder(dir: org.apache.hadoop.fs.Path): Seq[String] =
-          try fs.listStatus(dir).toSeq
-            .filter(_.getPath.getName.startsWith("seg="))
-            .map(_.getPath.getName.stripPrefix("seg="))
-          catch { case _: Exception => Seq.empty }
-        val rootSc = new org.apache.hadoop.fs.Path(s"$base/$sidecarName")
-        val entries: Seq[(String, org.apache.hadoop.fs.Path, Seq[String])] =
-          (if (fs.exists(rootSc))
-            Seq(("", rootSc, segsUnder(new org.apache.hadoop.fs.Path(base))))
-           else Nil) ++
-            Option(fs.globStatus(new org.apache.hadoop.fs.Path(s"$base/*/$sidecarName")))
-              .getOrElse(Array.empty).toSeq.map { st =>
-                val bdir = st.getPath.getParent
-                (bdir.getName, st.getPath, segsUnder(bdir))
-              }
-        if (entries.isEmpty) return None
+    // memoized in the tree's generation record: a hot serving loop calls
+    // searchIndex per batch, and a fresh broadcast per call is
+    // block-manager writes + ContextCleaner churn on the serving path. An
+    // absent sidecar is not memoized: a clustered build writes its
+    // residual sidecar after the tree's token.
+    if (rerankK <= 0) None
+    else {
+      val gen = treeGen(spark, path, tok)
+      gen.sidecars.get(sidecarName).orElse {
+        val found = readSidecarModels(spark, path, sidecarName)
+        found.foreach(gen.sidecars.putIfAbsent(sidecarName, _))
+        found
+      }
+    }
+
+  private def readSidecarModels(spark: SparkSession, path: String,
+      sidecarName: String): Option[SidecarModels] =
+    try {
+      val base = path.stripSuffix("/*").stripSuffix("/")
+      val fs = new org.apache.hadoop.fs.Path(base)
+        .getFileSystem(spark.sessionState.newHadoopConf())
+      def segsUnder(dir: org.apache.hadoop.fs.Path): Seq[String] =
+        try fs.listStatus(dir).toSeq
+          .filter(_.getPath.getName.startsWith("seg="))
+          .map(_.getPath.getName.stripPrefix("seg="))
+        catch { case _: Exception => Seq.empty }
+      val rootSc = new org.apache.hadoop.fs.Path(s"$base/$sidecarName")
+      val entries: Seq[(String, org.apache.hadoop.fs.Path, Seq[String])] =
+        (if (fs.exists(rootSc))
+          Seq(("", rootSc, segsUnder(new org.apache.hadoop.fs.Path(base))))
+         else Nil) ++
+          Option(fs.globStatus(new org.apache.hadoop.fs.Path(s"$base/*/$sidecarName")))
+            .getOrElse(Array.empty).toSeq.map { st =>
+              val bdir = st.getPath.getParent
+              (bdir.getName, st.getPath, segsUnder(bdir))
+            }
+      if (entries.isEmpty) None
+      else {
         val models: Map[String, graft.operators.PQModel] = entries.map {
           case (key, sc, _) => key -> graft.operators.PQ.load(spark, sc.toString)
         }.toMap
@@ -1523,10 +1633,10 @@ object Ann {
         }.toMap
         Some(SidecarModels(spark.sparkContext.broadcast(models),
           spark.sparkContext.broadcast(segDir)))
-      } catch {
-        case _: Exception => None // no sidecar -> fall back
       }
-    }) else None
+    } catch {
+      case _: Exception => None // no sidecar -> fall back
+    }
 
   /** Task-local per-query ADC table builder over a broadcast model:
     * (dots, mags, |q|²) computed at first use and memoized for the task —
@@ -1738,9 +1848,7 @@ object Ann {
     * tasks only pay off when each chunk still gets a substantial slice. */
   private def chunkFanout(
       spark: SparkSession,
-      raw: DataFrame,
-      path: String,
-      tok: String,
+      gen: TreeGen,
       nQueries: Int,
       segQueriesB: Option[org.apache.spark.broadcast.Broadcast[Map[String, Array[Int]]]]): Int = {
     val byQueries = nQueries / 64
@@ -1751,16 +1859,11 @@ object Ann {
       // the fan-out from those, not the whole index
       val nSegs = segQueriesB match {
         case Some(b) => math.max(1, b.value.size)
-        case None => segmentCount(raw, path, tok)
+        case None => gen.segmentCount
       }
       math.min(16, math.max(1, math.min(cores / nSegs, byQueries)))
     }
   }
-
-  /** Segments in the tree (at least 1), memoized per (path, token). */
-  private def segmentCount(raw: DataFrame, path: String, tok: String): Int =
-    SegCountCache.getOrCompute(s"$path|$tok",
-      math.max(1, raw.filter(col("local_id") === 0).select("seg").distinct().count().toInt))
 
   /** Shared projection for persisted-segment assembly: every index search
     * route reads the same eleven columns so their assemblies (and warm
@@ -1965,8 +2068,8 @@ object Ann {
     require(pages.nonEmpty && pages.forall(_ > 0), "pages must be positive")
     val p = params
     val pagesB = pages.toArray
-    val perSegment = servePersisted(spark, path, queries, p, deletes, probeSegments,
-        rerankK) { qs =>
+    val perSegment = servePersisted(spark, path, collectQueries(queries), p, deletes,
+        probeSegments, rerankK) { qs =>
       seg => seg.qIdx.iterator.flatMap { qi =>
         val (qid, qv) = qs(qi)
         val g = seg.graph
@@ -1990,7 +2093,7 @@ object Ann {
         }
       }
     }
-    mergePaged(perSegment, pages)
+    mergePaged(perSegmentFrame(spark, perSegment), pages)
   }
 
   /** Cross-invocation pagination session (T6 beyond the reference's
@@ -2078,7 +2181,8 @@ object Ann {
     import spark.implicits._
     val p = params
     val tok = buildToken(spark, path)
-    val segToks = segTokens(spark, path, tok)
+    val gen = treeGen(spark, path, tok)
+    val segToks = gen.segToks
     val twoPhase = rerankK > 0
     val adcB = loadAdcTables(spark, path, tok, rerankK)
     val resAdcB = loadResAdc(spark, path, tok, rerankK)
@@ -2092,7 +2196,7 @@ object Ann {
     val qB = qArrOpt.map(spark.sparkContext.broadcast(_))
 
     val pinnedOpt = pinnedIndexes.get(pinKey(path))
-    val raw = pinnedOpt.getOrElse(readIndex(spark, path))
+    val raw = pinnedOpt.getOrElse(gen.raw)
     // The session gains the batch routes' clustered-serving default (r13,
     // the durable-state bound): on a routable tree, ONLY the per-query
     // probed segments get cursors — the same routeQueries call as the
@@ -2102,7 +2206,7 @@ object Ann {
     // query where the batch route probed 8. Routing happens ONLY on
     // create — later pages resume exactly the cursors that exist.
     val segQueriesB = qArrOpt.flatMap(qa =>
-      routeQueries(spark, raw, qa, p, probeSegments, path, tok))
+      routeQueries(spark, gen, qa, p, probeSegments))
     // Index rows travel through the SAME shared projection + warm
     // fast path as the batch routes (groupSegTask): the session previously
     // union-tagged cursor rows INTO the index scan and paid a 15-column
@@ -2148,7 +2252,7 @@ object Ann {
       if (queriesOpt.isDefined) {
         val cursorRows: Long = segQueriesB match {
           case Some(b) => b.value.valuesIterator.map(_.length.toLong).sum
-          case None => nQ.toLong * segmentCount(raw, path, tok)
+          case None => nQ.toLong * gen.segmentCount
         }
         val big = cursorRows * math.max(k, pageCands) > BigSessionRows
         if (big) fs.create(bigMarker, true).close() else fs.delete(bigMarker, false)
@@ -2620,7 +2724,8 @@ object Ann {
         * 0 = exact traversal. */
       rerankK: Int = 0): DataFrame = {
     val p = params
-    servePersisted(spark, path, queries, p, deletes, probeSegments, rerankK) { qs =>
+    val perSegment = servePersisted(spark, path, collectQueries(queries), p, deletes,
+        probeSegments, rerankK) { qs =>
       seg => seg.qIdx.iterator.flatMap { qi =>
         val (qid, qv) = qs(qi)
         val g = seg.graph
@@ -2668,18 +2773,16 @@ object Ann {
         }
       }
     }
+    perSegmentFrame(spark, perSegment)
   }
 
-  /** Segment routing (IVF over segments) shared by the search entry points:
-    * with probeSegments > 0, each query is assigned its probeSegments
-    * nearest segment centroids; unrouted segments are pruned before the
-    * read/shuffle. Centroids live only on local_id=0 rows (one per
-    * segment). */
-  /** Memo keyed by (path, content token), shared by the hot serving-path
-    * caches below: the token keys rebuilds out, exactly like
-    * [[SegmentCache]] — and inserting a path's NEW token evicts its stale
-    * tokens, so write churn can't grow the map one dead entry per rebuild
-    * (a path holds at most one live entry). */
+  /** Memo keyed by (path, content token), shared by the serving-path
+    * memos ([[TreeGen]] records, session layouts): the token keys rebuilds
+    * out, exactly like [[SegmentCache]] — and inserting a path's NEW token
+    * evicts its stale tokens, so write churn can't grow the map one dead
+    * entry per rebuild (a path holds at most one live entry). A tree that
+    * moves to a new path per generation (the service's `gen=K`) needs
+    * [[removePaths]] when a generation is reclaimed. */
   private final class TokenKeyedMemo[V] {
     private val m = new scala.collection.concurrent.TrieMap[(String, String), V]()
     def getOrCompute(k: (String, String), f: => V): V =
@@ -2687,18 +2790,12 @@ object Ann {
         m.keysIterator.filter(o => o._1 == k._1 && o._2 != k._2).foreach(m.remove)
         m.getOrElseUpdate(k, f)
       })
+    def put(k: (String, String), v: V): Unit = m.put(k, v)
+    def removePaths(drop: String => Boolean): Unit =
+      m.keysIterator.filter(k => drop(k._1)).foreach(m.remove)
+    def size: Int = m.size
     def clear(): Unit = m.clear()
   }
-
-  /** Segment-centroid memo: routing is a hot serving-path step, and
-    * re-collecting one row per segment on every query batch shows up at
-    * high QPS. */
-  private val CentroidCache = new TokenKeyedMemo[Array[(String, Array[Float])]]
-
-  /** `_clustered`-marker memo: the routability check is one filesystem
-    * exists() on the hot serving path — per query batch that is a metadata
-    * RPC on object storage. */
-  private val ClusteredMarkerCache = new TokenKeyedMemo[Boolean]
 
   /** Write-through memo for a persisted session's SMALL durable state
     * (guard fields + candidate-pool rows — never the cursor blobs), keyed
@@ -2800,14 +2897,17 @@ object Ann {
     * instead of forcing a per-page index shuffle. */
   private val SegPartCache = new TokenKeyedMemo[Map[String, Int]]
 
+  /** Segment routing (IVF over segments) shared by the search entry points:
+    * with probeSegments > 0, each query is assigned its probeSegments
+    * nearest segment centroids; unrouted segments are pruned before the
+    * read/shuffle. Centroids live only on local_id=0 rows (one per
+    * segment), memoized in the tree's [[TreeGen]]. */
   private def routeQueries(
       spark: SparkSession,
-      raw: DataFrame,
+      gen: TreeGen,
       qArr: Array[(Long, Array[Float])],
       p: Params,
       probeSegments: Int,
-      path: String,
-      tok: String,
       /** Filtered x routed composition (jvector low-cardinality filtering
         * contract, `TestLowCardinalityFiltering.java:54-57`): when an
         * accept-list is active, AUTO routes by ACCEPTED MASS, not just
@@ -2827,14 +2927,13 @@ object Ann {
       /** Result size the widening targets (topK for the top-k route). */
       wantK: Int = 10): Option[org.apache.spark.broadcast.Broadcast[Map[String, Array[Int]]]] = {
     val auto = probeSegments == AutoProbe
-    if ((probeSegments > 0 || auto) && raw.columns.contains("seg_centroid")) {
+    if ((probeSegments > 0 || auto) && gen.served.columns.contains("seg_centroid")) {
       // AUTO engages only on trees built locality-aligned
       // ([[buildIndexClustered]]'s `_clustered` marker): on hash/arrival-
       // partitioned segments every centroid sits near the global mean, so
       // centroid routing would prune near-arbitrary segments and silently
       // drop recall. Unmarked trees stay exhaustive under AUTO.
-      if (auto && !ClusteredMarkerCache.getOrCompute((path, tok),
-        isClusteredTree(spark, path))) None
+      if (auto && !gen.clustered) None
       else {
         // ALL local_id=0 rows, null centroids included: a segment without
         // a centroid (legacy batch in a mixed tree, mergeSchema backfill)
@@ -2842,12 +2941,7 @@ object Ann {
         // probed unconditionally below; under AUTO its presence means the
         // marker is stale (clustered builds always write centroids) and
         // routing declines entirely
-        val all = CentroidCache.getOrCompute((path, tok),
-          raw.filter(col("local_id") === 0)
-            .select(col("seg"), col("seg_centroid"))
-            .collect()
-            .map(r => (r.getString(0),
-              if (r.isNullAt(1)) null else r.getSeq[Float](1).toArray)))
+        val all = gen.centroids
         val cents = all.filter(_._2 != null)
         val centless = all.collect { case (g, null) => g }
         // calibrated default: probe ~ sqrt(segments) keeps per-query work

@@ -35,7 +35,9 @@ class VectorService(spark: SparkSession, root: String) {
   private def dir(name: String, part: String = "") =
     s"$root/$name${if (part.isEmpty) "" else s"/$part"}"
 
-  private def fs: FileSystem =
+  /** Resolved once: every `_meta`, `_current` and glob read would
+    * otherwise copy the session's Hadoop conf. */
+  private lazy val fs: FileSystem =
     new HPath(root).getFileSystem(spark.sessionState.newHadoopConf())
 
   private def writeSmall(path: String, content: String): Unit = {
@@ -321,7 +323,12 @@ class VectorService(spark: SparkSession, root: String) {
         // flip may still be scanning gen=K, so K survives one compaction and
         // is reclaimed at the K+1 -> K+2 flip (generations are immutable, so
         // the stale read is consistent, just pre-compaction)
-        if (curN > 0) fs.delete(new HPath(dir(name, s"gen=${curN - 1}")), true)
+        // each generation serves from its own path, so its memoized record
+        // in Ann would outlive it: drop the record with the files
+        if (curN > 0) {
+          fs.delete(new HPath(dir(name, s"gen=${curN - 1}")), true)
+          Ann.invalidateSegmentCounts(dir(name, s"gen=${curN - 1}"))
+        }
         Ann.invalidateSegmentCounts(s"${dir(name, nextGen)}/*")
         Some(stats)
       }
@@ -357,8 +364,10 @@ class VectorService(spark: SparkSession, root: String) {
     val m = meta(name)
     val gen = currentGen(name)
       .getOrElse(throw new IllegalStateException(s"index '$name' has no data (OPTIMIZE first)"))
+    // read with the schema [[delete]] writes: no schema-inference job
     val deletes =
-      if (hasData(dir(name, "deletes"))) Some(spark.read.parquet(dir(name, "deletes")))
+      if (hasData(dir(name, "deletes")))
+        Some(spark.read.schema(VectorService.DeletesSchema).parquet(dir(name, "deletes")))
       else None
     // an all-tombstoned compaction leaves a token-only empty generation
     // (no parquet to infer a schema from): zero results, not an error
@@ -418,6 +427,9 @@ object VectorService {
     * (same-distribution appends land near 1.0) while catching a genuine
     * distribution shift. */
   val MaxAlignDrift: Double = 2.0
+
+  /** The schema of `deletes/`, as [[VectorService.delete]] writes it. */
+  private val DeletesSchema = "id LONG"
 
   private[service] case class Meta(
       metric: String, maxDegree: Int, beamWidth: Int, pqM: Int, nvqBits: Int,

@@ -1466,4 +1466,97 @@ class AnnSpec extends SparkSpec {
     val hi = new java.util.BitSet(); hi.set(1 << 20); roundTrip(hi)
     val all = new java.util.BitSet(); all.set(0, 777); roundTrip(all)
   }
+
+  /** Spark jobs `body` starts on this thread, counted by a listener. */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val tag = java.util.UUID.randomUUID().toString
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("graft.spec.jobs") == tag))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setLocalProperty("graft.spec.jobs", tag)
+    try body
+    finally {
+      sc.setLocalProperty("graft.spec.jobs", null)
+      org.apache.spark.SpecBus.drain(sc)
+      sc.removeSparkListener(listener)
+    }
+    jobs.get
+  }
+
+  test("driver merge at the inline cap equals the distributed merge, row for row") {
+    // a two-batch tree where one id sits in both batches (same vector: the
+    // merge must dedupe it) and ten vectors have twins under other ids
+    // (tied scores: the merge must order them id-asc)
+    val root = java.nio.file.Files.createTempDirectory("annmergecap").toString
+    val rows = randVectors(1200, 16, seed = 71)
+    val twins = rows.take(10).map { case (i, v) => (1000000L + i, v) }
+    val params = Ann.Params(metric = "COSINE", maxDegree = 16, beamWidth = 64,
+      segmentRows = 300)
+    Ann.buildIndex((rows.take(600) ++ twins).toDF("id", "vec"), s"$root/batch=0", params)
+    Ann.buildIndex((rows.drop(600) :+ rows(5)).toDF("id", "vec"), s"$root/batch=1", params)
+    val tree = s"$root/*"
+    val qs = rows.take(Ann.InlineQueryCap + 1).map { case (i, v) => (i, v) }
+    def search(q: Seq[(Long, Seq[Float])]) =
+      Ann.searchIndex(spark, tree, q.toDF("qid", "qvec"), 10, 64, params)
+    def sorted(df: DataFrame) = df.collect().sortBy(r => (r.getLong(0), r.getInt(1))).toSeq
+    val distributed = search(qs)
+    val driver = search(qs.take(Ann.InlineQueryCap))
+    val last = search(qs.drop(Ann.InlineQueryCap))
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    assert(!distributed.queryExecution.analyzed.isInstanceOf[LocalRelation],
+      "65 queries must take the distributed merge")
+    assert(driver.queryExecution.analyzed.isInstanceOf[LocalRelation] &&
+      last.queryExecution.analyzed.isInstanceOf[LocalRelation],
+      "at most 64 queries merge on the driver")
+    assert(driver.schema === distributed.schema)
+    assert(last.schema === distributed.schema)
+    val want = sorted(distributed)
+    assert(want.length === qs.length * 10)
+    assert(sorted(driver) ++ sorted(last) === want)
+    // the fixture exercises what it claims: id 5 once in its own top-k,
+    // and a tied twin right after its original
+    val q5 = want.filter(_.getLong(0) == 5L).map(_.getLong(2))
+    assert(q5.count(_ == 5L) === 1)
+    val q3 = want.filter(_.getLong(0) == 3L)
+    assert(q3(0).getLong(2) === 3L && q3(1).getLong(2) === 1000003L &&
+      q3(0).getDouble(3) === q3(1).getDouble(3))
+    // the plan route runs the same kernel on both sides of the cap
+    def planned(q: Seq[(Long, Seq[Float])]) = sorted(
+      Ann.searchIndexPlan(spark, tree, q.toDF("qid", "qvec"), 10, 64, params))
+    assert(planned(qs) === want)
+    assert(planned(qs.take(Ann.InlineQueryCap)) ++ planned(qs.drop(Ann.InlineQueryCap)) === want)
+  }
+
+  test("a repeated single-query search runs <= 2 jobs unpinned, 1 pinned; a rebuild is served") {
+    val tmp = java.nio.file.Files.createTempDirectory("annjobs").toString
+    val idx = s"$tmp/idx"
+    val params = Ann.Params(metric = "COSINE", maxDegree = 16, beamWidth = 64,
+      segmentRows = 500)
+    Ann.buildIndex(randVectors(2000, 16, seed = 81).toDF("id", "vec"), idx, params)
+    val q = randVectors(1, 16, seed = 82).toDF("qid", "qvec")
+    def search() = Ann.searchIndex(spark, idx, q, 10, 64, params).collect()
+    search() // resolves the tree's generation
+    val unpinned = jobsOf(search())
+    assert(unpinned <= 2, s"unpinned single-query search ran $unpinned jobs")
+    Ann.pin(spark, idx)
+    try {
+      search()
+      val pinned = jobsOf(search())
+      assert(pinned === 1, s"pinned single-query search ran $pinned jobs")
+    } finally Ann.unpin(idx)
+    // a rebuild at the same path writes a new token: the next search must
+    // read the rebuilt tree, not the memoized generation
+    val before = search().map(_.getAs[Long]("nid")).toSet
+    assert(before.forall(_ < 2000L))
+    val rebuilt = randVectors(2000, 16, seed = 83).map { case (i, v) => (i + 5000L, v) }
+    Ann.buildIndex(rebuilt.toDF("id", "vec"), idx, params)
+    val after = search().map(_.getAs[Long]("nid"))
+    assert(after.length === 10 && after.forall(_ >= 5000L),
+      s"search after a rebuild returned ${after.mkString(",")}")
+  }
 }

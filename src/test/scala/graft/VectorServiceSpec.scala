@@ -234,4 +234,22 @@ class VectorServiceSpec extends SparkSpec {
     assert(svc.search("c", queries, limit = 10).count() === 0L)
     assert(routable() === 0L, "empty generation must not be marked routable")
   }
+
+  test("compactions keep the driver's generation records flat") {
+    // every compaction serves from a new gen=K path; a reclaimed
+    // generation must take its memoized record with it
+    val root = java.nio.file.Files.createTempDirectory("graft_svc_gens").toString
+    val svc = new VectorService(spark, root)
+    svc.create("g", maxDegree = 8, beamWidth = 32)
+    svc.write("g", randVectors(300, 8, seed = 21).toDF("id", "vec"))
+    svc.optimize("g")
+    val q = randVectors(1, 8, seed = 22).toDF("qid", "qvec")
+    assert(svc.search("g", q, limit = 5).count() === 5L)
+    val counts = (1 to 5).map { _ =>
+      svc.optimize("g", compactNow = true)
+      assert(svc.search("g", q, limit = 5).count() === 5L)
+      graft.index.Ann.treeGenCount
+    }
+    assert(counts.distinct.size === 1, s"records after each compaction: ${counts.mkString(",")}")
+  }
 }
