@@ -12,6 +12,13 @@ import org.apache.spark.sql.functions._
   * aggregation, reporting exact-kNN QPS, ANN QPS, ANN build time, and
   * recall@10 of the ANN path vs the exact oracle — plus one timed run of
   * every SparkEntry query at the given scale factor.
+  *
+  * Kept under rule (a) of the probe audit (see `graft.tools`): its JSON is
+  * the 32-core benchmark record that the ROADMAP's bench items (cold
+  * `ann_qps` swings, per-entry regressions) are measured on. Deployment
+  * settings: `SPARK_GRAFT_SF_DIR`, `SPARK_GRAFT_CPUS`, and
+  * `SPARK_GRAFT_MSEG_N` / `SPARK_GRAFT_MSEG_SEGS` for the mseg block's
+  * size; every other parameter is a constant in this file.
   */
 object Bench {
 
@@ -41,12 +48,11 @@ object Bench {
     * the whole bench ~32 min before proceeding contended anyway. One pool
     * bounds the worst-case added wall at ~10 min while an idle box still
     * pays only the actual decay time. */
-  private val cleanWaitPoolInitSec: Double =
-    sys.env.get("SPARK_GRAFT_LOAD_WAIT").map(_.toDouble).getOrElse(600.0)
-  private var cleanWaitPoolSec: Double = cleanWaitPoolInitSec
+  private val CleanWaitPoolInitSec = 600.0
+  private var cleanWaitPoolSec: Double = CleanWaitPoolInitSec
 
-  private def cleanWindow(tag: String,
-      gate: Double = sys.env.get("SPARK_GRAFT_LOAD_GATE").map(_.toDouble).getOrElse(2.5)): Double = {
+  private def cleanWindow(tag: String): Double = {
+    val gate = 2.5
     var l = load1m()
     val t0 = System.nanoTime()
     def waited: Double = (System.nanoTime() - t0) / 1e9
@@ -66,7 +72,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     // the pool is object state: a second bench invocation in the same JVM
     // must start with a full pool, not the previous run's leftovers
-    cleanWaitPoolSec = cleanWaitPoolInitSec
+    cleanWaitPoolSec = CleanWaitPoolInitSec
     val loadAtStart = java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -290,7 +296,7 @@ object Bench {
     // centroid-routed probes on this clustered build), each reporting QPS,
     // visited_ratio, p99, plus routed recall vs the exhaustive result.
     // SPARK_GRAFT_MSEG_N / SPARK_GRAFT_MSEG_SEGS bound the memory/time
-    // budget on smaller boxes. ----
+    // budget on smaller boxes (4M x 64 needs more than 16 GB). ----
     val msegN = sys.env.get("SPARK_GRAFT_MSEG_N").map(_.toInt).getOrElse(1 << 22)
     val msegDim = 64
     val msegClusters = sys.env.get("SPARK_GRAFT_MSEG_SEGS").map(_.toInt).getOrElse(64)
@@ -299,10 +305,9 @@ object Bench {
     // (r13, NOTES_r13 §4: deg16 0.558 @ 252s, deg32 0.806 @ 320s, deg48
     // 0.896 @ 687s, deg64 see NOTES — routed batch time FLAT across
     // degrees, so the trade is build-only and the build-seconds-per-recall
-    // slope collapses ~15x past deg32: the knee). SPARK_GRAFT_MSEG_DEG
-    // overrides for frontier reruns. The deg16 continuity block retired
-    // this round per the r11 agreement (r12 was its last).
-    val msegDeg = sys.env.get("SPARK_GRAFT_MSEG_DEG").map(_.toInt).getOrElse(32)
+    // slope collapses ~15x past deg32: the knee). The deg16 continuity
+    // block retired this round per the r11 agreement (r12 was its last).
+    val msegDeg = 32
     val msegParams = Ann.Params(metric = "COSINE", maxDegree = msegDeg, beamWidth = 64)
     val msegRnd = new java.util.Random(9)
     val msegCenters = Array.fill(msegClusters)(
@@ -356,8 +361,8 @@ object Bench {
       // the BUILD starts in a clean window too (r14): it used to begin
       // right after the p99 passes and recorded 444 s in this round's
       // first artifact while the same binary built the same corpus in
-      // 302 s idle (tools/MsegBuildProbe A/B) — the bench was measuring
-      // its own wake on the biggest scalar in the artifact
+      // 302 s idle (OPTIMIZATION_r14, code-vs-box split) — the bench was
+      // measuring its own wake on the biggest scalar in the artifact
       cleanWindow("mseg-build")
       val (_, buildS) = time(
         Ann.buildIndexClustered(msegDf, path, p, nlist = msegClusters))
@@ -534,8 +539,8 @@ object Bench {
     // 0.15 s sits above the ~0.08 s fixed-cost cluster (the LocalEval'd
     // gates) and keeps the standard 103-entry sf0.1 map ~1100 chars —
     // inside budget with margin at one decimal (measured r15 distribution:
-    // 56 entries >= 0.15 s). Env-overridable for probes, not the driver.
-    val qCut = sys.env.get("SPARK_GRAFT_BENCH_QCUT").map(_.toDouble).getOrElse(0.15)
+    // 56 entries >= 0.15 s).
+    val qCut = 0.15
     // full-precision per-entry record on stderr (the one-line stdout JSON
     // sheds precision/entries to fit the driver's tail window; this table is
     // the complete measurement either way)
@@ -591,8 +596,7 @@ object Bench {
         // window gate — a contended artifact is visible block by block
         s""""w":${num(mseg.winLoad, 1)}},""" +
         // (mseg16 continuity block retired in r13 per the r11 agreement —
-        // the degree frontier lives in NOTES_r13 §4; SPARK_GRAFT_MSEG_DEG
-        // reruns any point)
+        // the degree frontier lives in NOTES_r13 §4)
         // the fused/gathered split survives EVERY shed level (the Q7
         // layout decision is re-measured per round from these two keys)
         (if (level >= 2)

@@ -4,7 +4,10 @@ import org.apache.spark.sql.SparkSession
 
 /** Plan-audit utility: prints formatted physical plans for representative
   * queries so scan pruning, pushdown, broadcast choices, and partial
-  * aggregation can be inspected (see PLANS.md for the audit notes). */
+  * aggregation can be inspected (see PLANS.md for the audit notes). Kept
+  * under rule (a) of the probe audit (see `graft.tools`): ROADMAP
+  * direction C replaces it with plan-shape specs, and the BM25 df-window
+  * item compares its plan with `plans/r15`. */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"

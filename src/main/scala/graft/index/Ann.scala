@@ -342,6 +342,11 @@ object Ann {
     * hive-partitioned (seg=..., optionally nested under batch=...), so a
     * glob expands to several partitioned roots — basePath anchors partition
     * discovery at the tree root, as Spark requires for multi-root reads.
+    * The glob is expanded here with `globStatus`, as Spark's own read
+    * expands it: given the glob itself, Spark's streaming-sink metadata
+    * probe stats the literal `*` and logs a FileNotFoundException trace
+    * on every read. A glob that matches nothing is passed through, so it
+    * fails as before.
     *
     * NVQ-compressed indexes (built with `nvqBits > 0`) store codes instead
     * of vectors; the `vec` column is reconstructed here at NVQ precision,
@@ -360,10 +365,18 @@ object Ann {
     * token). */
   private[graft] def readIndex(spark: SparkSession, path: String): DataFrame = {
     val base = path.stripSuffix("/*").stripSuffix("/")
+    val roots =
+      if (!path.exists("*?[{".contains(_))) Seq(path)
+      else {
+        val glob = new org.apache.hadoop.fs.Path(path)
+        val fs = glob.getFileSystem(spark.sessionState.newHadoopConf())
+        Option(fs.globStatus(glob)).map(_.toSeq.map(_.getPath.toString))
+          .filter(_.nonEmpty).getOrElse(Seq(path))
+      }
     val df = spark.read
       .option("basePath", base)
       .option("mergeSchema", "true")
-      .parquet(path)
+      .parquet(roots: _*)
     if (!df.columns.contains("nvq_code")) df
     else {
       df.withColumn("vec",
@@ -996,7 +1009,7 @@ object Ann {
     // global-model PQ training runs on `base`, NEVER on `parted`: handing
     // the identity-repartitioned relation to buildIndex made its sampling
     // jobs (count + top-cap collect) re-execute the full nCells-partition
-    // pipeline — BuildPhaseProbe measured those jobs at ~55% of the whole
+    // pipeline — a per-job build profile put those jobs at ~55% of the whole
     // build wall at 1M x 32768 (381 s vs the write's 155 s). The model is
     // IDENTICAL either way: sampling is partition-layout-invariant
     // (content-hash order, ReproducibleBuildSpec).
@@ -1406,7 +1419,7 @@ object Ann {
     // SegmentCache, the task touches ONLY (seg, __chunk, local_id, __live)
     // per row — per-batch work then scales with routed/beam work, not with
     // pinned bytes. Full decode (row copies -> tuples -> assembleSegment)
-    // happens ONLY on a cache miss. Measured (tools/MsegProfile, 1M x 64
+    // happens ONLY on a cache miss. Measured (NOTES_r11 §1, 1M x 64
     // segs x 64d, local[32]): the 9-column tuple decode alone cost
     // 0.27s/batch — half the ROUTED batch — and at 4M x 64 it dominated
     // (~75%), pinning routed QPS at exhaustive parity (34.2 vs 33.1)
@@ -2431,18 +2444,6 @@ object Ann {
           }
         }
     }
-    // per-phase wall clocks to stderr when SPARK_GRAFT_SESS_TIMING is set
-    // (fixed-cost attribution; zero overhead otherwise)
-    val sessT0 = System.nanoTime()
-    var sessTLast = sessT0
-    val sessTiming = sys.env.contains("SPARK_GRAFT_SESS_TIMING")
-    def mark(phase: String): Unit = if (sessTiming) {
-      val now = System.nanoTime()
-      System.err.println(f"[sess] $phase%-12s ${(now - sessTLast) / 1e9}%.3fs " +
-        f"(total ${(now - sessT0) / 1e9}%.3fs)")
-      sessTLast = now
-    }
-    mark("plan")
     // materialize ONCE in memory (localCheckpoint beats any write-then-
     // read-back scheme here — measured: a partitionBy("kind") parquet
     // round-trip for the same purpose cost +0.4s/page at 1M x 64), then
@@ -2451,7 +2452,7 @@ object Ann {
     //
     // BIG sessions invert that trade: their durable cursor state runs to
     // GBs (10^5 queries x ~8 probed segments x ~8 KB of bitset/heap blobs
-    // per cursor — SessScaleMicro measured 6.5-8.4 GB at 1M x 64), so
+    // per cursor — 6.5-8.4 GB measured at 1M x 64, NOTES_r14 §4), so
     // holding the page's out relation in block-manager MEMORY doubled the
     // footprint and OOMed a 16 GB driver. Their materialization is a
     // STREAMING parquet write partitioned by kind: blobs flow from the
@@ -2481,7 +2482,6 @@ object Ann {
         spark.read.option("basePath", outTmp.toString).parquet(outTmp.toString)
       }
     savedBatch.foreach(v => spark.conf.set(batchKey, v))
-    mark("search_ckpt")
 
     def rename(src: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path): Unit = {
       fs.delete(dst, true)
@@ -2561,14 +2561,12 @@ object Ann {
       val poolTmp = new org.apache.hadoop.fs.Path(s"$statePath/pool_tmp")
       try {
         split.write.mode("overwrite").parquet(poolTmp.toString)
-        mark("split_write")
         rename(poolTmp, poolPath)
         cursorsFut.get()
         // kind=1 is renamed away and kind=0 is consumed into the pool —
         // the streamed materialization dir is done
         fs.delete(outTmp, true)
         SessMemoCache.remove(statePath) // big sessions never memo the pool
-        mark("swaps")
         // localCheckpoint: every page reads the SAME pool path, so a lazy
         // return would canonicalize to the same plan page after page —
         // and Spark's CacheManager would then serve a user's cached page 1
@@ -2622,7 +2620,6 @@ object Ann {
             col("score").cast("double"))
           .as[(Long, Long, Double)].collect()
     }
-    mark("cand_collect")
     // per-page re-check of the big-session bound: the open-time decision
     // used ONE page's production bound, but the carried pool accumulates
     // across pages. Flip the NEXT page to the distributed split before the
@@ -2654,7 +2651,6 @@ object Ann {
       writePoolParquet(fs.getConf, new org.apache.hadoop.fs.Path(poolTmp,
         "part-00000.parquet"), poolBuf)
       rename(poolTmp, poolPath)
-      mark("pool_write")
       // the overlapped cursors swap joins here so a failure in EITHER
       // write surfaces before the page is handed back
       cursorsFut.get()
@@ -2663,7 +2659,6 @@ object Ann {
       SessMemoCache.put(statePath, SessMemo(
         dirFingerprint(fs, new org.apache.hadoop.fs.Path(s"$statePath/cursors")),
         dirFingerprint(fs, poolPath), tok, twoPhase, poolBuf.toArray))
-      mark("swaps")
       // page sorted (qid, rank) for a deterministic, lineage-free return
       spark.createDataset(pageBuf.sortBy(t => (t._1, t._2)).toIndexedSeq)
         .toDF("qid", "rank", "nid", "score")
@@ -2816,7 +2811,7 @@ object Ann {
       * 2M rows ≈ ~220 MB worst case; eviction is insertion-ordered and a
       * single over-budget pool is simply never memoized (the next page
       * reads the pool dir from disk — correctness is disk-backed always). */
-    private[graft] var MaxPoolRows: Long = 2000000L
+    private[graft] val MaxPoolRows: Long = 2000000L
     private val m = new java.util.LinkedHashMap[String, SessMemo]()
     def get(k: String): Option[SessMemo] = m.synchronized(Option(m.get(k)))
     def put(k: String, v: SessMemo): Unit = m.synchronized {
@@ -2846,10 +2841,9 @@ object Ann {
     * pool grows across pages (each page adds up to cursorRows x pageCands
     * rows and retires only nQ x k), so a session opened under the bound
     * can outgrow it mid-session — the marker then flips all later pages
-    * to the distributed path. Env `SPARK_GRAFT_SESS_BIG_ROWS`; a var so
-    * specs can force the distributed path on small fixtures. */
-  private[graft] var BigSessionRows: Long =
-    sys.env.get("SPARK_GRAFT_SESS_BIG_ROWS").map(_.toLong).getOrElse(2000000L)
+    * to the distributed path. A var so specs can force the distributed
+    * path on small fixtures. */
+  private[graft] var BigSessionRows: Long = 2000000L
 
   /** Target resident rows per GROUPED clustered-build task (the grouping in
     * [[buildIndexClustered]] / [[buildIndexAlignedTo]]): cells per task =
@@ -2857,10 +2851,9 @@ object Ann {
     * (defaultParallelism x 4 tasks minimum). 2^17 rows ≈ 64 MB of float
     * vectors at 64d — well inside an executor core's share while amortizing
     * the ~150 ms/task scheduler + parquet-writer fixed cost across whole
-    * cells. Env `SPARK_GRAFT_GROUP_ROWS`; a var so GroupedBuildSpec can
-    * force both layouts on one fixture. */
-  private[graft] var GroupRowsTarget: Long =
-    sys.env.get("SPARK_GRAFT_GROUP_ROWS").map(_.toLong).getOrElse(1L << 17)
+    * cells. A var so GroupedBuildSpec can force both layouts on one
+    * fixture. */
+  private[graft] var GroupRowsTarget: Long = 1L << 17
 
   /** Driver-side parquet write of a session's (qid, nid, score) pool —
     * byte-level parquet via parquet-hadoop, schema-compatible with
@@ -3130,7 +3123,7 @@ object Ann {
     * per-query work spread across driver cores (pure, independent per
     * query — the merge back into seg->queries order stays sequential and
     * deterministic in the caller) and COSINE centroid norms hoisted once
-    * per batch. Measured (tools/RouteMicro, 10k queries x 4096 centroids
+    * per batch. Measured (NOTES_r12 §2, 10k queries x 4096 centroids
     * x 64d): full-sort 26.5s -> 5.5s single-thread heap -> ~0.1s here. */
   private[graft] def routePick(
       qvecs: Array[Array[Float]],

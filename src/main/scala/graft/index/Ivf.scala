@@ -218,10 +218,9 @@ object Ivf {
   /** Centroid count at which [[IvfModel.assignOne]]/[[IvfModel.nearestClusters]]
     * switch from the exact O(S) scan to the two-level coarse pool (see
     * [[IvfModel.coarseLevel]]). Below it — every oracle fixture — results
-    * are bit-identical to the historical scan. Env-overridable; a var so
-    * specs can force the coarse path on small fixtures. */
-  private[graft] var CoarseAssignCells: Int =
-    sys.env.get("SPARK_GRAFT_COARSE_ASSIGN_CELLS").map(_.toInt).getOrElse(4096)
+    * are bit-identical to the historical scan. A var so specs can force
+    * the coarse path on small fixtures. */
+  private[graft] var CoarseAssignCells: Int = 4096
 
   /** The ONE coarse-pool size both [[IvfModel.assignOne]] and
     * [[IvfModel.nearestClusters]] draw from (the probe path widens it to
@@ -254,10 +253,8 @@ object Ivf {
   }
 
   /** Cell count at which [[train]] switches to [[trainHierarchical]].
-    * Env-overridable; a var so specs can exercise the hierarchical path on
-    * small fixtures. */
-  private[graft] var HierTrainCells: Int =
-    sys.env.get("SPARK_GRAFT_HIER_TRAIN_CELLS").map(_.toInt).getOrElse(32768)
+    * A var so specs can exercise the hierarchical path on small fixtures. */
+  private[graft] var HierTrainCells: Int = 32768
 
   /** Hierarchical (two-level) k-means training — the scale path for very
     * large cell counts (standard large-nlist IVF practice; FAISS reaches

@@ -424,25 +424,16 @@ final class Vamana(
 
   /** Refine-pass beam width. The second construction pass re-searches
     * EVERY node against the FINISHED graph, which is the most expensive
-    * beam of the build (measured 30-45% of total, tools/BuildPhaseMicro).
-    * Default (-1) = beamWidth/4: measured Pareto-better than the full
-    * beam on every fixture shape (cell/multi/uniform x dim 16-64, r12
-    * table in NOTES_r12 §5) — recall equal or higher (the refine mostly
-    * repacks existing edges; a few fresh candidates suffice) at ~40% of
-    * the refine cost, 1.3-1.4x on the whole build. Skipping refine
-    * entirely (0) is faster still but measurably loses recall at low
-    * degree/dim (0.972 -> 0.940 at dim16/deg16), so the pass stays.
-    * Settable for experiments; jvector's refineFinalGraph contract is the
-    * quality, not the effort. */
-  private[graft] var refineBeam: Int = -1
-  @inline private def refineEf: Int =
-    if (refineBeam < 0) math.max(1, beamWidth / 4) else refineBeam
-
-  /** Wall-clock of the last build's phases (nanoseconds) — construction
-    * frontier instrumentation (insert beams vs refine pass vs hierarchy). */
-  var lastInsertNanos: Long = 0L
-  var lastRefineNanos: Long = 0L
-  var lastHierNanos: Long = 0L
+    * beam of the build (measured 30-45% of total, NOTES_r12 §5). It is
+    * capped at beamWidth/4: measured Pareto-better than the full beam on
+    * every fixture shape (cell/multi/uniform x dim 16-64, r12 table in
+    * NOTES_r12 §5) — recall equal or higher (the refine mostly repacks
+    * existing edges; a few fresh candidates suffice) at ~40% of the refine
+    * cost, 1.3-1.4x on the whole build. Skipping refine entirely is faster
+    * still but measurably loses recall at low degree/dim (0.972 -> 0.940
+    * at dim16/deg16), so the pass stays. jvector's refineFinalGraph
+    * contract is the quality, not the effort. */
+  @inline private def refineEf: Int = math.max(1, beamWidth / 4)
 
   /** Query-to-node scorer with the query norm hoisted out of the loop
     * (COSINE); other metrics fall through to `sim`. Bit-identical results. */
@@ -1027,11 +1018,8 @@ final class Vamana(
       Array.fill(n)(mutable.ArrayBuffer.empty[Double])
     val nodes = order.filter(_ != entryNode).toArray
     if (threads <= 1 || n < 4096) {
-      val t0 = System.nanoTime()
       var oi = 0
       while (oi < nodes.length) { insertOne(nodes(oi), overflowDeg, nbrSims); oi += 1 }
-      val t1 = System.nanoTime()
-      lastInsertNanos = t1 - t0
       // refine pass (jvector refineFinalGraph / improveConnections); existing
       // edges are re-packed from the cached sims, only the fresh beam results
       // need scoring (which searchInternal already produced)
@@ -1046,11 +1034,8 @@ final class Vamana(
         while (j2 < lst.length) { packed(i2 + j2) = LongHeap.pack(sims(j2), lst(j2)); j2 += 1 }
         neighbors(node) = robustPrune(node, packed, degL0)
       }
-      lastRefineNanos = System.nanoTime() - t1
     } else buildParallel(nodes, overflowDeg, nbrSims, threads)
-    val th0 = System.nanoTime()
     buildHierarchy()
-    lastHierNanos = System.nanoTime() - th0
     lastBuildVisited = visitedAdder.sum()
     visitedAdder.reset() // build traffic doesn't count as search effort
     this
@@ -1158,7 +1143,6 @@ final class Vamana(
   private def buildParallel(nodes: Array[Int], overflowDeg: Int,
       nbrSims: Array[mutable.ArrayBuffer[Double]], threads: Int): Unit = {
     val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
-    val tIns0 = System.nanoTime()
     try {
       // seed prefix: sequential inserts so early beams have a graph to walk
       var done = 0
@@ -1225,8 +1209,6 @@ final class Vamana(
         }
         done += batch
       }
-      lastInsertNanos = System.nanoTime() - tIns0
-      val tRef0 = System.nanoTime()
       // refine pass, chunked Jacobi: each chunk's searches + prunes read the
       // frozen pre-chunk graph in parallel, then the chunk's new adjacency
       // lands in one ordered sweep (the sequential path's Gauss-Seidel
@@ -1259,7 +1241,6 @@ final class Vamana(
         while (i < end - start) { neighbors(start + i) = out(i); i += 1 }
         start = end
       }
-      lastRefineNanos = System.nanoTime() - tRef0
     } finally pool.shutdown()
   }
 

@@ -508,7 +508,7 @@ object CorpusPrep {
     // corpus (the r10 decomposition's one avoidable pass). The DOC side
     // runs marker-free: it needs nothing from the markers, and the scoring
     // pass is the per-action hot path. Two codegen-shape constraints,
-    // measured at 1M x 60 (tools/FlatXentProfile, 2026-08-15): the bigram
+    // measured at 1M x 60 (NOTES_r10 §3, 2026-08-15): the bigram
     // lambda stays two UNCONDITIONAL element_at calls (a per-element
     // CaseWhen in the lambda cost +40% on the whole route), so the marker
     // rides a concat'd 1-element array; and only the ref pass pays that
@@ -518,7 +518,7 @@ object CorpusPrep {
     // Self-scoring (docs sameResult ref — the quality-scoring pipeline
     // case) deliberately does NOT share/persist one bigram table between
     // the model and the stream: measured at 1M x 60 flat
-    // (tools/FlatXentProfile, 2026-08-14) the first action is unchanged
+    // (NOTES_r10 §3, 2026-08-14) the first action is unchanged
     // within noise (46.9s vs 39.8-44.9s — the 59M-row cache write costs
     // what the saved tokenize pass earns) and only REPEAT actions on the
     // same plan improve (35.1s vs ~45s). At cluster scale it's actively
@@ -716,7 +716,7 @@ object CorpusPrep {
       // on h2 alone was measured 3.5-4x SLOWER at 1M docs x 60 tokens on
       // local[32] (train+score 9.8-10.3s vs 2.9s flat, 9.9-10.1s vs 2.9s
       // zipf; hot score 8.4-8.9s vs 2.1-2.3s — interleaved A/B,
-      // tools/FlatXentProfile, 2026-08-14): the h2-only join forced a
+      // NOTES_r10 §3, 2026-08-14): the h2-only join forced a
       // model-side reshuffle where (h1, h2) reuses the exchange, and its
       // context-score broadcast chained cb -> cu -> broadcast onto the doc
       // stream's map path, serializing what pipelines here. The

@@ -417,7 +417,7 @@ private[graft] object Sampling {
     // candidate set, never as a cluster sort: `orderBy(...).limit(cap)`
     // ran a top-cap heap on EVERY map task — ruinous on many-partition
     // relations (at a 32768-partition input each task paid the top-131072
-    // machinery for ~32 rows; BuildPhaseProbe measured the sampling jobs
+    // machinery for ~32 rows; a per-job build profile put the sampling jobs
     // at ~55% of a whole clustered build) — and the no-limit variant was a
     // full global sort with a range-partitioner sampling pass. Ties beyond
     // the hash can only be bit-identical vectors (xxhash64 hashes the raw

@@ -343,15 +343,29 @@ object AnnQueries {
       .select(col("qid"), col("nid"), coalesce(col("pp"), lit(0L)).as("probed"))
   }
 
-  /** The flagged twin behind the r14-era bounded memo (shared by
-    * ivf_threshold and ivfpq_threshold, replacing the two unbounded
-    * exact_threshold/probed_exact memos): memoized ONLY while it fits the
-    * driver-safety cap, else recomputed distributed per call. */
-  private def probedTwin(s: SparkSession, dir: String, model: Ivf.IvfModel,
-      nprobe: Int, t: Double): DataFrame =
-    RouteMemo.dfBounded(s, s"exact_thr_flagged_${nprobe}_$t", dir) {
+  /** [[probedThresholdStats]] of a route against the flagged twin behind
+    * the r14-era bounded memo (shared by ivf_threshold and
+    * ivfpq_threshold, replacing the two unbounded
+    * exact_threshold/probed_exact memos): the twin is memoized ONLY while
+    * it fits the driver-safety cap, else folded distributed from the
+    * frame the capped collect already computed. */
+  private def probedTwinStats(s: SparkSession, dir: String, model: Ivf.IvfModel,
+      nprobe: Int, t: Double, res: DataFrame): ProbedThresholdStats = {
+    val twin = RouteMemo.dfBounded(s, s"exact_thr_flagged_${nprobe}_$t", dir) {
       exactThresholdFlagged(s, dir, model, nprobe, t)
-    }.getOrElse(exactThresholdFlagged(s, dir, model, nprobe, t))
+    }
+    try probedThresholdStats(res, twin) finally twin.unpersist()
+  }
+
+  /** Run `body` over `df` persisted for the length of the call: a capped
+    * collect and the distributed fold that may follow it then share one
+    * computation of its rows. A frame the caller already persisted is
+    * used as it is and left persisted. */
+  private def computedOnce[A](df: DataFrame)(body: DataFrame => A): A = {
+    val own = df.storageLevel == org.apache.spark.storage.StorageLevel.NONE
+    if (own) df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try body(df) finally if (own) df.unpersist()
+  }
 
   /** ONE-job fold of a partitioned range-search route against the flagged
     * exact twin: union with side markers, group on the pair, collapse to a
@@ -364,38 +378,37 @@ object AnnQueries {
   /** Same dual path as [[thresholdStats]], for routes compared against the
     * probed-flagged exact twin. */
   private[queries] def probedThresholdStats(res: DataFrame, exactFlagged: DataFrame,
-      cap: Int = RouteMemo.maxMemoRows): ProbedThresholdStats = {
-    val rr = res.select(col("qid").cast("long"), col("nid").cast("long"))
-      .limit(cap + 1).collect()
-    if (rr.length <= cap) {
-      val er = exactFlagged.select(col("qid").cast("long"), col("nid").cast("long"),
-        col("probed").cast("long")).limit(cap + 1).collect()
-      if (er.length <= cap) {
+      cap: Int = RouteMemo.maxMemoRows): ProbedThresholdStats =
+    computedOnce(res) { r0 => computedOnce(exactFlagged) { e0 =>
+      val rs = r0.select(col("qid").cast("long").as("qid"), col("nid").cast("long").as("nid"))
+      val es = e0.select(col("qid").cast("long").as("qid"), col("nid").cast("long").as("nid"),
+        col("probed").cast("long").as("probed"))
+      val rr = rs.limit(cap + 1).collect()
+      lazy val er = es.limit(cap + 1).collect()
+      if (rr.length <= cap && er.length <= cap) {
         val rPairs = rr.map(r => (r.getLong(0), r.getLong(1)))
         val rset = rPairs.toSet
         val e = er.map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
         val probed = e.filter(_._3 > 0L).map(t => (t._1, t._2)).distinct
-        return ProbedThresholdStats(rr.length.toLong, rset.size.toLong,
+        ProbedThresholdStats(rr.length.toLong, rset.size.toLong,
           e.length.toLong, e.count(t => rset.contains((t._1, t._2))).toLong,
           probed.length.toLong, probed.count(rset.contains).toLong)
+      } else {
+        val av = rs.select(col("qid"), col("nid"),
+          lit(1L).as("ar"), lit(0L).as("er"), lit(0L).as("pr"))
+        val bv = es.select(col("qid"), col("nid"),
+          lit(0L).as("ar"), lit(1L).as("er"), col("probed").as("pr"))
+        val r = av.unionAll(bv).groupBy("qid", "nid")
+          .agg(sum("ar").as("ar"), sum("er").as("er"), sum("pr").as("pr"))
+          .agg(sum("ar"), count(when(col("ar") > 0, true)),
+            sum("er"), sum(when(col("ar") > 0, col("er")).otherwise(0L)),
+            count(when(col("pr") > 0, true)),
+            count(when(col("ar") > 0 && col("pr") > 0, true)))
+          .head()
+        def l(i: Int): Long = if (r.isNullAt(i)) 0L else r.getLong(i)
+        ProbedThresholdStats(l(0), l(1), l(2), l(3), l(4), l(5))
       }
-    }
-    val av = res.select(col("qid").cast("long").as("qid"),
-      col("nid").cast("long").as("nid"),
-      lit(1L).as("ar"), lit(0L).as("er"), lit(0L).as("pr"))
-    val bv = exactFlagged.select(col("qid").cast("long").as("qid"),
-      col("nid").cast("long").as("nid"),
-      lit(0L).as("ar"), lit(1L).as("er"), col("probed").cast("long").as("pr"))
-    val r = av.unionAll(bv).groupBy("qid", "nid")
-      .agg(sum("ar").as("ar"), sum("er").as("er"), sum("pr").as("pr"))
-      .agg(sum("ar"), count(when(col("ar") > 0, true)),
-        sum("er"), sum(when(col("ar") > 0, col("er")).otherwise(0L)),
-        count(when(col("pr") > 0, true)),
-        count(when(col("ar") > 0 && col("pr") > 0, true)))
-      .head()
-    def l(i: Int): Long = if (r.isNullAt(i)) 0L else r.getLong(i)
-    ProbedThresholdStats(l(0), l(1), l(2), l(3), l(4), l(5))
-  }
+    }}
 
   private def ivfPqKnn(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(s, dir)
@@ -465,11 +478,10 @@ object AnnQueries {
     // so the route memo is BOUNDED (r14 verdict #3): under the cap the
     // sweep keeps the r14 fast path (route computed once per dir, plan
     // check rides the first run); over it nothing is pinned driver-side
-    // and the route re-runs distributed per call
-    def route() = Ivf.thresholdSearchPartitionedPQ(path, queries0(s, dir), model, pq,
-      nprobe, t, baseId = "vec_id", baseVec = "embedding")
+    // and the route's own frame is folded distributed
     val res = RouteMemo.dfBounded(s, "ivfpq_threshold", dir) {
-      val d = route().cache()
+      val d = Ivf.thresholdSearchPartitionedPQ(path, queries0(s, dir), model, pq,
+        nprobe, t, baseId = "vec_id", baseVec = "embedding").cache()
       d.count()
       ivfPqPlanChecks((dir, "codes_only")) =
         d.queryExecution.executedPlan.toString.linesIterator.exists { l =>
@@ -478,12 +490,13 @@ object AnnQueries {
             !l.substring(rs).contains("embedding")
         }
       d
-    }.getOrElse(route())
+    }
     val codesOnlyScan = ivfPqPlanChecks((dir, "codes_only"))
     // subset/recall vs the probed exact twin: ONE distributed job, O(1)
     // driver data. Gate folds are unchanged: no_extras <=> every distinct
     // route pair is a probed-twin pair; recall = distinct twin pairs found.
-    val st = probedThresholdStats(res, probedTwin(s, dir, model, nprobe, t))
+    val st = probedTwinStats(s, dir, model, nprobe, t, res)
+    res.unpersist()
     val rec = if (st.probedDistinct == 0) 1.0
       else st.bothProbedDistinct.toDouble / st.probedDistinct
     Gates.df(s, Seq(
@@ -663,38 +676,38 @@ object AnnQueries {
     * a hard row cap and fold driver-side — two cheap single-scan jobs, the
     * r14 cost profile. Past the cap (threshold cardinality grows with the
     * corpus) the SAME folds run as one distributed union+group job with
-    * O(1) driver data. ThresholdFoldSpec pins the two paths to identical
-    * results. */
+    * O(1) driver data. Each side is persisted for the call, so the fold
+    * reuses the rows the capped collect computed. ThresholdFoldSpec pins
+    * the two paths to identical results and each side to one computation. */
   private[queries] def thresholdStats(res: DataFrame, exact: DataFrame,
-      t: Double, cap: Int = RouteMemo.maxMemoRows): ThresholdStats = {
-    val rr = res.select(col("qid").cast("long"), col("nid").cast("long"),
-      col("score").cast("double")).limit(cap + 1).collect()
-    if (rr.length <= cap) {
-      val er = exact.select(col("qid").cast("long"), col("nid").cast("long"))
-        .limit(cap + 1).collect()
-      if (er.length <= cap) {
+      t: Double, cap: Int = RouteMemo.maxMemoRows): ThresholdStats =
+    computedOnce(res) { r0 => computedOnce(exact) { e0 =>
+      val rs = r0.select(col("qid").cast("long").as("qid"), col("nid").cast("long").as("nid"),
+        col("score").cast("double").as("score"))
+      val es = e0.select(col("qid").cast("long").as("qid"), col("nid").cast("long").as("nid"))
+      val rr = rs.limit(cap + 1).collect()
+      lazy val er = es.limit(cap + 1).collect()
+      if (rr.length <= cap && er.length <= cap) {
         val below = rr.count(_.getDouble(2) < t).toLong
         val rPairs = rr.map(r => (r.getLong(0), r.getLong(1)))
         val rset = rPairs.toSet
         val ePairs = er.map(r => (r.getLong(0), r.getLong(1)))
-        return ThresholdStats(below, rr.length.toLong, rset.size.toLong,
+        ThresholdStats(below, rr.length.toLong, rset.size.toLong,
           ePairs.length.toLong, ePairs.count(rset.contains).toLong)
+      } else {
+        val av = rs.select(col("qid"), col("nid"), lit(1L).as("ar"), lit(0L).as("er"),
+          when(col("score") < t, 1L).otherwise(0L).as("bl"))
+        val bv = es.select(col("qid"), col("nid"), lit(0L).as("ar"), lit(1L).as("er"),
+          lit(0L).as("bl"))
+        val r = av.unionAll(bv).groupBy("qid", "nid")
+          .agg(sum("ar").as("ar"), sum("er").as("er"), sum("bl").as("bl"))
+          .agg(sum("bl"), sum("ar"), count(when(col("ar") > 0, true)),
+            sum("er"), sum(when(col("ar") > 0, col("er")).otherwise(0L)))
+          .head()
+        def l(i: Int): Long = if (r.isNullAt(i)) 0L else r.getLong(i)
+        ThresholdStats(l(0), l(1), l(2), l(3), l(4))
       }
-    }
-    val av = res.select(col("qid").cast("long").as("qid"),
-      col("nid").cast("long").as("nid"), lit(1L).as("ar"), lit(0L).as("er"),
-      when(col("score") < t, 1L).otherwise(0L).as("bl"))
-    val bv = exact.select(col("qid").cast("long").as("qid"),
-      col("nid").cast("long").as("nid"), lit(0L).as("ar"), lit(1L).as("er"),
-      lit(0L).as("bl"))
-    val r = av.unionAll(bv).groupBy("qid", "nid")
-      .agg(sum("ar").as("ar"), sum("er").as("er"), sum("bl").as("bl"))
-      .agg(sum("bl"), sum("ar"), count(when(col("ar") > 0, true)),
-        sum("er"), sum(when(col("ar") > 0, col("er")).otherwise(0L)))
-      .head()
-    def l(i: Int): Long = if (r.isNullAt(i)) 0L else r.getLong(i)
-    ThresholdStats(l(0), l(1), l(2), l(3), l(4))
-  }
+    }}
 
   /** ANN threshold search (T5, adaptive relaxed-monotonicity stop): every
     * returned score must clear the threshold (exact-precision contract —
@@ -1348,7 +1361,7 @@ object AnnQueries {
     // probed-set equality AND unrestricted recall fold in ONE distributed
     // job ([[probedThresholdStats]]) — no unbounded collect of
     // threshold-cardinality pair lists (the twin memo is cap-gated)
-    val st = probedThresholdStats(res, probedTwin(s, dir, model, nprobe, t))
+    val st = probedTwinStats(s, dir, model, nprobe, t, res)
     res.unpersist()
     val matchesProbed = st.resDistinct == st.bothProbedDistinct &&
       st.probedDistinct == st.bothProbedDistinct

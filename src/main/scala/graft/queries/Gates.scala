@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.storage.StorageLevel
 
 /** Quality-gate entries for the driver's DuckDB correctness compare.
   *
@@ -75,22 +76,30 @@ private[queries] object RouteMemo {
     * (threshold searches return every pair above t — corpus-cardinality,
     * unlike top-k routes, r14 verdict #1/#3): memoize only when the result
     * has at most `cap` rows (limit(cap+1) returns the exact relation when
-    * under the cap), else return None and leave nothing pinned — the
-    * caller keeps the comparison fully distributed. Driver memory is
-    * O(cap) at ANY corpus size; at the shipped gate SFs these routes are
-    * a few hundred rows, so the sweep keeps the memo fast path. */
+    * under the cap). Over the cap nothing is pinned driver-side and the
+    * route's own frame is returned for the caller's distributed fold,
+    * still persisted, so the rows the capped collect computed are not
+    * computed again; the caller unpersists it once the fold is done.
+    * Driver memory is O(cap) at ANY corpus size; at the shipped gate SFs
+    * these routes are a few hundred rows, so the sweep keeps the memo fast
+    * path. */
   def dfBounded(s: SparkSession, name: String, dir: String,
-      cap: Int = maxMemoRows)(f: => DataFrame): Option[DataFrame] = {
-    val fetched = m.get((name, dir)).getOrElse {
-      val d = f
-      val out = (d.limit(cap + 1).collect(), d.schema)
-      d.unpersist()
-      out
-    }
-    if (fetched._1.length > cap) None
-    else {
-      m.putIfAbsent((name, dir), fetched)
-      Some(s.createDataFrame(java.util.Arrays.asList(fetched._1: _*), fetched._2))
+      cap: Int = maxMemoRows)(f: => DataFrame): DataFrame = {
+    def local(rows: Array[org.apache.spark.sql.Row],
+        schema: org.apache.spark.sql.types.StructType): DataFrame =
+      s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+    m.get((name, dir)) match {
+      case Some((rows, schema)) => local(rows, schema)
+      case None =>
+        val d = f
+        if (d.storageLevel == StorageLevel.NONE) d.persist(StorageLevel.MEMORY_AND_DISK)
+        val rows = d.limit(cap + 1).collect()
+        if (rows.length > cap) d
+        else {
+          d.unpersist()
+          m.putIfAbsent((name, dir), (rows, d.schema))
+          local(rows, d.schema)
+        }
     }
   }
 }

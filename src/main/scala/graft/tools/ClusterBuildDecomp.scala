@@ -18,6 +18,12 @@ import org.apache.spark.sql.functions._
   * plus exact-recall@10 of both trees (routed, ef=64) vs brute force so a
   * faster build that loses recall is visible in the same table.
   *
+  * Kept under rule (a) of the probe audit (see the package doc): ROADMAP
+  * direction D asks where the clustered build's serial fraction sits
+  * (4x the cores bought 1.58x on the 4M x 64 build, BENCH_r15 vs
+  * BENCH_r15_c8); run it at `threads` = 1, 2, 4 for the core-scaling
+  * table.
+  *
   * Run: sbt "runMain graft.tools.ClusterBuildDecomp [n] [segs] [threads] [degree]"
   * (defaults 4194304 64 32 32)
   */

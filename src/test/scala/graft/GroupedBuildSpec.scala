@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * every per-segment computation consumes only the cell's own rows. The
   * grouping exists because one-cell-per-task was ~all scheduler/writer
   * fixed cost at large cell counts (~150 ms/task against a sub-ms 32-row
-  * graph build; BuildPhaseProbe, NOTES_r14 §12). */
+  * graph build, timed per Spark job at 1M x 32768 cells). */
 class GroupedBuildSpec extends SparkSpec {
   import spark.implicits._
 

@@ -2,6 +2,8 @@ package graft.queries
 
 import graft.SparkSpec
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, udf}
+import org.apache.spark.util.LongAccumulator
 
 /** Pins the two fold paths of the threshold-gate comparators (r15): the
   * capped driver-side fold (gate-scale fast path) and the distributed
@@ -77,5 +79,43 @@ class ThresholdFoldSpec extends SparkSpec {
     val st = AnnQueries.thresholdStats(r, e, 0.6)
     assert(st == AnnQueries.ThresholdStats(belowT = 1L, resRows = 4L,
       resDistinct = 4L, exactRows = 4L, exactHitRows = 3L))
+  }
+
+  test("threshold gates compute each side's rows once per call, over the cap as under it") {
+    val routeRows = spark.sparkContext.longAccumulator("route rows")
+    val twinRows = spark.sparkContext.longAccumulator("twin rows")
+    def counted(acc: LongAccumulator) = udf { (x: Long) => acc.add(1L); x }.asNondeterministic()
+    // 6 route rows and 5 twin rows, each over 3 partitions
+    def route(): DataFrame = spark.range(0, 6, 1, 3)
+      .select(counted(routeRows)(col("id")).as("x"))
+      .select((col("x") % 2).as("qid"), col("x").as("nid"), (col("x") / 10.0 + 0.3).as("score"))
+    def twin(): DataFrame = spark.range(1, 6, 1, 3)
+      .select(counted(twinRows)(col("id")).as("x"))
+      .select((col("x") % 2).as("qid"), col("x").as("nid"), (col("x") % 3).as("probed"))
+    def rowsComputed(body: => Any): (Long, Long) = {
+      routeRows.reset(); twinRows.reset()
+      body
+      (routeRows.value.longValue, twinRows.value.longValue)
+    }
+    val st = AnnQueries.thresholdStats(route(), twin(), 0.6)
+    val pst = AnnQueries.probedThresholdStats(route(), twin())
+    for (cap <- Seq(2, RouteMemo.maxMemoRows)) {
+      assert(rowsComputed(assert(AnnQueries.thresholdStats(route(), twin(), 0.6, cap) == st))
+        == ((6L, 5L)), s"thresholdStats, cap $cap")
+      assert(rowsComputed(assert(AnnQueries.probedThresholdStats(route(), twin(), cap) == pst))
+        == ((6L, 5L)), s"probedThresholdStats, cap $cap")
+      // a gate call: the bounded route memo, then the fold against the twin
+      def gate(): Unit = {
+        val res = RouteMemo.dfBounded(spark, s"fold_spec_$cap", "dir", cap)(route())
+        try assert(AnnQueries.thresholdStats(res, twin(), 0.6, cap) == st)
+        finally res.unpersist()
+      }
+      assert(rowsComputed(gate()) == ((6L, 5L)), s"first gate call, cap $cap")
+      // over the cap the route runs once per call, its persisted frame
+      // serving both the capped collect and the fold; under it the memo
+      // serves the route's rows from the driver
+      val again = if (cap == 2) (6L, 5L) else (0L, 5L)
+      assert(rowsComputed(gate()) == again, s"second gate call, cap $cap")
+    }
   }
 }
