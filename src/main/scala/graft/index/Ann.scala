@@ -362,7 +362,19 @@ object Ann {
     * The listing and the schema merge (a footer job) are paid per call, so
     * the search routes do not call this per request: they take the read
     * from the tree's [[TreeGen]] record, made once per (path, build
-    * token). */
+    * token).
+    *
+    * The tree-row contract: every tree read here has all of [[TreeCols]],
+    * the fields of [[TreeRow]] with their types (seg string, local_id int,
+    * node_id bigint, vec array<float>, neighbors array<int>, is_entry
+    * boolean, seg_centroid array<float>, pq_code array<int>, nvq_code
+    * array<int>, nvq_params array<array<double>>, nvq_bits int,
+    * upper_nbrs array<array<int>>, res_code array<int>, res_cell
+    * array<double>), plus `batch` on batch-nested trees. A tree written
+    * before a column existed gets it here: `nvq_bits` 0, every other
+    * column null, so such segments serve, repair and compact codeless,
+    * hierarchy-less, at full resolution and without a routing centroid.
+    * No other reader backfills. */
   private[graft] def readIndex(spark: SparkSession, path: String): DataFrame = {
     val base = path.stripSuffix("/*").stripSuffix("/")
     val roots =
@@ -377,14 +389,79 @@ object Ann {
       .option("basePath", base)
       .option("mergeSchema", "true")
       .parquet(roots: _*)
-    if (!df.columns.contains("nvq_code")) df
-    else {
-      df.withColumn("vec",
-        coalesce(col("vec").cast("array<float>"),
-          when(col("nvq_code").isNotNull,
-            graft.functions.VectorExpressions.nvqDecode(
-              col("nvq_code"), col("nvq_params"), col("nvq_bits")))))
+    val decoded =
+      if (!df.columns.contains("nvq_code")) df
+      else {
+        df.withColumn("vec",
+          coalesce(col("vec").cast("array<float>"),
+            when(col("nvq_code").isNotNull,
+              graft.functions.VectorExpressions.nvqDecode(
+                col("nvq_code"), col("nvq_params"), col("nvq_bits")))))
+      }
+    TreeCols.fields.foldLeft(decoded) { (d, f) =>
+      if (d.columns.contains(f.name)) d
+      else d.withColumn(f.name,
+        if (f.name == "nvq_bits") lit(0) else lit(null).cast(f.dataType))
     }
+  }
+
+  /** One persisted tree row, field for field in column order: what
+    * [[buildIndex]], repair, merge compaction and rescore write, and what
+    * a maintenance task decodes. [[readIndex]] states the contract; the
+    * serving decode ([[SegTaskGroup]]) leaves seg_centroid and nvq empty. */
+  private[graft] final case class TreeRow(seg: String, local_id: Int, node_id: Long,
+      vec: Array[Float], neighbors: Array[Int], is_entry: Boolean,
+      seg_centroid: Array[Float], pq_code: Array[Int], nvq_code: Array[Int],
+      nvq_params: Array[Array[Double]], nvq_bits: Int, upper_nbrs: Array[Array[Int]],
+      res_code: Array[Int], res_cell: Array[Double])
+
+  /** [[TreeRow]]'s columns with their persisted types. */
+  private[graft] val TreeCols: org.apache.spark.sql.types.StructType =
+    org.apache.spark.sql.types.StructType.fromDDL(
+      "seg string, local_id int, node_id bigint, vec array<float>, neighbors array<int>, " +
+        "is_entry boolean, seg_centroid array<float>, pq_code array<int>, " +
+        "nvq_code array<int>, nvq_params array<array<double>>, nvq_bits int, " +
+        "upper_nbrs array<array<int>>, res_code array<int>, res_cell array<double>")
+
+  /** The [[TreeCols]] of a tree read, cast to their persisted types, in
+    * [[TreeRow]] order. */
+  private def treeColumns: Seq[org.apache.spark.sql.Column] =
+    TreeCols.fields.toSeq.map(f => col(f.name).cast(f.dataType).as(f.name))
+
+  /** A segment's id: the name UUID of its node ids in local-id order, so a
+    * segment is named by its content. */
+  private def segmentId(nodeIds: Iterator[Long]): String =
+    java.util.UUID.nameUUIDFromBytes(nodeIds.mkString(",").getBytes).toString
+
+  /** A segment's routing centroid, the mean of its `n` vectors (`vec(i)`
+    * in local-id order), summed `v(j) / n` row by row: every writer sums
+    * in this one order, so a segment rebuilt from the same rows gets the
+    * same float centroid. */
+  private def segmentCentroid(n: Int, vec: Int => Array[Float]): Array[Float] = {
+    val dim = vec(0).length
+    val c = new Array[Float](dim)
+    var i = 0
+    while (i < n) {
+      val v = vec(i)
+      var j = 0
+      while (j < dim) { c(j) += v(j) / n; j += 1 }
+      i += 1
+    }
+    c
+  }
+
+  /** A persisted segment's graph from its rows in local-id order: the
+    * shell over their vectors, with each row's neighbors, entry flag and
+    * upper layers restored. Serving, repair and merge compaction all turn
+    * rows back into a graph here. */
+  private def restoreGraph(sorted: Array[TreeRow], p: Params): Vamana = {
+    val g = p.graph(sorted.map(_.vec))
+    sorted.foreach { r =>
+      g.neighbors(r.local_id) ++= r.neighbors
+      if (r.is_entry) g.entryNode = r.local_id
+      if (r.upper_nbrs != null) g.restoreUpperAdjacency(r.local_id, r.upper_nbrs)
+    }
+    g
   }
 
   /** Pinned serving indexes: path -> the index rows persisted in executor
@@ -565,7 +642,13 @@ object Ann {
         * keeps the single-degree behavior: layer 0 = `maxDegree`, upper
         * layers = `min(maxDegree, 8)`. When non-empty its head governs
         * layer 0 (overriding `maxDegree` for pruning). */
-      maxDegreeByLevel: Seq[Int] = Nil)
+      maxDegreeByLevel: Seq[Int] = Nil) {
+    /** An empty graph over `vecs` under these parameters, to build,
+      * restore or score into. */
+    private[graft] def graph(vecs: Array[Array[Float]]): Vamana =
+      new Vamana(vecs, metric, maxDegree, beamWidth, alpha, neighborOverflow, seed,
+        maxDegreeByLevel)
+  }
 
   /** Split into enough partitions that segments build in parallel.
     * Sizing needs a row count — a cheap metadata count for parquet sources,
@@ -761,8 +844,7 @@ object Ann {
         val rows = unsorted.sortBy(_._1)
         if (rows.isEmpty) Iterator.empty
         else {
-          val seg = java.util.UUID.nameUUIDFromBytes(
-            rows.map(_._1).mkString(",").getBytes).toString
+          val seg = segmentId(rows.iterator.map(_._1))
           // graph + centroid are computed from the ORIGINAL vectors (NVQ
           // mode only stores lossily) — unless pqBuild, where construction
           // scores on the PQ codes it is about to persist anyway and never
@@ -795,8 +877,7 @@ object Ann {
               }
               Some((flat, cell))
             } else None
-          val shell = new Vamana(rows.map(_._2), p.metric, p.maxDegree,
-            p.beamWidth, p.alpha, p.neighborOverflow, p.seed, p.maxDegreeByLevel)
+          val shell = p.graph(rows.map(_._2))
           val g =
             if (p.pqBuild && resData.isDefined) {
               // residual-scored clustered construction: score pairs on the
@@ -819,12 +900,7 @@ object Ann {
           // per-segment centroid for search-time routing (IVF over
           // segments) — stored ONLY on the local_id=0 row, so it costs one
           // vector per segment, not one per row
-          val dim = rows(0)._2.length
-          val centroid = new Array[Float](dim)
-          rows.foreach { r =>
-            var j = 0
-            while (j < dim) { centroid(j) += r._2(j) / rows.length; j += 1 }
-          }
+          val centroid = segmentCentroid(rows.length, rows(_)._2)
           rows.indices.iterator.map { i =>
             val v = rows(i)._2
             val (storedVec, nvqCode, nvqParams) =
@@ -840,7 +916,7 @@ object Ann {
                 val rm = resBuildB.get.value._1.m
                 java.util.Arrays.copyOfRange(resData.get._1, i * rm, (i + 1) * rm)
               } else null
-            (seg, i, rows(i)._1, storedVec, g.neighbors(i).toArray, i == g.entryNode,
+            TreeRow(seg, i, rows(i)._1, storedVec, g.neighbors(i).toArray, i == g.entryNode,
               if (i == 0) centroid else null,
               if (codes != null) codes(i) else encodeCode(v), nvqCode, nvqParams, p.nvqBits,
               // persisted hierarchy (S7/S8): upper-layer adjacency rows ride
@@ -855,9 +931,7 @@ object Ann {
         }
         }
       }
-      .toDF("seg", "local_id", "node_id", "vec", "neighbors", "is_entry",
-        "seg_centroid", "pq_code", "nvq_code", "nvq_params", "nvq_bits", "upper_nbrs",
-        "res_code", "res_cell")
+      .toDF()
     // the nvq columns are written (null-valued) even for full-res builds:
     // every batch of a mixed tree then shares ONE schema, so a glob read
     // can never infer compressed batches' codes away
@@ -1200,8 +1274,8 @@ object Ann {
       rerankK: Int = 0,
       /** Accept-list (jvector `Bits`, P1): only these node ids may be
         * returned; the filter is fused into the beam accept (merge-on-read,
-        * like deletes). Distributed — the id relation is broadcast-joined
-        * against the index rows, never collected. */
+        * like deletes). Distributed — the id list is joined against the
+        * index rows ([[inIds]]), never collected by the route. */
       accepts: Option[DataFrame] = None,
       /** Two-phase only: share the worst-of-best-k exact score across the
         * segments a task searches sequentially, skipping reranks that
@@ -1340,40 +1414,23 @@ object Ann {
     // nodes just stop being acceptable results. compact() repairs for real.
     val pinnedOpt = pinnedIndexes.get(pinKey(path))
     val raw = pinnedOpt.getOrElse(gen.raw)
+    val withDel = withLiveCol(raw, deletes, keepLayout = pinnedOpt.isDefined)
+    val withLive = accepts.fold(withDel)(a =>
+      withDel.withColumn("__live", col("__live") && inIds(a, keepLayout = pinnedOpt.isDefined)))
 
     // Segment routing (IVF over segments): with probeSegments > 0, each
     // query searches only its probeSegments nearest segment centroids —
     // at 100 TB this is what keeps per-query work sublinear in segment
     // count. Centroids are one tiny row per segment. With an accept-list,
-    // AUTO widens probes by filter selectivity (see routeQueries).
+    // AUTO widens probes by filter selectivity (see routeQueries): the
+    // mass counted is accepted AND live, since counting tombstoned rows
+    // would overstate cells' accepted mass, under-widen probes, and let
+    // filtered-routed recall slip below the gated 0.95.
     val segQueriesB = routeQueries(spark, gen, qArr, p, probeSegments,
-      acceptPerSeg = accepts.map(a => () => {
-        val acc = raw.join(
-            broadcast(a.select(col(a.columns.head).cast("long").as("__acc")).distinct()),
-            raw("node_id") === col("__acc"), "left_semi")
-        // exclude tombstones from the accepted mass: when deletes overlap
-        // the accept-list, counting dead rows overstates cells' accepted
-        // mass, probes under-widen, and filtered-routed recall can slip
-        // below the gated 0.95
-        val live = deletes match {
-          case Some(d) => acc.join(
-              broadcast(d.select(col(d.columns.head).cast("long").as("__del")).distinct()),
-              acc("node_id") === col("__del"), "left_anti")
-          case None => acc
-        }
-        live.groupBy("seg").count()
-          .collect().map(r => (r.getString(0), r.getLong(1))).toMap
-      }),
+      acceptPerSeg = accepts.map(_ => () =>
+        withLive.filter(col("__live")).groupBy("seg").count()
+          .collect().map(r => (r.getString(0), r.getLong(1))).toMap),
       wantK = wantK)
-    val withDel = withLiveCol(raw, deletes)
-    val withLive = accepts match {
-      case Some(a) =>
-        withDel.join(
-          broadcast(a.select(col(a.columns.head).cast("long").as("__acc")).distinct()),
-          withDel("node_id") === col("__acc"), "left")
-          .withColumn("__live", col("__live") && col("__acc").isNotNull).drop("__acc")
-      case None => withDel
-    }
 
     // two-phase mode: the PQ sidecar models (per-query ADC tables build
     // in-task); residual-ADC models on clustered trees — segments without
@@ -1408,7 +1465,7 @@ object Ann {
       if (chunks <= 1) sel.withColumn("__chunk", lit(0))
       else sel.withColumn("__chunk", explode(typedLit((0 until chunks).toArray)))
     // pinned + no chunk fan-out: the cached rows are already partitioned by
-    // seg and everything since the pin is narrow (broadcast joins, filters,
+    // seg and everything since the pin is narrow (keepLayout joins, filters,
     // projections), so the batch runs WITHOUT a shuffle — the whole point
     // of pinning. Any other case must co-locate (seg, chunk) here: each
     // task assembles whole segments, a correctness requirement.
@@ -1556,8 +1613,7 @@ object Ann {
           // key — it applies per-query inside the beam.
           val g = TransientGraphCache.getOrCompute(
             TransientGraphCache.key(ids, vecs, p),
-            new Vamana(vecs, p.metric, p.maxDegree, p.beamWidth,
-              p.alpha, p.neighborOverflow, p.seed, p.maxDegreeByLevel).build(p.buildThreads))
+            p.graph(vecs).build(p.buildThreads))
           val vc = new Vamana.VisitCounter
           val out = qB.value.iterator.flatMap { case (qid, qv) =>
             perQuery(g, qv, i => acc(i), vc).map { case (l, s) => (qid, ids(l), s) }
@@ -1880,29 +1936,14 @@ object Ann {
 
   /** Shared projection for persisted-segment assembly: every index search
     * route reads the same eleven columns so their assemblies (and warm
-    * [[SegmentCache]] entries) are interchangeable. `pq_code` and
-    * `upper_nbrs` are null-backfilled for trees written before those
-    * features existed — such segments assemble codeless / hierarchy-less
-    * and keep the old behavior. */
-  private def segmentSelect(pruned: DataFrame): DataFrame = {
-    val withCode =
-      if (pruned.columns.contains("pq_code")) pruned
-      else pruned.withColumn("pq_code", lit(null).cast("array<int>"))
-    val withUpper =
-      if (withCode.columns.contains("upper_nbrs")) withCode
-      else withCode.withColumn("upper_nbrs", lit(null).cast("array<array<int>>"))
-    val withRes0 =
-      if (withUpper.columns.contains("res_code")) withUpper
-      else withUpper.withColumn("res_code", lit(null).cast("array<int>"))
-    val withRes =
-      if (withRes0.columns.contains("res_cell")) withRes0
-      else withRes0.withColumn("res_cell", lit(null).cast("array<double>"))
-    withRes.select(col("seg"), col("local_id").cast("int"), col("node_id").cast("long"),
+    * [[SegmentCache]] entries) are interchangeable. A legacy tree's
+    * missing columns arrive null from [[readIndex]]. */
+  private def segmentSelect(pruned: DataFrame): DataFrame =
+    pruned.select(col("seg"), col("local_id").cast("int"), col("node_id").cast("long"),
       col("vec").cast("array<float>"), col("neighbors").cast("array<int>"),
       col("is_entry"), col("__live"), col("pq_code").cast("array<int>"),
       col("upper_nbrs").cast("array<array<int>>"),
       col("res_code").cast("array<int>"), col("res_cell").cast("array<double>"))
-  }
 
   /** One cache key shape for ALL search routes over a persisted segment —
     * the assemblies are identical ([[assembleSegment]]), so the routes of
@@ -1982,10 +2023,10 @@ object Ann {
         (warm, lv)
       } else {
         val decoded = heavy.iterator.map { r =>
-          (segId, r.getInt(1), r.getLong(2),
+          (TreeRow(segId, r.getInt(1), r.getLong(2),
             r.getArray(3).toFloatArray(), r.getArray(4).toIntArray(),
-            r.getBoolean(5), r.getBoolean(6),
-            if (r.isNullAt(7)) null else r.getArray(7).toIntArray(),
+            r.getBoolean(5), null,
+            if (r.isNullAt(7)) null else r.getArray(7).toIntArray(), null, null, 0,
             if (r.isNullAt(8)) null
             else {
               val a = r.getArray(8)
@@ -1993,10 +2034,10 @@ object Ann {
                 if (a.isNullAt(j)) null else a.getArray(j).toIntArray())
             },
             if (r.isNullAt(9)) null else r.getArray(9).toIntArray(),
-            if (r.isNullAt(10)) null else r.getArray(10).toDoubleArray())
-        }.toArray.sortBy(_._2)
-        (SegmentCache.getOrCompute(key, assembleSegment(decoded, p)),
-          decoded.map(_._7))
+            if (r.isNullAt(10)) null else r.getArray(10).toDoubleArray()), r.getBoolean(6))
+        }.toArray.sortBy(_._1.local_id)
+        (SegmentCache.getOrCompute(key, assembleSegment(decoded.map(_._1), p)),
+          decoded.map(_._2))
       }
   }
 
@@ -2034,23 +2075,17 @@ object Ann {
   /** Assemble a persisted segment: vectors, adjacency, entry node, persisted
     * multi-layer hierarchy, PQ codes. Identical across routes (see
     * [[segmentCacheKey]]). `sorted` must be local-id sorted. */
-  private def assembleSegment(
-      sorted: Array[(String, Int, Long, Array[Float], Array[Int], Boolean, Boolean, Array[Int], Array[Array[Int]], Array[Int], Array[Double])],
-      p: Params): SegmentCache.Entry = {
-    val g0 = new Vamana(sorted.map(_._4), p.metric, p.maxDegree,
-      p.beamWidth, p.alpha, p.neighborOverflow, p.seed, p.maxDegreeByLevel)
-    sorted.foreach { r =>
-      g0.neighbors(r._2) ++= r._5
-      if (r._6) g0.entryNode = r._2
-      if (r._9 != null) g0.restoreUpperAdjacency(r._2, r._9)
-    }
+  private def assembleSegment(sorted: Array[TreeRow], p: Params): SegmentCache.Entry = {
     // residual serving payload: codes per node (null when the tree has
     // none) + the one-per-segment encoding cell (res_cell rides local 0)
-    val resCodes = sorted.map(_._10)
-    val cell = sorted.iterator.map(_._11).collectFirst { case c if c != null => c }
-    SegmentCache.Entry(sorted.map(_._3), g0, sorted.map(_._8),
-      if (resCodes.exists(_ != null)) resCodes else null, cell.orNull)
+    val resCodes = sorted.map(_.res_code)
+    SegmentCache.Entry(sorted.map(_.node_id), restoreGraph(sorted, p), sorted.map(_.pq_code),
+      if (resCodes.exists(_ != null)) resCodes else null, segmentCell(sorted))
   }
+
+  /** The one-per-segment residual encoding cell, carried on one row. */
+  private def segmentCell(rows: Array[TreeRow]): Array[Double] =
+    rows.iterator.map(_.res_cell).collectFirst { case c if c != null => c }.orNull
 
   /** Paged search over a persisted index — the same per-(query, segment)
     * resumable cursors, honoring tombstones (merge-on-read accept filter)
@@ -2240,9 +2275,10 @@ object Ann {
       case (Some(_), Some(_)) => raw.filter(lit(false))
       case _ => raw
     }
-    val selBase = segmentSelect(withLiveCol(rawScan, deletes)).withColumn("__chunk", lit(0))
-    // pinned: everything since the pin is narrow, so the index side runs
-    // WITHOUT a per-page shuffle (measured at 4M x 64: the forced
+    val selBase = segmentSelect(withLiveCol(rawScan, deletes, keepLayout = pinnedOpt.isDefined))
+      .withColumn("__chunk", lit(0))
+    // pinned: everything since the pin is narrow (keepLayout), so the index
+    // side runs WITHOUT a per-page shuffle (measured at 4M x 64: the forced
     // repartition alone held session pages at ~2.3s vs 0.34s for the
     // shuffle-free paged route). The CURSOR side aligns to whatever the
     // index layout actually is via the memoized seg->partition map below —
@@ -2539,14 +2575,7 @@ object Ann {
           (if (rawP.columns.contains("rank")) rawP.filter(col("rank") === 0)
            else rawP).select(col("qid"), col("nid"), col("score"))
         } else spark.emptyDataset[(Long, Long, Double)].toDF("qid", "nid", "score")
-      val merged = producedScored.unionByName(poolDfB)
-      val candidates = deletes match {
-        case Some(d) => merged.join(
-          broadcast(d.select(col(d.columns.head).cast("long").as("nid")).distinct()),
-          Seq("nid"), "left_anti")
-        case None => merged
-      }
-      val split = candidates
+      val split = dropDeleted(producedScored.unionByName(poolDfB), deletes)
         .select(col("qid").cast("long"), col("nid").cast("long"),
           col("score").cast("double"))
         .as[(Long, Long, Double)]
@@ -2586,8 +2615,11 @@ object Ann {
       .get(statePath).filter(_.poolFp == dirFingerprint(fs, poolPath)).map(_.pool)
     // pooled candidates were scored on an EARLIER page: re-filter against
     // the CURRENT tombstones (the fresh rows were live-filtered in-task,
-    // but the pool predates deletes added between pages). The rewritten
-    // pool below inherits the filter, so the state self-heals.
+    // but the pool predates deletes added between pages). The filter is an
+    // executor-side anti-join over the pool dir (the memo holds the same
+    // rows), so what reaches the driver is bounded by the candidates, not
+    // by the deletion count. The rewritten pool below inherits the filter,
+    // so the state self-heals.
     //
     // The page/pool SPLIT runs on the DRIVER: candidates are (qid, nid,
     // score) triples bounded by queries x probed segments x pageCands plus
@@ -2598,24 +2630,16 @@ object Ann {
     // for ~0.2 MB of data; collecting and splitting here cuts the page's
     // critical path to the search checkpoint plus ONE single-task pool
     // write. Ordering contract unchanged (score desc, nid asc — TopK.udf).
-    val delSet: java.util.HashSet[java.lang.Long] = deletes match {
-      case Some(d) =>
-        val s = new java.util.HashSet[java.lang.Long]()
-        d.select(col(d.columns.head).cast("long")).distinct().collect()
-          .foreach(r => s.add(r.getLong(0)))
-        s
-      case None => null
-    }
-    val candRows: Array[(Long, Long, Double)] = poolMemo match {
-      case Some(cached) =>
+    val candRows: Array[(Long, Long, Double)] = (poolMemo, deletes) match {
+      case (Some(cached), None) =>
         producedScored.as[(Long, Long, Double)].collect() ++ cached
-      case None =>
+      case _ =>
         val poolDf =
           if (fs.exists(poolPath))
             spark.read.parquet(poolPath.toString)
               .select(col("qid"), col("nid"), col("score"))
           else spark.emptyDataset[(Long, Long, Double)].toDF("qid", "nid", "score")
-        producedScored.unionByName(poolDf)
+        dropDeleted(producedScored.unionByName(poolDf), deletes)
           .select(col("qid").cast("long"), col("nid").cast("long"),
             col("score").cast("double"))
           .as[(Long, Long, Double)].collect()
@@ -2629,18 +2653,16 @@ object Ann {
     if (candRows.length > BigSessionRows) fs.create(bigMarker, true).close()
     val pageBuf = scala.collection.mutable.ArrayBuffer.empty[(Long, Int, Long, Double)]
     val poolBuf = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
-    candRows.iterator
-      .filter(r => delSet == null || !delSet.contains(r._2))
-      .toArray.groupBy(_._1).foreach { case (qid, rows) =>
-        val sorted = rows.sortBy { case (_, nid, s) => (-s, nid) }
-        var i = 0
-        while (i < sorted.length) {
-          val (_, nid, s) = sorted(i)
-          if (i < k) pageBuf += ((qid, i + 1, nid, s))
-          else poolBuf += ((qid, nid, s))
-          i += 1
-        }
+    candRows.groupBy(_._1).foreach { case (qid, rows) =>
+      val sorted = rows.sortBy { case (_, nid, s) => (-s, nid) }
+      var i = 0
+      while (i < sorted.length) {
+        val (_, nid, s) = sorted(i)
+        if (i < k) pageBuf += ((qid, i + 1, nid, s))
+        else poolBuf += ((qid, nid, s))
+        i += 1
       }
+    }
     // the pool file is written DRIVER-side (parquet-hadoop writer, same
     // schema spark.read.parquet sees on a cross-JVM resume): the rows are
     // already local, and even a single-task Spark job for this ~sub-MB
@@ -3274,130 +3296,86 @@ object Ann {
     val p = params
     val raw = readIndex(spark, path)
     val hasBatch = raw.columns.contains("batch")
-    val delDf = deletes.select(col(deletes.columns.head).cast("long").as("__del")).distinct()
+    val bkey = if (hasBatch) col("batch").cast("string") else lit("")
+    val rows = withLiveCol(raw, Some(deletes))
     // (seg, batch-key) pairs: batch-key "" on flat trees. Segments never
     // span batch dirs, so the pair set is one row per affected segment.
-    val affected: Array[(String, String)] = raw
-      .join(broadcast(delDf), raw("node_id") === col("__del"))
-      .select(col("seg"),
-        if (hasBatch) col("batch").cast("string") else lit(""))
-      .distinct().as[(String, String)].collect()
+    val affected: Array[(String, String)] = rows.filter(!col("__live"))
+      .select(col("seg"), bkey).distinct().as[(String, String)].collect()
     if (affected.isEmpty) return
-    val affectedSegs = affected.map(_._1)
-    val delB = spark.sparkContext.broadcast(
-      delDf.as[Long].collect().toSet)
-
-    // NVQ trees: vec arrives DECODED from readIndex (needed for re-pruning)
-    // but the rewritten rows carry the original codes through unchanged —
-    // repair touches edges, never payloads — and keep vec null so the
-    // segment stays compressed and the tree schema uniform.
-    val hasNvq = raw.columns.contains("nvq_code")
-    val withCode = {
-      val c0 = if (raw.columns.contains("pq_code")) raw
-               else raw.withColumn("pq_code", lit(null).cast("array<int>"))
-      val c1 = if (c0.columns.contains("upper_nbrs")) c0
-              else c0.withColumn("upper_nbrs", lit(null).cast("array<array<int>>"))
-      // residual serving payload survives repair when the segment's OWN
-      // dir carries a `_pqres_model` sidecar: the segment stays the same
-      // cell, surviving rows' codes stay valid under that dir's model
-      // (res_cell re-homes to the new local 0 below), and the rewrite
-      // lands back in the same dir so [[loadResAdc]]'s segment -> dir
-      // pairing still resolves. Segments whose dir has no sidecar
-      // (pre-r13 trees) drop the payload instead of silently mispairing.
-      val base0 = path.stripSuffix("/*").stripSuffix("/")
-      val fs0 = new org.apache.hadoop.fs.Path(base0)
-        .getFileSystem(spark.sessionState.newHadoopConf())
-      def scExists(dir: String): Boolean =
-        try fs0.exists(new org.apache.hadoop.fs.Path(s"$dir/_pqres_model"))
-        catch { case _: Exception => false }
-      val keepRes: org.apache.spark.sql.Column =
-        if (!hasBatch) lit(scExists(base0))
-        else {
-          val ok = affected.map(_._2).distinct
-            .filter(b => scExists(s"$base0/batch=$b")).toSeq
-          if (ok.isEmpty) lit(false) else col("batch").cast("string").isin(ok: _*)
-        }
-      val c2a = if (c1.columns.contains("res_code")) c1
-                else c1.withColumn("res_code", lit(null).cast("array<int>"))
-      val c2b = if (c2a.columns.contains("res_cell")) c2a
-                else c2a.withColumn("res_cell", lit(null).cast("array<double>"))
-      val c = c2b
-        .withColumn("res_code", when(keepRes, col("res_code")).cast("array<int>"))
-        .withColumn("res_cell", when(keepRes, col("res_cell")).cast("array<double>"))
-      if (hasNvq) c
-      else c.withColumn("nvq_code", lit(null).cast("array<int>"))
-        .withColumn("nvq_params", lit(null).cast("array<array<double>>"))
-        .withColumn("nvq_bits", lit(0))
-    }
-    val patched = withCode
-      .filter(col("seg").isin(affectedSegs.toSeq: _*))
-      .select(col("seg"), col("local_id").cast("int"), col("node_id").cast("long"),
-        col("vec").cast("array<float>"), col("neighbors").cast("array<int>"),
-        col("is_entry"), col("pq_code").cast("array<int>"),
-        col("nvq_code").cast("array<int>"), col("nvq_params").cast("array<array<double>>"),
-        col("nvq_bits").cast("int"), col("upper_nbrs").cast("array<array<int>>"),
-        col("res_code").cast("array<int>"), col("res_cell").cast("array<double>"),
-        (if (hasBatch) col("batch").cast("string") else lit("")).as("bkey"))
+    // residual serving payload survives repair when the segment's OWN
+    // dir carries a `_pqres_model` sidecar: the segment stays the same
+    // cell, surviving rows' codes stay valid under that dir's model
+    // (res_cell re-homes to the new local 0 below), and the rewrite
+    // lands back in the same dir so [[loadResAdc]]'s segment -> dir
+    // pairing still resolves. Segments whose dir has no sidecar
+    // (pre-r13 trees) drop the payload instead of silently mispairing.
+    val base0 = path.stripSuffix("/*").stripSuffix("/")
+    val fs0 = new org.apache.hadoop.fs.Path(base0)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    def scExists(dir: String): Boolean =
+      try fs0.exists(new org.apache.hadoop.fs.Path(s"$dir/_pqres_model"))
+      catch { case _: Exception => false }
+    val keepRes: org.apache.spark.sql.Column =
+      if (!hasBatch) lit(scExists(base0))
+      else {
+        val ok = affected.map(_._2).distinct
+          .filter(b => scExists(s"$base0/batch=$b")).toSeq
+        if (ok.isEmpty) lit(false) else col("batch").cast("string").isin(ok: _*)
+      }
+    // NVQ trees: vec arrives DECODED from readIndex (needed for
+    // re-pruning) but the rewritten rows carry the original codes
+    // through unchanged — repair touches edges, never payloads — and
+    // keep vec null so the segment stays compressed.
+    val patched = rows
+      .filter(col("seg").isin(affected.map(_._1).toSeq: _*))
+      .withColumn("res_code", when(keepRes, col("res_code")))
+      .withColumn("res_cell", when(keepRes, col("res_cell")))
       .repartition(col("seg"))
-      .as[(String, Int, Long, Array[Float], Array[Int], Boolean, Array[Int], Array[Int], Array[Array[Double]], Int, Array[Array[Int]], Array[Int], Array[Double], String)]
+      .select(struct(treeColumns: _*).as("_1"), col("__live").as("_2"), bkey.as("_3"))
+      .as[(TreeRow, Boolean, String)]
       .mapPartitions { it =>
-        it.toArray.groupBy(_._1).iterator.flatMap { case (_, rows) =>
-          val sorted = rows.sortBy(_._2)
-          val g = new Vamana(sorted.map(_._4), p.metric, p.maxDegree,
-            p.beamWidth, p.alpha, p.neighborOverflow, p.seed, p.maxDegreeByLevel)
-          sorted.foreach { r =>
-            g.neighbors(r._2) ++= r._5
-            if (r._6) g.entryNode = r._2
-            // restore the persisted hierarchy BEFORE the repair so
-            // repairDeleted prunes the real layers (not empty maps) and the
-            // rewritten segment keeps its warm-descent structure
-            if (r._11 != null) g.restoreUpperAdjacency(r._2, r._11)
-          }
+        it.toArray.groupBy(_._1.seg).iterator.flatMap { case (_, segRows) =>
+          val marked = segRows.sortBy(_._1.local_id)
+          val sorted = marked.map(_._1)
+          // the persisted hierarchy is restored BEFORE the repair so
+          // repairDeleted prunes the real layers (not empty maps) and the
+          // rewritten segment keeps its warm-descent structure
+          val g = restoreGraph(sorted, p)
           // the one-per-segment encoding cell, captured BEFORE the delete
           // drops rows (the old local-0 row may itself be tombstoned)
-          val resCell: Array[Double] =
-            sorted.iterator.map(_._13).collectFirst { case c if c != null => c }.orNull
-          val bkey = sorted(0)._14 // constant per segment
+          val resCell = segmentCell(sorted)
+          val bk = marked(0)._3 // constant per segment
           val deleted = new java.util.BitSet(sorted.length)
-          sorted.foreach { r => if (delB.value.contains(r._3)) deleted.set(r._2) }
+          marked.foreach { case (r, live, _) => if (!live) deleted.set(r.local_id) }
           g.repairDeleted(deleted)
-          val keep = sorted.indices.filter(i => !deleted.get(sorted(i)._2)).toArray
+          val keep = sorted.indices.filter(i => !deleted.get(sorted(i).local_id)).toArray
           if (keep.isEmpty) Iterator.empty
           else {
             val remap = new Array[Int](sorted.length)
-            keep.zipWithIndex.foreach { case (old, nw) => remap(sorted(old)._2) = nw }
-            val newSeg = java.util.UUID.nameUUIDFromBytes(
-              keep.map(i => sorted(i)._3).mkString(",").getBytes).toString
-            val dim = sorted(0)._4.length
-            val centroid = new Array[Float](dim)
-            keep.foreach { i =>
-              var j = 0
-              while (j < dim) { centroid(j) += sorted(i)._4(j) / keep.length; j += 1 }
-            }
-            val nvq = sorted(0)._8 != null
+            keep.zipWithIndex.foreach { case (old, nw) => remap(sorted(old).local_id) = nw }
+            val newSeg = segmentId(keep.iterator.map(sorted(_).node_id))
+            val centroid = segmentCentroid(keep.length, i => sorted(keep(i)).vec)
+            val nvq = sorted(0).nvq_code != null
             val newEntry = remap(g.entryNode)
             keep.zipWithIndex.iterator.map { case (old, nw) =>
               val r = sorted(old)
               // re-emit the (repaired) hierarchy with neighbors remapped to
               // the compacted local-id space — repairDeleted has already
               // dropped deleted members/edges, so every id is remappable
-              val upper = g.upperAdjacencyOf(r._2) match {
+              val upper = g.upperAdjacencyOf(r.local_id) match {
                 case null => null
                 case adj => adj.map(_.map(remap))
               }
-              (newSeg, nw, r._3, if (nvq) null else r._4,
-                g.neighbors(r._2).iterator.map(remap(_)).toArray,
-                nw == newEntry, if (nw == 0) centroid else null, r._7, r._8, r._9, r._10,
-                upper, r._12, if (nw == 0) resCell else null, bkey)
+              (r.copy(seg = newSeg, local_id = nw, vec = if (nvq) null else r.vec,
+                neighbors = g.neighbors(r.local_id).iterator.map(remap(_)).toArray,
+                is_entry = nw == newEntry, seg_centroid = if (nw == 0) centroid else null,
+                upper_nbrs = upper, res_cell = if (nw == 0) resCell else null), bk)
             }
           }
         }
       }
-      .toDF("seg", "local_id", "node_id", "vec", "neighbors", "is_entry",
-        "seg_centroid", "pq_code", "nvq_code", "nvq_params", "nvq_bits", "upper_nbrs",
-        "res_code", "res_cell", "batch")
-    // nvq columns always written (uniform tree schema — see buildIndex);
-    // legacy trees without them stay readable via readIndex's mergeSchema.
+      .toDF().select(col("_1.*"), col("_2").as("batch"))
     // Batch-nested trees rewrite IN PLACE: partitionBy(batch, seg) lands
     // each repaired segment back in its source batch dir, keeping the
     // per-batch sidecar pairing (and the dir layout) intact.
@@ -3477,15 +3455,9 @@ object Ann {
       outPath: String,
       params: Params,
       deletes: Option[DataFrame]): CompactStats = {
-    val rows = readIndex(spark, inPath).select(col("seg"), col("node_id"), col("vec"))
-    val live = deletes match {
-      case Some(d) => rows.join(
-        d.select(col(d.columns.head).cast("long").as("node_id")).distinct(),
-        Seq("node_id"), "left_anti")
-      case None => rows
-    }
+    val src = new LiveSource(spark, inPath, params, deletes)
     val target = if (params.segmentRows > 0) params.segmentRows.toLong else 8192L
-    val n = live.count()
+    val n = src.rows.count()
     if (n == 0L) {
       // nothing alive: same contract as merge mode — an empty tree
       // footprint (token only), unpinned; no marker (an empty tree has
@@ -3495,14 +3467,10 @@ object Ann {
       return CompactStats("cluster", 0L, 0L, 0L)
     }
     val nlist = math.max(1L, (n + target - 1) / target).min(4096L).toInt
-    val retrained: Option[graft.operators.PQModel] =
-      if (params.pqM > 0) loadAnySidecar(spark, inPath).map { base =>
-        graft.operators.PQ.retrain(live, "vec", "seg", base)
-      } else None
     val visitedAcc = spark.sparkContext.longAccumulator("ann.compact.cluster.visited")
-    buildIndexClustered(live.drop("seg"), outPath, params, nlist,
+    buildIndexClustered(src.rows.drop("seg"), outPath, params, nlist,
       baseId = "node_id", baseVec = "vec",
-      pqModelIn = retrained, buildVisitedAcc = Some(visitedAcc))
+      pqModelIn = src.retrained, buildVisitedAcc = Some(visitedAcc))
     CompactStats("cluster", visitedAcc.value, 0L, 0L)
   }
 
@@ -3512,26 +3480,30 @@ object Ann {
       outPath: String,
       params: Params,
       deletes: Option[DataFrame]): CompactStats = {
-    val rows = readIndex(spark, inPath).select(col("seg"), col("node_id"), col("vec"))
-    val live = deletes match {
-      case Some(d) => rows.join(
-        d.select(col(d.columns.head).cast("long").as("node_id")).distinct(),
-        Seq("node_id"), "left_anti")
-      case None => rows
-    }
-    // PQ retrain on compact (jvector PQRetrainer): if the source tree has a
-    // codebook sidecar, retrain a FRESH codebook at its (m, k) on a
-    // balanced proportional sample across the merged source segments — the
-    // quantizer tracks the merged distribution instead of inheriting one
-    // segment's view.
-    val retrained: Option[graft.operators.PQModel] =
-      if (params.pqM > 0) loadAnySidecar(spark, inPath).map { base =>
-        graft.operators.PQ.retrain(live, "vec", "seg", base)
-      } else None
+    val src = new LiveSource(spark, inPath, params, deletes)
     val visitedAcc = spark.sparkContext.longAccumulator("ann.compact.rebuild.visited")
-    buildIndex(live.drop("seg"), outPath, params, baseId = "node_id", baseVec = "vec",
-      pqModelIn = retrained, buildVisitedAcc = Some(visitedAcc))
+    buildIndex(src.rows.drop("seg"), outPath, params, baseId = "node_id", baseVec = "vec",
+      pqModelIn = src.retrained, buildVisitedAcc = Some(visitedAcc))
     CompactStats("rebuild", visitedAcc.value, 0L, 0L)
+  }
+
+  /** What the cluster and rebuild compactions build from: the live (seg,
+    * node_id, vec) rows under `inPath`, and — PQ retrain on compact
+    * (jvector PQRetrainer) — when `params.pqM > 0` and the source tree has
+    * a codebook sidecar, a FRESH codebook at its (m, k), retrained on a
+    * balanced proportional sample across the merged source segments, so
+    * the quantizer tracks the merged distribution instead of inheriting
+    * one segment's view. The model trains on first use. */
+  private final class LiveSource(spark: SparkSession, inPath: String, params: Params,
+      deletes: Option[DataFrame]) {
+    val rows: DataFrame = withLiveCol(
+        readIndex(spark, inPath).select(col("seg"), col("node_id"), col("vec")),
+        deletes)
+      .filter(col("__live")).drop("__live")
+    lazy val retrained: Option[graft.operators.PQModel] =
+      if (params.pqM > 0)
+        loadAnySidecar(spark, inPath).map(graft.operators.PQ.retrain(rows, "vec", "seg", _))
+      else None
   }
 
   /** First-fit-decreasing bin pack of source segments into output groups of
@@ -3560,19 +3532,13 @@ object Ann {
     import spark.implicits._
     val p = params
     val raw = readIndex(spark, inPath)
-    val delDf = deletes match {
-      case Some(d) => d.select(col(d.columns.head).cast("long").as("__del")).distinct()
-      case None => spark.emptyDataset[Long].toDF("__del")
-    }
-    val delB = spark.sparkContext.broadcast(delDf.as[Long].collect().toSet)
+    val rows = withLiveCol(raw, deletes)
     // ONE metadata-light pass computes every per-segment statistic the
     // planner needs: total rows, dead rows (-> live counts for bin packing,
     // dirty flags for carried eligibility)
-    val segStats: Array[(String, Long, Long)] = raw
-      .select(col("seg"), col("node_id"))
-      .join(broadcast(delDf), col("node_id") === col("__del"), "left")
+    val segStats: Array[(String, Long, Long)] = rows
       .groupBy("seg")
-      .agg(count(lit(1)).as("total"), count(col("__del")).as("dead"))
+      .agg(count(lit(1)).as("total"), count(when(!col("__live"), true)).as("dead"))
       .as[(String, Long, Long)].collect()
     val liveCounts: Array[(String, Long)] =
       segStats.map { case (s, t, d) => (s, t - d) }
@@ -3607,7 +3573,7 @@ object Ann {
     // no sidecar exists): retrain the source codebook at its (m, k) over
     // the merged live distribution, or train FRESH at (p.pqM, p.pqK) for a
     // codeless source tree; ALL output rows re-encode under it.
-    val liveRows = raw.join(broadcast(delDf), raw("node_id") === col("__del"), "left_anti")
+    val liveRows = rows.filter(col("__live"))
     val retrained: Option[graft.operators.PQModel] =
       if (p.pqM > 0) Some(loadAnySidecar(spark, inPath)
         .map(base => graft.operators.PQ.retrain(liveRows, "vec", "seg", base))
@@ -3634,18 +3600,6 @@ object Ann {
     def segFilter(df: DataFrame, segs: Set[String]): DataFrame =
       if (segs.size <= 4096) df.filter(col("seg").isin(segs.toSeq.sorted: _*))
       else df.join(broadcast(segs.toSeq.toDF("seg")), Seq("seg"), "left_semi")
-    // normalize optional columns so legacy trees share one row shape
-    val hasNvqIn = raw.columns.contains("nvq_code")
-    val c0 = if (raw.columns.contains("pq_code")) raw
-             else raw.withColumn("pq_code", lit(null).cast("array<int>"))
-    val c1 = if (c0.columns.contains("upper_nbrs")) c0
-             else c0.withColumn("upper_nbrs", lit(null).cast("array<array<int>>"))
-    val c2 = if (c1.columns.contains("seg_centroid")) c1
-             else c1.withColumn("seg_centroid", lit(null).cast("array<float>"))
-    val norm = if (hasNvqIn) c2
-               else c2.withColumn("nvq_code", lit(null).cast("array<int>"))
-                 .withColumn("nvq_params", lit(null).cast("array<array<double>>"))
-                 .withColumn("nvq_bits", lit(0))
     // only the DIRTY/small bins route through the grouped shuffle; the seg
     // filter prunes the scan to exactly their directories
     val mergeSegs = groupOf.keySet.diff(carriedSegs)
@@ -3656,20 +3610,14 @@ object Ann {
     // rare, and sortWithinPartitions + the streaming group iterator below
     // bound the task heap to ONE bin even when they do collide.
     val nBins = math.max(1, groupOf.view.filterKeys(mergeSegs).values.toSet.size)
-    val merged = segFilter(norm, mergeSegs)
+    val merged = segFilter(rows, mergeSegs)
       .join(broadcast(grpDf), "seg")
-      .select(col("seg"), col("local_id").cast("int"), col("node_id").cast("long"),
-        col("vec").cast("array<float>"), col("neighbors").cast("array<int>"),
-        col("is_entry"), col("seg_centroid").cast("array<float>"),
-        col("pq_code").cast("array<int>"), col("nvq_code").cast("array<int>"),
-        col("nvq_params").cast("array<array<double>>"), col("nvq_bits").cast("int"),
-        col("upper_nbrs").cast("array<array<int>>"), col("__grp").cast("int"))
       .repartition(nBins, col("__grp"))
       .sortWithinPartitions(col("__grp"), col("seg"), col("local_id"))
-      .as[(String, Int, Long, Array[Float], Array[Int], Boolean, Array[Float],
-        Array[Int], Array[Int], Array[Array[Double]], Int, Array[Array[Int]], Int)]
+      .select(struct(treeColumns: _*).as("_1"), col("__live").as("_2"),
+        col("__grp").cast("int").as("_3"))
+      .as[(TreeRow, Boolean, Int)]
       .mapPartitions { it =>
-        val dels = delB.value
         val ret = retB.value
         // codes from the per-source codebooks cannot mix in one tree: with a
         // retrained model every row re-encodes; without one, codes drop
@@ -3681,8 +3629,7 @@ object Ann {
         // rows arrive sorted by __grp (sortWithinPartitions above): stream
         // one bin at a time so the task heap never holds more than a single
         // bin's vectors+adjacency+codes, even if bins hash-collide
-        type R = (String, Int, Long, Array[Float], Array[Int], Boolean, Array[Float],
-          Array[Int], Array[Int], Array[Array[Double]], Int, Array[Array[Int]], Int)
+        type R = (TreeRow, Boolean, Int)
         // NOTE: named rowsIt, not `buffered` — inside the anonymous
         // Iterator subclass an outer val named `buffered` would be shadowed
         // by the inherited Iterator.buffered method
@@ -3690,27 +3637,20 @@ object Ann {
         val binIter: Iterator[Array[R]] = new scala.collection.AbstractIterator[Array[R]] {
           def hasNext: Boolean = rowsIt.hasNext
           def next(): Array[R] = {
-            val grp = rowsIt.head._13
+            val grp = rowsIt.head._3
             val buf = scala.collection.mutable.ArrayBuffer.empty[R]
-            while (rowsIt.hasNext && rowsIt.head._13 == grp) buf += rowsIt.next()
+            while (rowsIt.hasNext && rowsIt.head._3 == grp) buf += rowsIt.next()
             buf.toArray
           }
         }
         binIter.flatMap { grpRows =>
-          val bySrc = grpRows.groupBy(_._1).toArray.sortBy(_._1)
+          val bySrc = grpRows.groupBy(_._1.seg).toArray.sortBy(_._1)
           locally {
             // per-source graph assembly (adjacency restore, no rebuild)
-            val srcs = bySrc.map { case (_, rows) =>
-              val sorted = rows.sortBy(_._2)
-              val g = new Vamana(sorted.map(_._4), p.metric, p.maxDegree,
-                p.beamWidth, p.alpha, p.neighborOverflow, p.seed, p.maxDegreeByLevel)
-              sorted.foreach { r =>
-                g.neighbors(r._2) ++= r._5
-                if (r._6) g.entryNode = r._2
-                if (r._12 != null) g.restoreUpperAdjacency(r._2, r._12)
-              }
-              val alive = sorted.map(r => !dels.contains(r._3))
-              (sorted, g, alive)
+            val srcs = bySrc.map { case (_, srcRows) =>
+              val marked = srcRows.sortBy(_._1.local_id)
+              val sorted = marked.map(_._1)
+              (sorted, restoreGraph(sorted, p), marked.map(_._2))
             }
             // merged id space: live nodes, source-sorted then local-id order
             val mergedOf = srcs.map { case (sorted, _, _) => new Array[Int](sorted.length) }
@@ -3736,15 +3676,14 @@ object Ann {
                 var l = 0
                 while (l < sorted.length) {
                   if (alive(l)) {
-                    mergedVecs(mergedOf(si)(l)) = sorted(l)._4
+                    mergedVecs(mergedOf(si)(l)) = sorted(l).vec
                     liveRef(mergedOf(si)(l)) = (si, l)
                   }
                   l += 1
                 }
                 si += 1
               }
-              val g = new Vamana(mergedVecs, p.metric, p.maxDegree,
-                p.beamWidth, p.alpha, p.neighborOverflow, p.seed, p.maxDegreeByLevel)
+              val g = p.graph(mergedVecs)
               // cross-source search sizing = the reference's formula
               // (OnDiskGraphIndexCompactor.java:60-64,873-874): per-source
               // topK shrinks as source count grows — the merged candidate
@@ -3826,46 +3765,33 @@ object Ann {
               g.buildFromCandidates(cands)
               visitedAcc.add(gVisited)
               reusedAcc.add(gReused)
-              val newSeg = java.util.UUID.nameUUIDFromBytes(
-                (0 until nLive).map(i => srcs(liveRef(i)._1)._1(liveRef(i)._2)._3)
-                  .mkString(",").getBytes).toString
-              val dim = mergedVecs(0).length
-              val centroid = new Array[Float](dim)
-              var ci = 0
-              while (ci < nLive) {
-                var j = 0
-                while (j < dim) { centroid(j) += mergedVecs(ci)(j) / nLive; j += 1 }
-                ci += 1
-              }
+              val newSeg = segmentId(
+                (0 until nLive).iterator.map(i => srcs(liveRef(i)._1)._1(liveRef(i)._2).node_id))
+              val centroid = segmentCentroid(nLive, mergedVecs(_))
               (0 until nLive).iterator.map { w =>
                 val (wSrc, wLoc) = liveRef(w)
                 val r = srcs(wSrc)._1(wLoc)
-                (newSeg, w, r._3, if (r._9 != null) null else r._4,
-                  g.neighbors(w).toArray, w == g.entryNode,
-                  if (w == 0) centroid else null, encode(r._4),
-                  r._9, r._10, r._11, g.upperAdjacencyOf(w))
+                // residual codes belong to a source segment's cell; a
+                // merged segment has none
+                r.copy(seg = newSeg, local_id = w, vec = if (r.nvq_code != null) null else r.vec,
+                  neighbors = g.neighbors(w).toArray, is_entry = w == g.entryNode,
+                  seg_centroid = if (w == 0) centroid else null, pq_code = encode(r.vec),
+                  upper_nbrs = g.upperAdjacencyOf(w), res_code = null, res_cell = null)
               }
             }
           }
         }
       }
-      .toDF("seg", "local_id", "node_id", "vec", "neighbors", "is_entry",
-        "seg_centroid", "pq_code", "nvq_code", "nvq_params", "nvq_bits", "upper_nbrs")
+      .toDF()
     merged.write.mode("overwrite").partitionBy("seg").parquet(outPath)
     // carried segments: NARROW copy (scan -> map -> write, no shuffle) —
     // graphs, local ids, hierarchy, centroids all transfer unchanged; only
     // PQ codes re-encode when a retrained codebook exists (codes from the
     // old codebooks cannot mix with the merged bins' fresh codes)
     if (carriedSegs.nonEmpty) {
-      val carried = segFilter(norm, carriedSegs)
-        .select(col("seg"), col("local_id").cast("int"), col("node_id").cast("long"),
-          col("vec").cast("array<float>"), col("neighbors").cast("array<int>"),
-          col("is_entry"), col("seg_centroid").cast("array<float>"),
-          col("pq_code").cast("array<int>"), col("nvq_code").cast("array<int>"),
-          col("nvq_params").cast("array<array<double>>"), col("nvq_bits").cast("int"),
-          col("upper_nbrs").cast("array<array<int>>"))
-        .as[(String, Int, Long, Array[Float], Array[Int], Boolean, Array[Float],
-          Array[Int], Array[Int], Array[Array[Double]], Int, Array[Array[Int]])]
+      val carried = segFilter(raw, carriedSegs)
+        .select(treeColumns: _*)
+        .as[TreeRow]
         .mapPartitions { it =>
           val ret = retB.value
           val encode: Array[Float] => Array[Int] = v => ret match {
@@ -3873,12 +3799,11 @@ object Ann {
             case None => null
           }
           it.map { r =>
-            (r._1, r._2, r._3, if (r._9 != null) null else r._4, r._5, r._6,
-              r._7, encode(r._4), r._9, r._10, r._11, r._12)
+            r.copy(vec = if (r.nvq_code != null) null else r.vec, pq_code = encode(r.vec),
+              res_code = null, res_cell = null)
           }
         }
-        .toDF("seg", "local_id", "node_id", "vec", "neighbors", "is_entry",
-          "seg_centroid", "pq_code", "nvq_code", "nvq_params", "nvq_bits", "upper_nbrs")
+        .toDF()
       carried.write.mode("append").partitionBy("seg").parquet(outPath)
     }
     retrained.foreach(mm => graft.operators.PQ.save(spark, mm, s"$outPath/_pq_model"))
@@ -3913,44 +3838,25 @@ object Ann {
     // NVQ trees: edges are re-scored on the DECODED vectors (same precision
     // search uses), but the rewritten rows keep the original codes and a
     // null vec, so the output tree stays compressed.
-    val raw = readIndex(spark, inPath)
-    val hasNvq = raw.columns.contains("nvq_code")
-    val withNvq0 =
-      if (hasNvq) raw
-      else raw.withColumn("nvq_code", lit(null).cast("array<int>"))
-        .withColumn("nvq_params", lit(null).cast("array<array<double>>"))
-        .withColumn("nvq_bits", lit(0))
     // the persisted hierarchy survives a rescore untouched: upper layers
     // are adjacency SETS over the same nodes, and only edge order (a
-    // score-space artifact) is being rewritten at layer 0
-    val withNvq =
-      if (withNvq0.columns.contains("upper_nbrs")) withNvq0
-      else withNvq0.withColumn("upper_nbrs", lit(null).cast("array<array<int>>"))
-    val rescored0 = withNvq
-      .select(col("seg"), col("local_id").cast("int"), col("node_id").cast("long"),
-        col("vec").cast("array<float>"), col("neighbors").cast("array<int>"),
-        col("is_entry"), col("nvq_code").cast("array<int>"),
-        col("nvq_params").cast("array<array<double>>"), col("nvq_bits").cast("int"),
-        col("upper_nbrs").cast("array<array<int>>"))
+    // score-space artifact) is being rewritten at layer 0. PQ codes and
+    // residual payloads drop (see above).
+    val rescored0 = readIndex(spark, inPath)
+      .select(treeColumns: _*)
       .repartition(col("seg"))
-      .as[(String, Int, Long, Array[Float], Array[Int], Boolean, Array[Int], Array[Array[Double]], Int, Array[Array[Int]])]
+      .as[TreeRow]
       .mapPartitions { it =>
-        it.toArray.groupBy(_._1).iterator.flatMap { case (segId, rows) =>
-          val sorted = rows.sortBy(_._2)
-          val vecs = sorted.map(_._4)
-          val nvq = sorted(0)._7 != null
+        it.toArray.groupBy(_.seg).iterator.flatMap { case (_, rows) =>
+          val sorted = rows.sortBy(_.local_id)
+          val vecs = sorted.map(_.vec)
+          val nvq = sorted(0).nvq_code != null
           // scoring shell only — no build(): topology is carried over
-          val g = new Vamana(vecs, p.metric, p.maxDegree, p.beamWidth,
-            p.alpha, p.neighborOverflow, p.seed, p.maxDegreeByLevel)
+          val g = p.graph(vecs)
           // re-elect the entry as the medoid under the new metric (the
           // reference re-scores from the new provider's centroid,
           // GraphIndexBuilder.java:400-408)
-          val dim = vecs(0).length
-          val centroid = new Array[Float](dim)
-          vecs.foreach { v =>
-            var j = 0
-            while (j < dim) { centroid(j) += v(j) / vecs.length; j += 1 }
-          }
+          val centroid = segmentCentroid(vecs.length, vecs(_))
           var bestE = 0; var bestS = Double.MinValue
           var i = 0
           while (i < vecs.length) {
@@ -3961,17 +3867,18 @@ object Ann {
           sorted.iterator.map { r =>
             // re-score this node's edges under the new metric; keep the SET
             // of neighbors, re-order by (new score desc, id asc)
-            val rescored = r._5
-              .map(nb => (nb, g.sim(vecs(r._2), vecs(nb))))
+            val rescored = r.neighbors
+              .map(nb => (nb, g.sim(vecs(r.local_id), vecs(nb))))
               .sortBy { case (id, s) => (-s, id) }
               .map(_._1)
-            (segId, r._2, r._3, if (nvq) null else r._4, rescored, r._2 == bestE,
-              if (r._2 == 0) centroid else null, r._7, r._8, r._9, r._10)
+            r.copy(vec = if (nvq) null else r.vec, neighbors = rescored,
+              is_entry = r.local_id == bestE,
+              seg_centroid = if (r.local_id == 0) centroid else null,
+              pq_code = null, res_code = null, res_cell = null)
           }
         }
       }
-      .toDF("seg", "local_id", "node_id", "vec", "neighbors", "is_entry",
-        "seg_centroid", "nvq_code", "nvq_params", "nvq_bits", "upper_nbrs")
+      .toDF()
     // nvq columns always written (uniform tree schema — see buildIndex)
     rescored0.write.mode("overwrite").partitionBy("seg").parquet(outPath)
     writeBuildToken(spark, outPath)
@@ -3987,18 +3894,33 @@ object Ann {
     unpin(outPath)
   }
 
-  /** Tombstone merge-on-read, shared by every index search route: left-
-    * join the (broadcast, deduped) delete ids onto the tree and derive
-    * `__live`. Keeping this in ONE place is what keeps the four routes'
-    * tombstone semantics in lockstep. */
-  private def withLiveCol(raw: DataFrame, deletes: Option[DataFrame]): DataFrame =
-    deletes match {
-      case Some(d) =>
-        raw.join(broadcast(d.select(col(d.columns.head).cast("long").as("__del")).distinct()),
-          raw("node_id") === col("__del"), "left")
-          .withColumn("__live", col("__del").isNull).drop("__del")
-      case None => raw.withColumn("__live", lit(true))
-    }
+  /** Whether a row's `key` id is in `ids`, a delete or accept list (its
+    * first column, as longs): an EXISTS, planned as an existence join (a
+    * flag) or, in a filter, an anti/semi join, so duplicates are harmless.
+    * Spark broadcasts the list below `spark.sql.autoBroadcastJoinThreshold`
+    * (through the driver, bounded by it) and shuffles both sides above.
+    * `keepLayout` always broadcasts: a pinned tree served without
+    * `repartition(seg)` needs the join narrow, or its rows hash by `key`
+    * and segments split across tasks. */
+  private def inIds(ids: DataFrame, key: String = "node_id",
+      keepLayout: Boolean = false): org.apache.spark.sql.Column = {
+    val t = ids.select(col(ids.columns.head).cast("long").as("__id"))
+    (if (keepLayout) broadcast(t) else t).where(col("__id") === col(key).outer()).exists()
+  }
+
+  /** What a tombstone is, for every index search route and every
+    * maintenance op (repair, each compaction mode): tree rows get `__live`,
+    * false for a node id in `deletes` ([[inIds]]), so a task reads
+    * liveness from its own rows (jvector's one live-nodes `Bits` that
+    * search, `removeDeletedNodes` and the compactor all consult). */
+  private def withLiveCol(raw: DataFrame, deletes: Option[DataFrame],
+      keepLayout: Boolean = false): DataFrame =
+    raw.withColumn("__live", deletes.fold(lit(true))(d => !inIds(d, keepLayout = keepLayout)))
+
+  /** `cands` (qid, nid, score) without the tombstoned `nid`s: the paged
+    * session's filter for pool candidates scored before later deletes. */
+  private def dropDeleted(cands: DataFrame, deletes: Option[DataFrame]): DataFrame =
+    deletes.fold(cands)(d => cands.filter(!inIds(d, "nid")))
 
   /** First loadable PQ sidecar under an index root or batch tree (the
     * reference takes base PQ parameters from the first source,
