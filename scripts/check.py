@@ -24,6 +24,9 @@ from pathlib import Path
 
 import duckdb
 
+# the checkout this script belongs to: its graft.Verify is the one run
+REPO = Path(__file__).resolve().parent.parent
+
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
 
@@ -86,7 +89,7 @@ def main():
     if "--no-run" not in argv:
         r = subprocess.run(
             ["sbt", "-batch", f'runMain graft.Verify {sfdir} {outdir}'],
-            cwd="/root/repo", capture_output=True, text=True, timeout=3600)
+            cwd=REPO, capture_output=True, text=True, timeout=3600)
         sys.stdout.write(r.stdout[-3000:])
         if r.returncode != 0:
             print(r.stderr[-3000:])

@@ -41,7 +41,7 @@ import org.apache.spark.util.LongAccumulator
   *     [[thresholdSearch]]) run on `serveTransient`: segmenting, the
   *     content-keyed graph cache and the per-query loop.
   */
-object Ann {
+object Ann extends Sessions {
 
   /** Per-executor cache of assembled segment graphs (index segments are
     * immutable once written, so (path, seg, params) fully identifies one).
@@ -199,7 +199,7 @@ object Ann {
     * writes a new token (or a new path), and the stale record is never
     * addressed again. Centroids and the count come from the pinned rows
     * when the tree is pinned at first use. */
-  private final class TreeGen(val spark: SparkSession, path: String) {
+  private[index] final class TreeGen(val spark: SparkSession, path: String) {
     lazy val raw: DataFrame = readIndex(spark, path)
     /** The rows the routes serve: the pinned index if pinned, else [[raw]]. */
     def served: DataFrame = pinnedIndexes.getOrElse(pinKey(path), raw)
@@ -226,7 +226,7 @@ object Ann {
     * (written before tokens existed) has nothing that would invalidate a
     * record, so it gets a fresh one per call; so does a caller on another
     * session than the memoized record's. */
-  private def treeGen(spark: SparkSession, path: String, tok: String): TreeGen =
+  private[index] def treeGen(spark: SparkSession, path: String, tok: String): TreeGen =
     if (tok.isEmpty) new TreeGen(spark, path)
     else {
       val k = (pinKey(path), tok)
@@ -254,7 +254,7 @@ object Ann {
   /** Drop all cached segment graphs (call after overwriting an index path). */
   def clearSegmentCache(): Unit =
     { SegmentCache.clear(); TransientGraphCache.clear(); TreeGens.clear()
-      SessMemoCache.clear() }
+      Sessions.SessMemoCache.clear() }
 
   /** Write a fresh content token (`_build_id`) at an index root. Mutators
     * call this after every write; search cache keys embed the token, so a
@@ -266,9 +266,26 @@ object Ann {
     val base = path.stripSuffix("/*").stripSuffix("/")
     val fs = new org.apache.hadoop.fs.Path(base)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    val out = fs.create(new org.apache.hadoop.fs.Path(s"$base/_build_id"), true)
-    try out.write(java.util.UUID.randomUUID().toString.getBytes("UTF-8"))
-    finally out.close()
+    writeSmall(fs, new org.apache.hadoop.fs.Path(s"$base/_build_id"),
+      java.util.UUID.randomUUID().toString)
+  }
+
+  /** The trimmed text of a small file (a token, pointer or metadata
+    * file), None when it does not exist. */
+  private[graft] def readSmall(fs: org.apache.hadoop.fs.FileSystem,
+      p: org.apache.hadoop.fs.Path): Option[String] =
+    if (!fs.exists(p)) None
+    else {
+      val in = fs.open(p)
+      try Some(new String(org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8").trim)
+      finally in.close()
+    }
+
+  /** Create or replace a small file holding `text`. */
+  private[graft] def writeSmall(fs: org.apache.hadoop.fs.FileSystem,
+      p: org.apache.hadoop.fs.Path, text: String): Unit = {
+    val out = fs.create(p, true)
+    try out.write(text.getBytes("UTF-8")) finally out.close()
   }
 
   /** Resolve the content token(s) under an index root or batch-tree glob.
@@ -278,19 +295,7 @@ object Ann {
     * (path, seg, params) key behavior. */
   private def readTokenFile(fs: org.apache.hadoop.fs.FileSystem,
       p: org.apache.hadoop.fs.Path): Option[String] =
-    try {
-      if (!fs.exists(p)) None
-      else {
-        val in = fs.open(p)
-        try {
-          val buf = new java.io.ByteArrayOutputStream()
-          val tmp = new Array[Byte](256)
-          var n = in.read(tmp)
-          while (n > 0) { buf.write(tmp, 0, n); n = in.read(tmp) }
-          Some(new String(buf.toByteArray, "UTF-8").trim)
-        } finally in.close()
-      }
-    } catch { case _: Exception => None }
+    try readSmall(fs, p) catch { case _: Exception => None }
 
   private[graft] def buildToken(spark: SparkSession, path: String): String = {
     try {
@@ -472,10 +477,10 @@ object Ann {
     * no parquet re-scan, no shuffle, and (for NVQ trees) vectors decoded
     * once at pin time rather than per batch. Without a pin, [[searchIndex]]
     * stays a cold scan-and-shuffle job — correct, just batch-latency. */
-  private val pinnedIndexes =
+  private[index] val pinnedIndexes =
     new scala.collection.concurrent.TrieMap[String, DataFrame]()
 
-  private def pinKey(path: String): String = path.stripSuffix("/")
+  private[index] def pinKey(path: String): String = path.stripSuffix("/")
 
   /** Pin an index for warm serving: materializes (and for NVQ trees,
     * decodes) the rows into executor storage, partitioned by segment.
@@ -1382,26 +1387,28 @@ object Ann {
       .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
 
   /** The persisted serving scaffold behind [[searchIndex]],
-    * [[searchIndexPaged]] and [[thresholdSearchIndex]]: the whole serving
-    * plan (each step commented below) lives here once, and a route
-    * supplies only its per-query beam and its merge. `task` runs once per
-    * Spark task with the query batch and returns the body each routed
-    * segment runs as a [[SegView]]; it must not capture a DataFrame or the
-    * SparkSession. Returns the per-segment (qid, nid, score) rows as an
-    * RDD, so a small batch can collect them without a Dataset plan;
-    * `metrics` gets the serving scan plan and the
-    * scanned/visited/expanded/reranked counts. The query batch `qArr` is
-    * collected once, by the route. Everything resolved from the tree
+    * [[searchIndexPaged]], [[thresholdSearchIndex]] and a paged
+    * session's open page: the whole serving plan (each step commented
+    * below) lives here once, and a route supplies only its per-query beam
+    * and its merge. `task` runs once per Spark task with the query batch
+    * and returns the body each routed segment runs as a [[SegView]]; it
+    * must not capture a DataFrame or the SparkSession. Returns the rows
+    * the bodies emit (per-segment (qid, nid, score) for the search routes)
+    * as an RDD, so a small batch can collect them without a Dataset plan;
+    * `routed` sees the routing (segment -> query indexes, None when
+    * exhaustive) before the RDD is returned; `metrics` gets the serving
+    * scan plan and the scanned/visited/expanded/reranked counts. The query
+    * batch `qArr` is collected once, by the route. Everything resolved from the tree
     * itself (the unpinned read, the `_clustered` verdict, centroids,
     * segment tokens and count, sidecar models) comes from the tree's
     * [[TreeGen]] record; only the build token is read per call. */
-  private def servePersisted(spark: SparkSession, path: String,
-      qArr: Array[(Long, Array[Float])],
+  private[index] def servePersisted[T: scala.reflect.ClassTag](spark: SparkSession,
+      path: String, qArr: Array[(Long, Array[Float])],
       p: Params, deletes: Option[DataFrame], probeSegments: Int, rerankK: Int,
       metrics: Option[SearchMetrics] = None, accepts: Option[DataFrame] = None,
-      wantK: Int = 10)(
-      task: Array[(Long, Array[Float])] => SegView => Iterator[(Long, Long, Double)])
-      : org.apache.spark.rdd.RDD[(Long, Long, Double)] = {
+      wantK: Int = 10, routed: Option[Map[String, Array[Int]]] => Unit = _ => ())(
+      task: Array[(Long, Array[Float])] => SegView => Iterator[T])
+      : org.apache.spark.rdd.RDD[T] = {
     val qB = new QueryCarrier(spark, qArr)
     // the generation record: the token is read per call, everything
     // resolved from the tree itself is read once per token
@@ -1431,6 +1438,7 @@ object Ann {
         withLive.filter(col("__live")).groupBy("seg").count()
           .collect().map(r => (r.getString(0), r.getLong(1))).toMap),
       wantK = wantK)
+    routed(segQueriesB.map(_.value))
 
     // two-phase mode: the PQ sidecar models (per-query ADC tables build
     // in-task); residual-ADC models on clustered trees — segments without
@@ -1438,39 +1446,17 @@ object Ann {
     val adcB = loadAdcTables(spark, path, tok, rerankK)
     val resAdcB = loadResAdc(spark, path, tok, rerankK)
 
-    // with routing active, prune unprobed segments BEFORE the read/shuffle —
-    // I/O and shuffle stay proportional to probed segments, not index size
-    val pruned = segQueriesB match {
-      case Some(b) if b.value.nonEmpty =>
-        withLive.filter(col("seg").isin(b.value.keys.toSeq: _*))
-      case Some(_) => withLive.filter(lit(false))
-      case None => withLive
-    }
-
-    // shared eleven-column projection (segmentSelect) + the query fan-out:
-    // tasks parallelize across SEGMENTS, so an index with fewer segments
-    // than cores would search its query batch serially in one task per
-    // segment. Replicate each segment's rows across cores/numSegments
-    // chunk-tasks, each searching a modulo-slice of the query set — the
-    // warm SegmentCache assembles the graph once per executor regardless,
-    // and at scale (segments >= cores) chunks = 1 and nothing is
-    // replicated. (jvector parallelizes queries across threads over one
-    // shared index — "one searcher per thread", DiskIntro.java — this is
-    // the same shape with tasks as threads.)
+    // the query fan-out: tasks parallelize across SEGMENTS, so an index
+    // with fewer segments than cores would search its query batch serially
+    // in one task per segment. Replicate each segment's rows across
+    // cores/numSegments chunk-tasks, each searching a modulo-slice of the
+    // query set — the warm SegmentCache assembles the graph once per
+    // executor regardless, and at scale (segments >= cores) chunks = 1 and
+    // nothing is replicated. (jvector parallelizes queries across threads
+    // over one shared index — "one searcher per thread", DiskIntro.java —
+    // this is the same shape with tasks as threads.)
     val chunks: Int = chunkFanout(spark, gen, qArr.length, segQueriesB)
-    val sel = segmentSelect(pruned)
-    // both branches emit an int __chunk (lit(0) is int; the exploded array
-    // element is int), appended after segmentSelect's eleven columns
-    val selected =
-      if (chunks <= 1) sel.withColumn("__chunk", lit(0))
-      else sel.withColumn("__chunk", explode(typedLit((0 until chunks).toArray)))
-    // pinned + no chunk fan-out: the cached rows are already partitioned by
-    // seg and everything since the pin is narrow (keepLayout joins, filters,
-    // projections), so the batch runs WITHOUT a shuffle — the whole point
-    // of pinning. Any other case must co-locate (seg, chunk) here: each
-    // task assembles whole segments, a correctness requirement.
-    val selPlan = (if (pinnedOpt.isDefined && chunks <= 1) selected
-                   else selected.repartition(col("seg"), col("__chunk")))
+    val selPlan = indexSide(withLive, pinnedOpt.isDefined, segQueriesB, chunks)
     // Warm-serving fast path over raw InternalRows (no Dataset decode):
     // when a segment's assembled graph is already resident in
     // SegmentCache, the task touches ONLY (seg, __chunk, local_id, __live)
@@ -1519,6 +1505,36 @@ object Ann {
     }
   }
 
+  /** A serving plan's index side: `live` rows (with `__live`) pruned to
+    * the routed segments, in [[segmentSelect]]'s projection plus an int
+    * `__chunk` (0 until `chunks`), each (segment, chunk) in one partition —
+    * a task assembles whole segments, a correctness requirement. A pinned
+    * tree with one chunk is already partitioned by segment and everything
+    * since the pin is narrow (keepLayout joins, filters, projections), so
+    * it runs WITHOUT a shuffle — the whole point of pinning. `parts` fixes
+    * the shuffle's partition count for a caller that maps segments to
+    * partitions (a resumed session page); otherwise AQE may coalesce. */
+  private[index] def indexSide(live: DataFrame, pinned: Boolean,
+      segQueriesB: Option[org.apache.spark.broadcast.Broadcast[Map[String, Array[Int]]]],
+      chunks: Int, parts: Option[Int] = None): DataFrame = {
+    // with routing active, prune unprobed segments BEFORE the read/shuffle —
+    // I/O and shuffle stay proportional to probed segments, not index size
+    val pruned = segQueriesB match {
+      case Some(b) if b.value.nonEmpty => live.filter(col("seg").isin(b.value.keys.toSeq: _*))
+      case Some(_) => live.filter(lit(false))
+      case None => live
+    }
+    val sel = segmentSelect(pruned)
+    // both branches emit an int __chunk (lit(0) is int; the exploded array
+    // element is int), appended after segmentSelect's eleven columns
+    val selected =
+      if (chunks <= 1) sel.withColumn("__chunk", lit(0))
+      else sel.withColumn("__chunk", explode(typedLit((0 until chunks).toArray)))
+    val keys = Seq(col("seg"), col("__chunk"))
+    if (pinned && chunks <= 1) selected
+    else parts.fold(selected.repartition(keys: _*))(selected.repartition(_, keys: _*))
+  }
+
   /** [[servePersisted]]'s per-segment rows as a (qid, nid, score) frame. */
   private def perSegmentFrame(spark: SparkSession,
       rows: org.apache.spark.rdd.RDD[(Long, Long, Double)]): DataFrame = {
@@ -1532,7 +1548,7 @@ object Ann {
     * picks the approximate or exact score provider once per search
     * (`GraphSearcher.java:221-243`). Only build it when `sg.qIdx` is
     * non-empty. */
-  private final class SegView(val sg: SegTaskGroup,
+  private[index] final class SegView(val sg: SegTaskGroup,
       adcB: Option[SidecarModels], resAdcB: Option[ResAdc], mc: Int,
       tabs: TaskAdcTables) {
     private val (entry, live) = sg.resolve()
@@ -1643,7 +1659,7 @@ object Ann {
     * is k·dim doubles (~131 KB) and a table build is k·dim flops per
     * (task, model, query) — a few dozen node scores' worth, noise vs the
     * beam. */
-  private def loadAdcTables(
+  private[index] def loadAdcTables(
       spark: SparkSession,
       path: String,
       tok: String,
@@ -1712,7 +1728,7 @@ object Ann {
     * segments searched sequentially within a task share each query's
     * tables, exactly like the former driver-precomputed broadcast, minus
     * the O(batch × m × k) driver/broadcast footprint. */
-  private final class TaskAdcTables {
+  private[index] final class TaskAdcTables {
     private val memo =
       scala.collection.mutable.Map.empty[(Int, Long), (Array[Double], Array[Double], Double)]
     def apply(model: graft.operators.PQModel, qKey: Long, qv: Array[Float])
@@ -1838,7 +1854,7 @@ object Ann {
 
   /** Metric code for the ADC score combiner (0 = EUCLIDEAN, 1 = DOT,
     * 2 = COSINE) — must stay in lockstep with [[Vamana.adcCombine]]. */
-  private def adcMetricCode(metric: String): Int = metric.toUpperCase match {
+  private[index] def adcMetricCode(metric: String): Int = metric.toUpperCase match {
     case "EUCLIDEAN" => 0
     case "DOT_PRODUCT" | "DOT" => 1
     case _ => 2
@@ -1959,7 +1975,7 @@ object Ann {
     * segment's assembled graph is cache-resident; rows are copied for
     * decode + assembly ONLY on a miss. See the scaffold's inline note for
     * the measurements (tuple decode was ~75% of a routed 4M x 64 batch). */
-  private final class SegTaskGroup(
+  private[index] final class SegTaskGroup(
       val segId: String, val chunk: Int,
       path: String, tok: String, segToks: Map[String, String], p: Params,
       segQueriesB: Option[org.apache.spark.broadcast.Broadcast[Map[String, Array[Int]]]],
@@ -2044,7 +2060,7 @@ object Ann {
   /** One-pass grouping of a serving task's InternalRows into
     * [[SegTaskGroup]]s (insertion order), allocating a String per SEGMENT
     * (not per row — consecutive rows' seg bytes compare via UTF8String). */
-  private def groupSegTask(
+  private[index] def groupSegTask(
       it: Iterator[org.apache.spark.sql.catalyst.InternalRow],
       path: String, tok: String, segToks: Map[String, String], p: Params,
       segQueriesB: Option[org.apache.spark.broadcast.Broadcast[Map[String, Array[Int]]]],
@@ -2142,549 +2158,6 @@ object Ann {
       }
     }
     mergePaged(perSegmentFrame(spark, perSegment), pages)
-  }
-
-  /** Cross-invocation pagination session (T6 beyond the reference's
-    * in-process `GraphSearcher.resume`): the per-(query, segment) beam
-    * cursors are PERSISTED under `statePath`, so pagination continues from
-    * a new driver/JVM without re-searching earlier pages. Open with
-    * [[openPagedSession]] (returns page 1), continue with
-    * [[nextSessionPage]]; each call returns (qid, rank, nid, score) for
-    * its page, pages are globally ordered and disjoint, and match the
-    * batch route ([[searchIndexPaged]], exact path) page for page.
-    *
-    * Layout under statePath: `cursors/` (qid, seg, qvec + exported beam
-    * state) and `pool/` (the page/pool split relation; rank 0 rows are the
-    * produced-but-not-yet-emitted candidates, rank > 0 rows were emitted
-    * as their page and are filtered out on the next read). State cost per
-    * (query, PROBED segment) is O(visited nodes) — the bitsets export
-    * density-adaptive ([[Vamana.encodeBits]]), and on clustered trees only
-    * the ~sqrt(segments) probed segments carry cursors — so state scales
-    * with beam work, not with tree size. Writes go to a temp dir and swap
-    * in atomically per page; a page's fixed cost is three sequential job
-    * walls (search checkpoint, split+pool write with the cursors write
-    * overlapped, one tiny page read-back) — scheduler constants,
-    * independent of tree size. Exact traversal. */
-  def openPagedSession(
-      spark: SparkSession,
-      path: String,
-      statePath: String,
-      queries: DataFrame,
-      k: Int,
-      ef: Int,
-      params: Params = Params(),
-      deletes: Option[DataFrame] = None,
-      /** See [[searchIndex]]: AutoProbe (default) routes on clustered
-        * trees — only probed segments get durable cursors, so session
-        * state scales with sqrt(segments), not segments. */
-      probeSegments: Int = AutoProbe,
-      /** >0 = compressed session (see [[sessionPage]]): the persisted
-        * cursor traverses on ADC scores, pages rerank exactly. */
-      rerankK: Int = 0): DataFrame = {
-    val fs = new org.apache.hadoop.fs.Path(statePath)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    require(!fs.exists(new org.apache.hadoop.fs.Path(s"$statePath/cursors")),
-      s"session already open at $statePath — use nextSessionPage")
-    sessionPage(spark, path, statePath, Some(queries), k, ef, params, deletes,
-      probeSegments, rerankK)
-  }
-
-  /** Next page of a persisted session (see [[openPagedSession]]). */
-  def nextSessionPage(
-      spark: SparkSession,
-      path: String,
-      statePath: String,
-      k: Int,
-      ef: Int,
-      params: Params = Params(),
-      deletes: Option[DataFrame] = None,
-      /** Must match the mode the session was OPENED with (guarded). */
-      rerankK: Int = 0): DataFrame =
-    sessionPage(spark, path, statePath, None, k, ef, params, deletes,
-      rerankK = rerankK)
-
-  private def sessionPage(
-      spark: SparkSession,
-      path: String,
-      statePath: String,
-      queriesOpt: Option[DataFrame],
-      k: Int,
-      ef: Int,
-      params: Params,
-      deletes: Option[DataFrame],
-      /** Segment routing for the CREATE page (see [[searchIndex]]):
-        * AutoProbe routes on clustered trees, exhaustive otherwise. Later
-        * pages resume the cursors that exist — no re-routing. */
-      probeSegments: Int = AutoProbe,
-      /** >0 = COMPRESSED session on a pqM > 0 tree: the persisted cursor
-        * traverses on ADC scores (residual on clustered trees) and each
-        * page's per-segment candidates rerank exactly before the pool
-        * merge — jvector's resume on the same compressed SSP
-        * (`GraphSearcher.java:509-547`). A session opens in one mode and
-        * stays there (guarded). Unlike the exact mode, page membership
-        * follows approx DISCOVERY order (the reference's own trade):
-        * pages are exact-scored, disjoint, and complete, but a later page
-        * may hold an exactly-better hit than an earlier one emitted. */
-      rerankK: Int = 0): DataFrame = {
-    import spark.implicits._
-    val p = params
-    val tok = buildToken(spark, path)
-    val gen = treeGen(spark, path, tok)
-    val segToks = gen.segToks
-    val twoPhase = rerankK > 0
-    val adcB = loadAdcTables(spark, path, tok, rerankK)
-    val resAdcB = loadResAdc(spark, path, tok, rerankK)
-    // candidates resumed per (query, segment, page) on the compressed
-    // route: oversampled like the batch routes' ADC frontier
-    val pageCands = math.max(math.max(k, rerankK), p.adcFrontierPerK * k)
-    val fs = new org.apache.hadoop.fs.Path(statePath)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-
-    val qArrOpt: Option[Array[(Long, Array[Float])]] = queriesOpt.map(collectQueries)
-    val qB = qArrOpt.map(spark.sparkContext.broadcast(_))
-
-    val pinnedOpt = pinnedIndexes.get(pinKey(path))
-    val raw = pinnedOpt.getOrElse(gen.raw)
-    // The session gains the batch routes' clustered-serving default (r13,
-    // the durable-state bound): on a routable tree, ONLY the per-query
-    // probed segments get cursors — the same routeQueries call as the
-    // batch routes' scaffold ([[servePersisted]]), so session pages stay
-    // page-for-page identical to the batch route. State then scales O(sqrt(S)) per query instead of
-    // O(S): at 4M x 64 the exhaustive session exported 64 cursor blobs per
-    // query where the batch route probed 8. Routing happens ONLY on
-    // create — later pages resume exactly the cursors that exist.
-    val segQueriesB = qArrOpt.flatMap(qa =>
-      routeQueries(spark, gen, qa, p, probeSegments))
-    // Index rows travel through the SAME shared projection + warm
-    // fast path as the batch routes (groupSegTask): the session previously
-    // union-tagged cursor rows INTO the index scan and paid a 15-column
-    // Dataset decode of every index row on EVERY page — the exact
-    // pinned-bytes-proportional cost the top-k route's fast path removed
-    // (~75% of a warm 4M batch, NOTES_r11 §1). Cursor rows now travel as a
-    // SEPARATE co-partitioned RDD zipped with the index partitions — still
-    // no driver-side collect of the (large) cursor blobs. Sharing
-    // groupSegTask also shares the batch routes' SegmentCache assemblies
-    // (codes + hierarchy included) instead of a shadow "session|" entry.
-    val parts = spark.sessionState.conf.numShufflePartitions
-    // create page: prune unprobed segments BEFORE the scan (directory-level
-    // on unpinned trees), exactly like the batch routes. Next pages must
-    // NOT prune — the cursor set dictates which segments resume.
-    val rawScan = (queriesOpt, segQueriesB) match {
-      case (Some(_), Some(b)) if b.value.nonEmpty =>
-        raw.filter(col("seg").isin(b.value.keys.toSeq: _*))
-      case (Some(_), Some(_)) => raw.filter(lit(false))
-      case _ => raw
-    }
-    val selBase = segmentSelect(withLiveCol(rawScan, deletes, keepLayout = pinnedOpt.isDefined))
-      .withColumn("__chunk", lit(0))
-    // pinned: everything since the pin is narrow (keepLayout), so the index
-    // side runs WITHOUT a per-page shuffle (measured at 4M x 64: the forced
-    // repartition alone held session pages at ~2.3s vs 0.34s for the
-    // shuffle-free paged route). The CURSOR side aligns to whatever the
-    // index layout actually is via the memoized seg->partition map below —
-    // cursors are the tiny side, so they do the moving.
-    val sel = if (pinnedOpt.isDefined) selBase else selBase.repartition(parts, col("seg"))
-    val idxRdd = sel.queryExecution.toRdd
-    val liveConst = deletes.isEmpty
-    val nQ = qB.map(_.value.length).getOrElse(1)
-    val mc = adcMetricCode(p.metric)
-
-    // BIG-session decision, made BEFORE the page materializes: it shapes
-    // the cursors READ (smaller columnar batches), the cursors WRITE (no
-    // 8-file coalesce), and the page/pool split strategy. Known at open
-    // from cursor rows x page candidates (no counting job), recorded as a
-    // `_big` marker so every later page — any JVM — takes the same path;
-    // the driver-split path also re-checks per page and can write the
-    // marker mid-session (see below).
-    val bigMarker = new org.apache.hadoop.fs.Path(s"$statePath/_big")
-    val bigSession: Boolean =
-      if (queriesOpt.isDefined) {
-        val cursorRows: Long = segQueriesB match {
-          case Some(b) => b.value.valuesIterator.map(_.length.toLong).sum
-          case None => nQ.toLong * gen.segmentCount
-        }
-        val big = cursorRows * math.max(k, pageCands) > BigSessionRows
-        if (big) fs.create(bigMarker, true).close() else fs.delete(bigMarker, false)
-        big
-      } else fs.exists(bigMarker)
-
-    // full tuple type spelled out (not an alias): Spark's implicit
-    // Encoder derivation does not see through type aliases
-    def emit(segId: String, qid: Long, qv: Array[Float], g: Vamana,
-        ids: Array[Long], st: Vamana.SearchState,
-        found: Array[(Int, Double)]): Iterator[(String, Int, Long, Array[Float],
-        Array[Byte], Array[Byte], Array[Long], Array[Long], Long, Double)] = {
-      val (vis, ret, fr, ev) = g.exportCursor(st)
-      Iterator.single((segId, 1, qid, qv, vis, ret, fr, ev, 0L, 0.0)) ++
-        found.iterator.map { case (l, s) =>
-          (segId, 0, qid, null: Array[Float], null: Array[Byte],
-            null: Array[Byte], null: Array[Long], null: Array[Long], ids(l), s)
-        }
-    }
-
-    val outRdd: org.apache.spark.rdd.RDD[(String, Int, Long, Array[Float],
-      Array[Byte], Array[Byte], Array[Long], Array[Long], Long, Double)] = queriesOpt match {
-      case Some(_) => // create: queries ride the broadcast; with routing
-        // active, each segment searches only the queries routed TO it
-        idxRdd.mapPartitions { it =>
-          val tabs = new TaskAdcTables
-          groupSegTask(it, path, tok, segToks, p, segQueriesB, nQ, 1, liveConst)
-            .flatMap { sg =>
-              if (sg.qIdx.isEmpty) Iterator.empty
-              else {
-                val seg = new SegView(sg, adcB, resAdcB, mc, tabs)
-                val g = seg.graph
-                sg.qIdx.iterator.flatMap { qi =>
-                  val (qid, qv) = qB.get.value(qi)
-                  seg.approx(qi, qv) match {
-                    case Some(approx) =>
-                      // compressed cursor: approx traversal, exact rerank
-                      // of this page's candidates before the pool merge
-                      val (cands, st) = g.searchResumableScored(approx, pageCands,
-                        math.max(ef, pageCands), seg.accept)
-                      val exact = g.exactScorer(qv)
-                      emit(sg.segId, qid, qv, g, seg.ids, st,
-                        cands.map { case (l, _) => (l, exact(l)) })
-                    case None =>
-                      val (first, st) = g.searchResumable(qv, k, ef, seg.accept)
-                      emit(sg.segId, qid, qv, g, seg.ids, st, first)
-                  }
-                }
-              }
-            }
-        }
-      case None =>
-        val cursorsPath = new org.apache.hadoop.fs.Path(s"$statePath/cursors")
-        require(fs.exists(cursorsPath),
-          s"no open session at $statePath — call openPagedSession first")
-        // write-through memo: if THIS driver wrote the current state dirs
-        // (filesystem fingerprint match), the guard fields are known and
-        // the cursors read can skip parquet schema inference — two fixed
-        // per-page driver costs. A fresh JVM or an externally-modified dir
-        // misses the memo and takes the full read path (cross-JVM resume
-        // untouched).
-        val memo = SessMemoCache.get(statePath)
-          .filter(_.cursorsFp == dirFingerprint(fs, cursorsPath))
-        val cursors = memo match {
-          case Some(_) => spark.read.schema(
-            "seg string, qid bigint, qvec array<float>, visited binary, " +
-              "returned binary, frontier array<bigint>, evicted array<bigint>, " +
-              "tok string, two_phase boolean").parquet(cursorsPath.toString)
-          case None => spark.read.parquet(cursorsPath.toString)
-        }
-        // cursors index LOCAL ids of the segment assembly they were
-        // exported from; a rebuild/repair/compact under the session would
-        // silently remap those ids to different rows — fail loudly instead
-        // ONE guard job for both checks (these run per page; two separate
-        // distinct().collect()s were two fixed-cost jobs)
-        val (cursorToks, storedTwoPhase) = memo match {
-          case Some(mm) => (Array(mm.tok), mm.twoPhase)
-          case None =>
-            val hasTp = cursors.columns.contains("two_phase")
-            val guardRows = cursors
-              .select(col("tok") +: (if (hasTp) Seq(col("two_phase")) else Nil): _*)
-              .distinct().collect()
-            (guardRows.map(_.getString(0)).distinct,
-              // mode guard source: a session opened compressed must resume
-              // compressed (the cursor's visited/returned sets reflect
-              // APPROX traversal; resuming exact over them would silently
-              // mix semantics) — and vice versa. Pre-r13 sessions lack the
-              // column: exact.
-              hasTp && guardRows.exists(_.getBoolean(1)))
-        }
-        require(storedTwoPhase == twoPhase,
-          s"session at $statePath was opened with " +
-            s"${if (storedTwoPhase) "rerankK > 0 (compressed)" else "rerankK = 0 (exact)"} — " +
-            "pass the same mode to nextSessionPage")
-        require(cursorToks.forall(_ == tok),
-          s"index at $path changed since this session opened " +
-            s"(build token ${cursorToks.mkString(",")} != $tok) — " +
-            "persisted cursors cannot survive a rebuild; open a new session")
-        // seg -> partition map of the ACTUAL index layout (one tiny string
-        // per segment), memoized per (path+pin identity, tok): pinned
-        // layouts are fixed while pinned, unpinned layouts are the
-        // deterministic hash repartition above. The custom partitioner
-        // then lands each cursor on its segment's partition BY
-        // CONSTRUCTION — no assumption about Spark's hash placement, no
-        // index-side shuffle, no driver collect of cursor blobs.
-        // key includes the partition count: an unpinned layout is a
-        // function of (plan, shuffle partitions) — a conf change between
-        // pages must recompute the map, not serve stale placements
-        val pinId = pinnedOpt.map(System.identityHashCode).getOrElse(0)
-        val segPart: Map[String, Int] = SegPartCache.getOrCompute(
-          (s"$path|$pinId|${idxRdd.getNumPartitions}", tok),
-          idxRdd.mapPartitionsWithIndex { (pid, it) =>
-            val segs = scala.collection.mutable.Set.empty[String]
-            var lastU8: org.apache.spark.unsafe.types.UTF8String = null
-            it.foreach { r =>
-              val u8 = r.getUTF8String(0)
-              if (lastU8 == null || !u8.equals(lastU8)) {
-                lastU8 = u8.clone(); segs += lastU8.toString
-              }
-            }
-            segs.iterator.map(s => (s, pid))
-          }.collect().toMap)
-        val nIdxParts = idxRdd.getNumPartitions
-        val bySeg = new org.apache.spark.Partitioner {
-          def numPartitions: Int = nIdxParts
-          def getPartition(key: Any): Int =
-            segPart.getOrElse(key.asInstanceOf[String],
-              throw new IllegalStateException(
-                s"session cursor references segment $key absent from the " +
-                  s"index at $path — the index changed under the open session"))
-        }
-        val curRdd = cursors
-          .select(col("seg"), col("qid").cast("long"), col("qvec").cast("array<float>"),
-            col("visited"), col("returned"), col("frontier"), col("evicted"))
-          .as[(String, Long, Array[Float], Array[Byte], Array[Byte], Array[Long], Array[Long])]
-          .rdd
-          .map(t => (t._1, t))
-          .partitionBy(bySeg)
-          .values
-        idxRdd.zipPartitions(curRdd) { (idxIt, curIt) =>
-          val tabs = new TaskAdcTables
-          // index side consumed first (groupSegTask drains it), then the
-          // partition's cursors resume against the resident assemblies
-          val groups = groupSegTask(idxIt, path, tok, segToks, p, None, nQ, 1, liveConst)
-            .map(g => g.segId -> g).toMap
-          curIt.toArray.groupBy(_._1).iterator.flatMap { case (segId, curs) =>
-            groups.get(segId) match {
-              case None =>
-                // co-partitioning guarantees the segment's index rows land
-                // here; an absent group means the segment vanished under
-                // the session (same class of staleness the token guards)
-                throw new IllegalStateException(
-                  s"session cursor for segment $segId found no index rows — " +
-                    s"index at $path changed under the open session")
-              case Some(sg) =>
-                val seg = new SegView(sg, adcB, resAdcB, mc, tabs)
-                val g = seg.graph
-                curs.iterator.flatMap { c =>
-                  seg.approx(c._2, c._3) match {
-                    case Some(approx) =>
-                      // resume on the SAME approx scorer the cursor was
-                      // exported from (packed heap scores stay on one
-                      // scale), exact-rerank the new candidates
-                      val st = g.importCursorScored(approx, seg.accept,
-                        c._4, c._5, c._6, c._7)
-                      val exact = g.exactScorer(c._3)
-                      emit(segId, c._2, c._3, g, seg.ids, st,
-                        g.resume(st, pageCands, math.max(ef, pageCands))
-                          .map { case (l, _) => (l, exact(l)) })
-                    case None =>
-                      val st = g.importCursor(c._3, seg.accept, c._4, c._5, c._6, c._7)
-                      emit(segId, c._2, c._3, g, seg.ids, st, g.resume(st, k, ef))
-                  }
-                }
-            }
-          }
-        }
-    }
-    // materialize ONCE in memory (localCheckpoint beats any write-then-
-    // read-back scheme here — measured: a partitionBy("kind") parquet
-    // round-trip for the same purpose cost +0.4s/page at 1M x 64), then
-    // the cursors write streams from the checkpointed blocks and OVERLAPS
-    // the page/pool split below.
-    //
-    // BIG sessions invert that trade: their durable cursor state runs to
-    // GBs (10^5 queries x ~8 probed segments x ~8 KB of bitset/heap blobs
-    // per cursor — 6.5-8.4 GB measured at 1M x 64, NOTES_r14 §4), so
-    // holding the page's out relation in block-manager MEMORY doubled the
-    // footprint and OOMed a 16 GB driver. Their materialization is a
-    // STREAMING parquet write partitioned by kind: blobs flow from the
-    // search tasks to disk without ever being resident all at once, the
-    // kind=1 partition then BECOMES the cursors dir by rename (no second
-    // write of the blobs), and the page/pool split reads the small kind=0
-    // rows. The +0.4 s disk round-trip that lost to localCheckpoint on
-    // small sessions is noise against a big page's wall. Their cursor
-    // READS (the next page's resume pass) also run at a 256-row columnar
-    // batch — 4096-row batches of multi-KB blob rows put multi-ten-MB
-    // column vectors on every task at once.
-    val outTmp = new org.apache.hadoop.fs.Path(s"$statePath/out_tmp")
-    val batchKey = "spark.sql.parquet.columnarReaderBatchSize"
-    val savedBatch = if (bigSession) Some(spark.conf.get(batchKey, "4096")) else None
-    if (bigSession) spark.conf.set(batchKey, "256")
-    val outBase = spark.createDataset(outRdd)
-      .toDF("seg", "kind", "qid", "qvec", "visited", "returned", "frontier",
-        "evicted", "node_id", "score")
-    val out =
-      if (!bigSession)
-        outBase.localCheckpoint(true) // materialize BEFORE touching old state dirs
-      else {
-        fs.delete(outTmp, true)
-        outBase
-          .withColumn("tok", lit(tok)).withColumn("two_phase", lit(twoPhase))
-          .write.partitionBy("kind").parquet(outTmp.toString)
-        spark.read.option("basePath", outTmp.toString).parquet(outTmp.toString)
-      }
-    savedBatch.foreach(v => spark.conf.set(batchKey, v))
-
-    def rename(src: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path): Unit = {
-      fs.delete(dst, true)
-      if (!fs.rename(src, dst))
-        throw new IllegalStateException(s"session state swap failed for $dst")
-    }
-    // atomic-ish state swap: the new dir lands fully, then replaces the old
-    def swap(df: DataFrame, name: String): Unit = {
-      val tmp = new org.apache.hadoop.fs.Path(s"$statePath/${name}_tmp")
-      df.write.mode("overwrite").parquet(tmp.toString)
-      rename(tmp, new org.apache.hadoop.fs.Path(s"$statePath/$name"))
-    }
-    // the cursors swap depends ONLY on the materialized out — kick it off
-    // NOW so it overlaps the page/pool split computation below (each is a
-    // fixed-cost job; overlapping them shaves one job's wall from every
-    // page). Small sessions write the 9-column cursors relation from the
-    // checkpointed blocks (coalesce(8): cursor state is a few MB and the
-    // commit protocol's per-file renames were the cost); big sessions
-    // already streamed their cursors to disk as out_tmp/kind=1 — the swap
-    // is ONE rename, the blobs are never written twice.
-    val swapPool = java.util.concurrent.Executors.newFixedThreadPool(1)
-    val cursorsFut = swapPool.submit(new Runnable {
-      def run(): Unit =
-        if (bigSession)
-          rename(new org.apache.hadoop.fs.Path(s"$outTmp/kind=1"),
-            new org.apache.hadoop.fs.Path(s"$statePath/cursors"))
-        else {
-          val cursorsDf = out.filter(col("kind") === 1)
-            .select(col("qid"), col("seg"), col("qvec"), col("visited"),
-              col("returned"), col("frontier"), col("evicted"), lit(tok).as("tok"),
-              lit(twoPhase).as("two_phase"))
-            .coalesce(8)
-          swap(cursorsDf, "cursors")
-        }
-    })
-
-    val producedScored = out.filter(col("kind") === 0)
-      .select(col("qid").cast("long"), col("node_id").cast("long").as("nid"),
-        col("score").cast("double"))
-    val poolPath = new org.apache.hadoop.fs.Path(s"$statePath/pool")
-
-    // BIG sessions keep the page/pool split DISTRIBUTED: the driver-side
-    // split below collects candidate triples bounded by cursors x
-    // pageCands, which a 10^5-query session would turn into a driver
-    // memory hazard (decision hoisted above — it also shapes the cursor
-    // read/write).
-    if (bigSession) {
-      // distributed split (one grouped shuffle pass, pool dir = the whole
-      // split relation): candidates never land on the driver. The page
-      // frame's lineage reads the NEW pool dir — consume it before asking
-      // for the next page (it replaces that dir).
-      val poolDfB =
-        if (fs.exists(poolPath)) {
-          val rawP = spark.read.parquet(poolPath.toString)
-          (if (rawP.columns.contains("rank")) rawP.filter(col("rank") === 0)
-           else rawP).select(col("qid"), col("nid"), col("score"))
-        } else spark.emptyDataset[(Long, Long, Double)].toDF("qid", "nid", "score")
-      val split = dropDeleted(producedScored.unionByName(poolDfB), deletes)
-        .select(col("qid").cast("long"), col("nid").cast("long"),
-          col("score").cast("double"))
-        .as[(Long, Long, Double)]
-        .groupByKey(_._1)
-        .flatMapGroups { (qid: Long, it: Iterator[(Long, Long, Double)]) =>
-          val rows = it.toArray.sortBy { case (_, nid, s) => (-s, nid) }
-          rows.iterator.zipWithIndex.map { case ((_, nid, s), i) =>
-            (qid, if (i < k) i + 1 else 0, nid, s)
-          }
-        }
-        .toDF("qid", "rank", "nid", "score")
-      val poolTmp = new org.apache.hadoop.fs.Path(s"$statePath/pool_tmp")
-      try {
-        split.write.mode("overwrite").parquet(poolTmp.toString)
-        rename(poolTmp, poolPath)
-        cursorsFut.get()
-        // kind=1 is renamed away and kind=0 is consumed into the pool —
-        // the streamed materialization dir is done
-        fs.delete(outTmp, true)
-        SessMemoCache.remove(statePath) // big sessions never memo the pool
-        // localCheckpoint: every page reads the SAME pool path, so a lazy
-        // return would canonicalize to the same plan page after page —
-        // and Spark's CacheManager would then serve a user's cached page 1
-        // for page 2 (plan-identity substitution). The checkpoint makes
-        // each page a distinct, materialized RDD-backed frame, also immune
-        // to the next page's pool rename.
-        return spark.read.parquet(poolPath.toString).filter(col("rank") > 0)
-          .select(col("qid"), col("rank").cast("int"), col("nid"), col("score"))
-          .localCheckpoint(true)
-      } finally swapPool.shutdown()
-    }
-
-    // pool rows come from the write-through memo when THIS driver wrote
-    // the current pool dir (fingerprint match) — skipping a parquet
-    // listing + scan per page; fresh JVMs read the dir
-    val poolMemo: Option[Array[(Long, Long, Double)]] = SessMemoCache
-      .get(statePath).filter(_.poolFp == dirFingerprint(fs, poolPath)).map(_.pool)
-    // pooled candidates were scored on an EARLIER page: re-filter against
-    // the CURRENT tombstones (the fresh rows were live-filtered in-task,
-    // but the pool predates deletes added between pages). The filter is an
-    // executor-side anti-join over the pool dir (the memo holds the same
-    // rows), so what reaches the driver is bounded by the candidates, not
-    // by the deletion count. The rewritten pool below inherits the filter,
-    // so the state self-heals.
-    //
-    // The page/pool SPLIT runs on the DRIVER: candidates are (qid, nid,
-    // score) triples bounded by queries x probed segments x pageCands plus
-    // the carried pool — the same order as the query batch this route
-    // already collects for its broadcast (the big per-row payloads, cursor
-    // blobs, never leave the executors). A distributed groupByKey split
-    // measured 0.4-0.5s/page at 1M x 64 in pure shuffle+commit fixed costs
-    // for ~0.2 MB of data; collecting and splitting here cuts the page's
-    // critical path to the search checkpoint plus ONE single-task pool
-    // write. Ordering contract unchanged (score desc, nid asc — TopK.udf).
-    val candRows: Array[(Long, Long, Double)] = (poolMemo, deletes) match {
-      case (Some(cached), None) =>
-        producedScored.as[(Long, Long, Double)].collect() ++ cached
-      case _ =>
-        val poolDf =
-          if (fs.exists(poolPath))
-            spark.read.parquet(poolPath.toString)
-              .select(col("qid"), col("nid"), col("score"))
-          else spark.emptyDataset[(Long, Long, Double)].toDF("qid", "nid", "score")
-        dropDeleted(producedScored.unionByName(poolDf), deletes)
-          .select(col("qid").cast("long"), col("nid").cast("long"),
-            col("score").cast("double"))
-          .as[(Long, Long, Double)].collect()
-    }
-    // per-page re-check of the big-session bound: the open-time decision
-    // used ONE page's production bound, but the carried pool accumulates
-    // across pages. Flip the NEXT page to the distributed split before the
-    // driver collect can keep growing — this page's collect stays bounded
-    // by the threshold plus one page's production (itself under the
-    // threshold, or the open check would have marked the session big).
-    if (candRows.length > BigSessionRows) fs.create(bigMarker, true).close()
-    val pageBuf = scala.collection.mutable.ArrayBuffer.empty[(Long, Int, Long, Double)]
-    val poolBuf = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
-    candRows.groupBy(_._1).foreach { case (qid, rows) =>
-      val sorted = rows.sortBy { case (_, nid, s) => (-s, nid) }
-      var i = 0
-      while (i < sorted.length) {
-        val (_, nid, s) = sorted(i)
-        if (i < k) pageBuf += ((qid, i + 1, nid, s))
-        else poolBuf += ((qid, nid, s))
-        i += 1
-      }
-    }
-    // the pool file is written DRIVER-side (parquet-hadoop writer, same
-    // schema spark.read.parquet sees on a cross-JVM resume): the rows are
-    // already local, and even a single-task Spark job for this ~sub-MB
-    // file measured 0.2s/page in launch+commit fixed costs
-    try {
-      val poolTmp = new org.apache.hadoop.fs.Path(s"$statePath/pool_tmp")
-      fs.delete(poolTmp, true)
-      writePoolParquet(fs.getConf, new org.apache.hadoop.fs.Path(poolTmp,
-        "part-00000.parquet"), poolBuf)
-      rename(poolTmp, poolPath)
-      // the overlapped cursors swap joins here so a failure in EITHER
-      // write surfaces before the page is handed back
-      cursorsFut.get()
-      // write-through memo for the NEXT page (fingerprints taken after
-      // both renames; bounded — worst case the next page reads from disk)
-      SessMemoCache.put(statePath, SessMemo(
-        dirFingerprint(fs, new org.apache.hadoop.fs.Path(s"$statePath/cursors")),
-        dirFingerprint(fs, poolPath), tok, twoPhase, poolBuf.toArray))
-      // page sorted (qid, rank) for a deterministic, lineage-free return
-      spark.createDataset(pageBuf.sortBy(t => (t._1, t._2)).toIndexedSeq)
-        .toDF("qid", "rank", "nid", "score")
-    } finally swapPool.shutdown()
   }
 
   /** Transposed neighbor-code blocks for fused-ADC traversal (Q7, jvector
@@ -2800,7 +2273,7 @@ object Ann {
     * entry per rebuild (a path holds at most one live entry). A tree that
     * moves to a new path per generation (the service's `gen=K`) needs
     * [[removePaths]] when a generation is reclaimed. */
-  private final class TokenKeyedMemo[V] {
+  private[index] final class TokenKeyedMemo[V] {
     private val m = new scala.collection.concurrent.TrieMap[(String, String), V]()
     def getOrCompute(k: (String, String), f: => V): V =
       m.getOrElse(k, {
@@ -2814,59 +2287,6 @@ object Ann {
     def clear(): Unit = m.clear()
   }
 
-  /** Write-through memo for a persisted session's SMALL durable state
-    * (guard fields + candidate-pool rows — never the cursor blobs), keyed
-    * by statePath and validated by a filesystem FINGERPRINT of the state
-    * dirs: the same driver that wrote a page skips re-reading what it just
-    * wrote, while a fresh JVM (or an externally-modified dir) misses the
-    * memo and takes the full parquet read path — cross-JVM resume is the
-    * session feature and stays fully disk-backed. Pool rows are bounded
-    * by queries x probed segments x page candidates, the same order the
-    * route already holds driver-side for its query broadcast. */
-  private case class SessMemo(cursorsFp: String, poolFp: String, tok: String,
-    twoPhase: Boolean, pool: Array[(Long, Long, Double)])
-  private object SessMemoCache {
-    /** Eviction budget is TOTAL POOL ROWS retained, not session count: a
-      * boxed (Long, Long, Double) triple is ~110 bytes of driver heap
-      * (Tuple3 + two boxed Longs + a boxed Double), so a row-blind
-      * 64-session cap could retain 64 near-threshold pools — tens of GB.
-      * 2M rows ≈ ~220 MB worst case; eviction is insertion-ordered and a
-      * single over-budget pool is simply never memoized (the next page
-      * reads the pool dir from disk — correctness is disk-backed always). */
-    private[graft] val MaxPoolRows: Long = 2000000L
-    private val m = new java.util.LinkedHashMap[String, SessMemo]()
-    def get(k: String): Option[SessMemo] = m.synchronized(Option(m.get(k)))
-    def put(k: String, v: SessMemo): Unit = m.synchronized {
-      m.remove(k)
-      if (v.pool.length <= MaxPoolRows) {
-        m.put(k, v)
-        var total = 0L
-        val vs = m.values.iterator()
-        while (vs.hasNext) total += vs.next().pool.length.toLong
-        val it = m.entrySet().iterator()
-        while (total > MaxPoolRows && it.hasNext) {
-          val e = it.next()
-          if (e.getKey != k) { total -= e.getValue.pool.length; it.remove() }
-        }
-      }
-    }
-    def remove(k: String): Unit = m.synchronized { m.remove(k); () }
-    def clear(): Unit = m.synchronized(m.clear())
-  }
-
-  /** Candidate-row bound above which a persisted session keeps its
-    * page/pool split DISTRIBUTED instead of the driver-side fast path
-    * (boxed triples are ~110 bytes each — 2M rows ≈ ~220 MB of driver
-    * heap). Decided at open time from cursor rows x page candidates,
-    * recorded as a `_big` marker in the session state, and RE-EVALUATED
-    * per page against the actual collected candidate count: the carried
-    * pool grows across pages (each page adds up to cursorRows x pageCands
-    * rows and retires only nQ x k), so a session opened under the bound
-    * can outgrow it mid-session — the marker then flips all later pages
-    * to the distributed path. A var so specs can force the distributed
-    * path on small fixtures. */
-  private[graft] var BigSessionRows: Long = 2000000L
-
   /** Target resident rows per GROUPED clustered-build task (the grouping in
     * [[buildIndexClustered]] / [[buildIndexAlignedTo]]): cells per task =
     * min(256, target / rowsPerCell), floored so the cluster stays saturated
@@ -2876,41 +2296,6 @@ object Ann {
     * cells. A var so GroupedBuildSpec can force both layouts on one
     * fixture. */
   private[graft] var GroupRowsTarget: Long = 1L << 17
-
-  /** Driver-side parquet write of a session's (qid, nid, score) pool —
-    * byte-level parquet via parquet-hadoop, schema-compatible with
-    * `spark.read.parquet` so a cross-JVM resume reads it like any other
-    * pool dir. No Spark job: the rows are already local and tiny. */
-  private def writePoolParquet(conf: org.apache.hadoop.conf.Configuration,
-      file: org.apache.hadoop.fs.Path,
-      rows: scala.collection.Seq[(Long, Long, Double)]): Unit = {
-    val schema = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
-      "message pool { required int64 qid; required int64 nid; required double score; }")
-    val c = new org.apache.hadoop.conf.Configuration(conf)
-    org.apache.parquet.hadoop.example.GroupWriteSupport.setSchema(schema, c)
-    val w = org.apache.parquet.hadoop.example.ExampleParquetWriter.builder(file)
-      .withConf(c).withType(schema).build()
-    try rows.foreach { case (q, n, s) =>
-      val g = new org.apache.parquet.example.data.simple.SimpleGroup(schema)
-      g.add("qid", q); g.add("nid", n); g.add("score", s)
-      w.write(g)
-    } finally w.close()
-  }
-
-  /** Order-insensitive status fingerprint of a state dir (names + lengths
-    * + mtimes) — one FS listing, no Spark job, no file reads. */
-  private def dirFingerprint(fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): String =
-    if (!fs.exists(p)) ""
-    else fs.listStatus(p).map(s =>
-      s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
-      .sorted.mkString("|")
-
-  /** seg -> RDD-partition map of a session's index layout (one tiny entry
-    * per segment), memoized per (path + pin identity, build token): lets
-    * session cursors partition themselves onto the index's ACTUAL layout
-    * instead of forcing a per-page index shuffle. */
-  private val SegPartCache = new TokenKeyedMemo[Map[String, Int]]
 
   /** Segment routing (IVF over segments) shared by the search entry points:
     * with probeSegments > 0, each query is assigned its probeSegments
@@ -3913,13 +3298,13 @@ object Ann {
     * false for a node id in `deletes` ([[inIds]]), so a task reads
     * liveness from its own rows (jvector's one live-nodes `Bits` that
     * search, `removeDeletedNodes` and the compactor all consult). */
-  private def withLiveCol(raw: DataFrame, deletes: Option[DataFrame],
+  private[index] def withLiveCol(raw: DataFrame, deletes: Option[DataFrame],
       keepLayout: Boolean = false): DataFrame =
     raw.withColumn("__live", deletes.fold(lit(true))(d => !inIds(d, keepLayout = keepLayout)))
 
   /** `cands` (qid, nid, score) without the tombstoned `nid`s: the paged
     * session's filter for pool candidates scored before later deletes. */
-  private def dropDeleted(cands: DataFrame, deletes: Option[DataFrame]): DataFrame =
+  private[index] def dropDeleted(cands: DataFrame, deletes: Option[DataFrame]): DataFrame =
     deletes.fold(cands)(d => cands.filter(!inIds(d, "nid")))
 
   /** First loadable PQ sidecar under an index root or batch tree (the

@@ -614,14 +614,19 @@ object AnnQueries {
     // persisted pagination session (r6): cursors + pool survive on disk;
     // two session pages must equal the batch route's pages exactly. The
     // exact-path tree (pq=false) is the session's supported traversal.
+    // The pages are local or checkpointed frames, so the state dir goes
+    // before RouteMemo collects them.
     val sess = RouteMemo.df(s, "paged_session", dir) {
       val idxEx = persistedIndex(s, dir, pq = false)
-      val statePath = java.nio.file.Files.createTempDirectory("graft_gate_sess").toString + "/s"
-      val sp1 = Ann.openPagedSession(s, idxEx, statePath, queries0(s, dir), k, ef = 64, annParams)
-        .withColumn("page", lit(1))
-      val sp2 = Ann.nextSessionPage(s, idxEx, statePath, k, ef = 64, annParams)
-        .withColumn("page", lit(2))
-      sp1.union(sp2).select("qid", "page", "rank", "nid")
+      val stateDir = java.nio.file.Files.createTempDirectory("graft_gate_sess").toFile
+      try {
+        val statePath = s"$stateDir/s"
+        val sp1 = Ann.openPagedSession(s, idxEx, statePath, queries0(s, dir), k, ef = 64, annParams)
+          .withColumn("page", lit(1))
+        val sp2 = Ann.nextSessionPage(s, idxEx, statePath, k, ef = 64, annParams)
+          .withColumn("page", lit(2))
+        sp1.union(sp2).select("qid", "page", "rank", "nid")
+      } finally org.apache.commons.io.FileUtils.deleteDirectory(stateDir)
     }
     val batchPages = RouteMemo.df(s, "paged_batch", dir) {
       Ann.searchIndexPaged(s, persistedIndex(s, dir, pq = false), queries0(s, dir),

@@ -40,33 +40,14 @@ class VectorService(spark: SparkSession, root: String) {
   private lazy val fs: FileSystem =
     new HPath(root).getFileSystem(spark.sessionState.newHadoopConf())
 
-  private def writeSmall(path: String, content: String): Unit = {
-    val out = fs.create(new HPath(path), true)
-    try out.write(content.getBytes("UTF-8")) finally out.close()
-  }
-
-  private def readSmall(path: String): Option[String] = {
-    val p = new HPath(path)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try {
-        val buf = new java.io.ByteArrayOutputStream()
-        val tmp = new Array[Byte](512)
-        var n = in.read(tmp)
-        while (n > 0) { buf.write(tmp, 0, n); n = in.read(tmp) }
-        Some(new String(buf.toByteArray, "UTF-8").trim)
-      } finally in.close()
-    }
-  }
-
   private def meta(name: String): Meta = {
-    val s = readSmall(dir(name, "_meta"))
+    val s = Ann.readSmall(fs, new HPath(dir(name, "_meta")))
       .getOrElse(throw new IllegalStateException(s"index '$name' does not exist (CREATE first)"))
     Meta.parse(s)
   }
 
-  private def currentGen(name: String): Option[String] = readSmall(dir(name, "_current"))
+  private def currentGen(name: String): Option[String] =
+    Ann.readSmall(fs, new HPath(dir(name, "_current")))
 
   private def hasData(path: String): Boolean = {
     val p = new HPath(path)
@@ -86,7 +67,7 @@ class VectorService(spark: SparkSession, root: String) {
       nvqBits: Int = 0,
       segmentRows: Int = 8192): Unit = {
     require(!fs.exists(new HPath(dir(name, "_meta"))), s"index '$name' already exists")
-    writeSmall(dir(name, "_meta"),
+    Ann.writeSmall(fs, new HPath(dir(name, "_meta")),
       Meta(metric, maxDegree, beamWidth, pqM, nvqBits, segmentRows).render)
   }
 
@@ -145,7 +126,7 @@ class VectorService(spark: SparkSession, root: String) {
   private def flushedFileKeys(genDir: String): Set[String] =
     Option(fs.globStatus(new HPath(s"$genDir/batch=*/_flushed_files")))
       .getOrElse(Array.empty)
-      .flatMap(st => readSmall(st.getPath.toString).toSeq
+      .flatMap(st => Ann.readSmall(fs, st.getPath).toSeq
         .flatMap(_.split("\n")).filter(_.nonEmpty))
       .toSet
 
@@ -166,7 +147,7 @@ class VectorService(spark: SparkSession, root: String) {
       } catch { case _: java.io.IOException => false }
     if (!tryCreate()) {
       val stale =
-        try readSmall(lock.toString).map(_.toLong)
+        try Ann.readSmall(fs, lock).map(_.toLong)
           .forall(ts => System.currentTimeMillis() - ts > leaseMs)
         catch { case _: Exception => true }
       if (!stale)
@@ -264,7 +245,8 @@ class VectorService(spark: SparkSession, root: String) {
           // kept it.
           if (clusteredServing && !aligned)
             fs.delete(new HPath(s"$genDir/_clustered"), false)
-          writeSmall(s"$staging/_flushed_files", fresh.map(fileKey).sorted.mkString("\n"))
+          Ann.writeSmall(fs, new HPath(s"$staging/_flushed_files"),
+            fresh.map(fileKey).sorted.mkString("\n"))
           val nextBatch = Option(fs.globStatus(new HPath(s"$genDir/batch=*")))
             .map(_.length).getOrElse(0)
           fs.mkdirs(new HPath(genDir))
@@ -275,7 +257,7 @@ class VectorService(spark: SparkSession, root: String) {
         // _current BEFORE cleanup: a crash between them leaves flushed
         // leftovers (cleaned next run) — never a committed batch that no
         // re-run would ever make searchable
-        if (currentGen(name).isEmpty) writeSmall(dir(name, "_current"), gen)
+        if (currentGen(name).isEmpty) Ann.writeSmall(fs, new HPath(dir(name, "_current")), gen)
         // delete exactly the snapshot (fresh now flushed, leftovers were):
         // files a concurrent write() added since are NOT touched. The
         // now-empty dir goes too — via NON-recursive delete, which fails
@@ -315,8 +297,8 @@ class VectorService(spark: SparkSession, root: String) {
         // marker's contract: marker present => segments are cell-aligned)
         if (cluster && Option(fs.globStatus(
             new HPath(s"${dir(name, nextGen)}/*/seg=*"))).exists(_.nonEmpty))
-          writeSmall(s"${dir(name, nextGen)}/_clustered", "clustered")
-        writeSmall(dir(name, "_current"), nextGen) // readers flip atomically
+          Ann.writeSmall(fs, new HPath(s"${dir(name, nextGen)}/_clustered"), "clustered")
+        Ann.writeSmall(fs, new HPath(dir(name, "_current")), nextGen) // readers flip atomically
         delFiles.foreach(p => fs.delete(p, false))
         dropIfOnlyMarkers(dir(name, "deletes"))
         // read-grace GC: a reader that resolved `_current` just before the

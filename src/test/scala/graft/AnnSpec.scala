@@ -535,9 +535,7 @@ class AnnSpec extends SparkSpec {
       val p1 = Ann.openPagedSession(spark, s"$tmp/idx", statePath, queries, k,
         ef = 64, params).cache()
       p1.count()
-      val fs = new org.apache.hadoop.fs.Path(statePath)
-        .getFileSystem(spark.sessionState.newHadoopConf())
-      assert(fs.exists(new org.apache.hadoop.fs.Path(s"$statePath/_big")),
+      assert(Ann.sessionGeneration(spark, statePath).exists(_.big),
         "big-session marker must be written at open")
       val p2 = Ann.nextSessionPage(spark, s"$tmp/idx", statePath, k, ef = 64, params).cache()
       p2.count()
@@ -1383,7 +1381,7 @@ class AnnSpec extends SparkSpec {
     assert(diff === 0L, "routed session pages must equal the routed batch pages")
     // durable state: cursor rows per query = probed segments (~2*sqrt(16)
     // worst case), NOT all 16 cells
-    val cursorSegs = spark.read.parquet(s"$statePath/cursors")
+    val cursorSegs = spark.read.parquet(Ann.sessionGeneration(spark, statePath).get.cursors.toString)
       .groupBy("qid").count().agg(max("count")).head().getLong(0)
     assert(cursorSegs <= math.ceil(math.sqrt(nc)).toInt,
       s"cursors must exist only for probed segments, got $cursorSegs per query")
@@ -1437,6 +1435,30 @@ class AnnSpec extends SparkSpec {
     val e = intercept[IllegalArgumentException](
       Ann.nextSessionPage(spark, s"$tmp/idx", statePath, k, ef = 48, params))
     assert(e.getMessage.contains("compressed"))
+  }
+
+  test("a session page runs no more jobs than before generations; a state dir without _current asks to reopen") {
+    val tmp = java.nio.file.Files.createTempDirectory("annsessjobs").toString
+    val params = Ann.Params(metric = "COSINE", maxDegree = 16, beamWidth = 64, segmentRows = 500)
+    Ann.buildIndex(randVectors(2000, 16, seed = 41).toDF("id", "vec").repartition(2),
+      s"$tmp/idx", params)
+    val queries = randVectors(8, 16, seed = 42).toDF("qid", "qvec")
+    val state = s"$tmp/sess"
+    def next(): Unit = Ann.nextSessionPage(spark, s"$tmp/idx", state, 10, 64, params).collect()
+    Ann.openPagedSession(spark, s"$tmp/idx", state, queries, 10, 64, params).collect()
+    next()
+    // before generations: 4 jobs on the driver that wrote the last page
+    // and 9 after clearSegmentCache, which added schema inference over the
+    // cursors and over the pool and a two-stage distinct over the cursor
+    // rows for the token and mode guard (now read from `_meta`)
+    assert(jobsOf(next()) === 4, "same-driver page")
+    Ann.clearSegmentCache()
+    assert(jobsOf(next()) === 5, "fresh-driver page")
+    val old = new java.io.File(s"$tmp/old")
+    Seq("cursors", "pool").foreach(d => new java.io.File(old, d).mkdirs())
+    val e = intercept[IllegalArgumentException](
+      Ann.nextSessionPage(spark, s"$tmp/idx", old.toString, 10, 64, params))
+    assert(e.getMessage.contains("must be reopened"))
   }
 
   test("cursor bitset codec: lossless round-trip, sparse images shrink ~an order of magnitude") {
