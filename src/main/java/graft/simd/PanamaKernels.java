@@ -125,67 +125,6 @@ public final class PanamaKernels implements VectorKernels {
   }
 
   @Override
-  public void adcAccumulate(double[] dots, double[] mags, int tOff,
-                            int[] codes, int off, int n,
-                            double[] dAcc, double[] mAcc) {
-    final int L = D.length();
-    int j = 0;
-    final int upper = n - (n % L);
-    // fromArray(species, a, aOff, indexMap, mapOff): gathers
-    // a[aOff + indexMap[mapOff + lane]] — exactly dots[tOff + codes[...]]
-    for (; j < upper; j += L) {
-      DoubleVector dv = DoubleVector.fromArray(D, dots, tOff, codes, off + j);
-      DoubleVector mv = DoubleVector.fromArray(D, mags, tOff, codes, off + j);
-      DoubleVector.fromArray(D, dAcc, j).add(dv).intoArray(dAcc, j);
-      DoubleVector.fromArray(D, mAcc, j).add(mv).intoArray(mAcc, j);
-    }
-    for (; j < n; j++) {
-      int c = tOff + codes[off + j];
-      dAcc[j] += dots[c];
-      mAcc[j] += mags[c];
-    }
-  }
-
-  @Override
-  public void adcBlockF(float[] dots, float[] mags, int kk,
-                        int[] block, int deg, int m,
-                        float[] dAcc, float[] mAcc) {
-    final int L = S.length();
-    int j = 0;
-    final int upper = deg - (deg % L);
-    // column strip of L neighbors: both accumulators live in registers
-    // across ALL m subspaces (one float gather per table per subspace),
-    // stored once per strip — the assembleAndSum shape
-    for (; j < upper; j += L) {
-      FloatVector accD = FloatVector.zero(S);
-      FloatVector accM = FloatVector.zero(S);
-      for (int s = 0; s < m; s++) {
-        final int tOff = s * kk;
-        final int bOff = s * deg + j;
-        accD = accD.add(FloatVector.fromArray(S, dots, tOff, block, bOff));
-        accM = accM.add(FloatVector.fromArray(S, mags, tOff, block, bOff));
-      }
-      accD.intoArray(dAcc, j);
-      accM.intoArray(mAcc, j);
-    }
-    for (; j < deg; j++) {
-      float d = 0f, mg = 0f;
-      for (int s = 0; s < m; s++) {
-        int c = s * kk + block[s * deg + j];
-        d += dots[c];
-        mg += mags[c];
-      }
-      dAcc[j] = d;
-      mAcc[j] = mg;
-    }
-  }
-
-  @Override
-  public boolean wideGather() {
-    return true;
-  }
-
-  @Override
   public String name() {
     return "panama-" + S.length() + "f";
   }

@@ -47,33 +47,6 @@ public final class ScalarKernels implements VectorKernels {
   }
 
   @Override
-  public void adcAccumulate(double[] dots, double[] mags, int tOff,
-                            int[] codes, int off, int n,
-                            double[] dAcc, double[] mAcc) {
-    for (int j = 0; j < n; j++) {
-      int c = tOff + codes[off + j];
-      dAcc[j] += dots[c];
-      mAcc[j] += mags[c];
-    }
-  }
-
-  @Override
-  public void adcBlockF(float[] dots, float[] mags, int kk,
-                        int[] block, int deg, int m,
-                        float[] dAcc, float[] mAcc) {
-    for (int j = 0; j < deg; j++) { dAcc[j] = 0f; mAcc[j] = 0f; }
-    for (int s = 0; s < m; s++) {
-      final int tOff = s * kk;
-      final int bOff = s * deg;
-      for (int j = 0; j < deg; j++) {
-        int c = tOff + block[bOff + j];
-        dAcc[j] += dots[c];
-        mAcc[j] += mags[c];
-      }
-    }
-  }
-
-  @Override
   public String name() {
     return "scalar";
   }

@@ -34,46 +34,6 @@ public interface VectorKernels extends java.io.Serializable {
   /** Dot product over doubles. */
   double dotD(double[] a, double[] b);
 
-  /**
-   * ADC fused-block accumulate (Quicker-ADC's shuffle-lookup re-expressed
-   * as a SIMD gather): for j in [0, n): dAcc[j] += dots[tOff + codes[off+j]]
-   * and mAcc[j] += mags[tOff + codes[off+j]]. Codes must be non-negative
-   * and tOff + code within the table. Bit-equal to the scalar loop for any
-   * implementation (adds are elementwise, no reduction).
-   */
-  void adcAccumulate(double[] dots, double[] mags, int tOff,
-                     int[] codes, int off, int n,
-                     double[] dAcc, double[] mAcc);
-
-  /**
-   * Whole-block float ADC accumulate over a fused neighbor-code block (the
-   * reference's {@code assembleAndSum} family,
-   * {@code jvector-twenty/.../PanamaVectorUtilSupport.java:691-771}, which
-   * likewise gathers FLOAT partials by byte code): {@code block} holds the
-   * owner's neighbor codes subspace-major ({@code block[s*deg + j]} = code
-   * of neighbor j in subspace s); for each neighbor column j in [0, deg):
-   * {@code dAcc[j] = sum_s dots[s*kk + block[s*deg+j]]} and likewise
-   * {@code mAcc[j]} over {@code mags}. Accumulators are OVERWRITTEN, not
-   * added to. Float lanes double the gather width vs the double kernel and
-   * keep per-column accumulators in registers across all m subspaces —
-   * accumulator memory traffic drops from 2*m round-trips per column strip
-   * to one store. Float accumulation order is column-parallel, so results
-   * may differ from a scalar double loop in low-order bits; the fused
-   * search contract is candidate-set equality after exact rerank, not
-   * approx-score bit equality.
-   */
-  void adcBlockF(float[] dots, float[] mags, int kk,
-                 int[] block, int deg, int m,
-                 float[] dAcc, float[] mAcc);
-
-  /**
-   * True when {@link #adcBlockF} gathers with wide SIMD lanes, making
-   * whole-block scoring (visited columns included) cheaper than packing the
-   * unvisited survivors first. The scalar fallback returns false: for it,
-   * whole-block is strictly more lookups, so callers should pack survivors.
-   */
-  default boolean wideGather() { return false; }
-
   /** Implementation tag for logs/specs (e.g. "scalar", "panama-16f"). */
   String name();
 }

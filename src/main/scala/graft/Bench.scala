@@ -180,17 +180,14 @@ object Bench {
     val headline: Seq[(String, () => Unit)] = Seq(
       ("exact", () => KnnExact.knn(emb, queries, topK, "COSINE", "vec_id", "embedding").count(): Unit),
       ("pinned", () => Ann.searchIndex(spark, idxPath, queries, topK, ef = 64, params).count(): Unit),
-      ("pq_fused", () => Ann.searchIndex(spark, pqIdxPath, queries, topK, ef = 64, pqParams,
-        rerankK = 40, fusedAdc = true).count(): Unit),
       ("pq_gathered", () => Ann.searchIndex(spark, pqIdxPath, queries, topK, ef = 64, pqParams,
-        rerankK = 40, fusedAdc = false).count(): Unit))
+        rerankK = 40).count(): Unit))
     // clean window + more passes (r14): the headline block starts right
     // after the sweep's own 32-core bursts, and with 4 passes a window
     // where only ONE pass is clean makes a single unlucky sample define a
     // section's best (this round's first artifact: pq_gathered 205 qps
-    // from a lone 0.24 s clean pass while fused drew 0.16 s in the same
-    // pass; passes 2-4 all ran 2-4x inflated). Each pass is < 2 s, so
-    // best-of-8 is cheap insurance.
+    // from a lone 0.24 s clean pass; passes 2-4 all ran 2-4x inflated).
+    // Each pass is < 2 s, so best-of-8 is cheap insurance.
     cleanWindow("headline")
     headline.foreach { case (_, b) => (1 to warmups).foreach(_ => b()) }
     val headlinePasses = (1 to runs + 5).map(_ =>
@@ -202,7 +199,6 @@ object Bench {
       p.map { case (n, t) => f"$n=$t%.2f" }.mkString(",")).mkString(" | "))
     val exactQps = actualNq / headBest("exact")
     val annQpsPinned = actualNq / headBest("pinned")
-    val pqFusedQps = actualNq / headBest("pq_fused")
     val pqGatheredQps = actualNq / headBest("pq_gathered")
     // distributed per-query latency on the pinned serving route (the
     // reference's LatencyBenchmark reports AVG + high percentile): each
@@ -256,9 +252,9 @@ object Bench {
     val visitedRatio = m.visitedRatioPerQuery(actualNq)
     val expandedRatio = m.expandedRatioPerQuery(actualNq)
 
-    // two-phase quality on the PQ index (fused vs gathered THROUGHPUT is in
-    // the interleaved headline above; both now run on the pinned tree —
-    // the resident-index basis — so absolute values step up vs rounds <= 9)
+    // two-phase quality on the PQ index (its THROUGHPUT is in the
+    // interleaved headline above, on the pinned tree — the resident-index
+    // basis — so absolute values step up vs rounds <= 9)
     val pqAnn = Ann.searchIndex(spark, pqIdxPath, queries, topK, ef = 64, pqParams, rerankK = 40)
     val pqRecall = Metrics.recallAtK(pqAnn, exact, topK).head().getDouble(0)
 
@@ -558,8 +554,8 @@ object Bench {
     val total = results.map(_._2).filter(_ >= 0).sum
     // level 0 = full detail; 1 = compact (sweep endpoints only, no
     // protocol constants — they're in BASELINE.md); 2 = minimal (also
-    // sheds cross-checkable derivatives: visited_ratio, the fused/gathered
-    // split, kernel_build_vps, n_queries — quality gates and headline
+    // sheds cross-checkable derivatives: visited_ratio, expanded_ratio,
+    // kernel_build_vps, n_queries — quality gates and headline
     // throughputs always survive)
     def annJson(level: Int): String = {
       val compact = level >= 1
@@ -597,12 +593,9 @@ object Bench {
         s""""w":${num(mseg.winLoad, 1)}},""" +
         // (mseg16 continuity block retired in r13 per the r11 agreement —
         // the degree frontier lives in NOTES_r13 §4)
-        // the fused/gathered split survives EVERY shed level (the Q7
-        // layout decision is re-measured per round from these two keys)
-        (if (level >= 2)
-           s""""pq_fused_qps":${num(pqFusedQps, 1)},"pq_gathered_qps":${num(pqGatheredQps, 1)},"""
-         else s""""expanded_ratio":${num(expandedRatio, 4)},""" +
-           s""""pq_fused_qps":${num(pqFusedQps, 1)},"pq_gathered_qps":${num(pqGatheredQps, 1)},""") +
+        // two-phase throughput survives EVERY shed level
+        (if (level >= 2) "" else s""""expanded_ratio":${num(expandedRatio, 4)},""") +
+        s""""pq_gathered_qps":${num(pqGatheredQps, 1)},""" +
         s""""pq_recall_at_10":${num(pqRecall, 4)},"pq_build_sec":${num(pqBuildSec, 3)},""" +
         s""""kernel_qps":${num(kernelQps, 1)},"kernel_w":${num(kernelWinLoad, 1)},""" +
         (if (level >= 2) "" else s""""kernel_build_vps":${num(kernelBuildVps, 1)},""") +

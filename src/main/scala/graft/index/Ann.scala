@@ -43,121 +43,39 @@ import org.apache.spark.util.LongAccumulator
   */
 object Ann extends Sessions {
 
-  /** Per-executor cache of assembled segment graphs (index segments are
-    * immutable once written, so (path, seg, params) fully identifies one).
-    * This is the warm-index serving mode — the reference's benchmarks also
-    * search a resident index; cold parquet decode + adjacency assembly
-    * otherwise dominates repeated query batches. Bounded; cleared wholesale
-    * when over capacity (segments reload lazily). */
-  private[graft] object SegmentCache {
-    /** Cached segment assembly. `codesFlat` is the per-node PQ codes as ONE
-      * primitive array (node i's code at [i*m, (i+1)*m)) — the approx-scorer
-      * hot loop reads it without a per-neighbor object hop. `fused` is the
-      * transposed neighbor-code layout (Q7, [[Vamana.searchTwoPhaseFused]]);
-      * lazy because the default traversal is the gathered one (measured
-      * faster on scalar JVM — see Bench pq_fused_qps vs pq_gathered_qps),
-      * so memory is only paid when a caller opts in. */
-    final class Entry(val ids: Array[Long], val graph: Vamana,
-        val codes: Array[Array[Int]],
-        /** Per-node RESIDUAL codes (r = v - cellCentroid under the tree's
-          * `_pqres_model`) for residual ADC serving on clustered trees —
-          * null on trees without them (FAISS IVF-PQ serving; the reference
-          * never cell-partitions, so its per-query ADC has no shift —
-          * `quantization/PQVectors.java:210`). */
-        val resCodes: Array[Array[Int]] = null,
-        /** The k-means cell centroid the residual codes were encoded
-          * against (one per segment) — null when resCodes is null. */
-        val cell: Array[Double] = null) {
-      /** Approximate resident size: ids + vectors + adjacency + norm cache
-        * + codes. Computed at insert so eviction can run a BYTE budget —
-        * entry-count eviction would let 256 x 1M-row segments pin hundreds
-        * of GB. The lazy fused layout (opt-in) adds roughly the codes share
-        * again when materialized; the budget deliberately over-reserves by
-        * counting codes fully rather than tracking lazy growth. */
-      val approxBytes: Long = {
-        var b = 64L + (if (ids != null) ids.length * 8L else 0L)
-        if (graph != null) {
-          var edges = 0L
-          var i = 0
-          while (i < graph.neighbors.length) { edges += graph.neighbors(i).length; i += 1 }
-          val dim = if (graph.vectors.nonEmpty && graph.vectors(0) != null)
-            graph.vectors(0).length else 0
-          b += graph.vectors.length.toLong * (dim * 4L + 40L) + edges * 4L
-        }
-        if (codes != null && codes.length > 0 && codes(0) != null)
-          b += codes.length.toLong * (codes(0).length * 4L + 16L)
-        if (resCodes != null && resCodes.length > 0 && resCodes(0) != null)
-          b += resCodes.length.toLong * (resCodes(0).length * 4L + 16L)
-        b
-      }
-      lazy val codesFlat: Array[Int] = {
-        if (codes == null || codes.length == 0 || codes(0) == null) null
-        else {
-          val m = codes(0).length
-          val flat = new Array[Int](codes.length * m)
-          var i = 0
-          while (i < codes.length) {
-            System.arraycopy(codes(i), 0, flat, i * m, m)
-            i += 1
-          }
-          flat
-        }
-      }
-      lazy val fused: Array[Array[Int]] = buildFused(graph, codes)
-      /** Flat residual-code array, same layout as [[codesFlat]]. */
-      lazy val resCodesFlat: Array[Int] = {
-        if (resCodes == null || resCodes.length == 0 || resCodes(0) == null) null
-        else {
-          val m = resCodes(0).length
-          val flat = new Array[Int](resCodes.length * m)
-          var i = 0
-          while (i < resCodes.length) {
-            System.arraycopy(resCodes(i), 0, flat, i * m, m)
-            i += 1
-          }
-          flat
-        }
-      }
-    }
-    object Entry {
-      def apply(ids: Array[Long], graph: Vamana, codes: Array[Array[Int]]): Entry =
-        new Entry(ids, graph, codes)
-      def apply(ids: Array[Long], graph: Vamana, codes: Array[Array[Int]],
-          resCodes: Array[Array[Int]], cell: Array[Double]): Entry =
-        new Entry(ids, graph, codes, resCodes, cell)
-    }
-    /** Byte budget for resident segment graphs (default 4 GiB per
-      * executor JVM). With 1M-row segments an entry-count cap would admit
-      * hundreds of GB; bytes are what the executor actually runs out of. */
-    @volatile private[graft] var maxBytes: Long = 4L << 30
+  /** A per-executor map held under a BYTE budget: entry-count eviction
+    * would let 256 x 1M-row segments pin hundreds of GB, and bytes are
+    * what the executor actually runs out of. After an insert, single OTHER
+    * entries are evicted while over budget (iteration order is effectively
+    * arbitrary ~ random eviction) — a wholesale clear would cold-start
+    * every warm entry because one new one arrived. The just-inserted entry
+    * never evicts itself: one value larger than the whole budget must still
+    * be servable. */
+  private[graft] final class ByteBudgetCache[V <: AnyRef](@volatile var maxBytes: Long,
+      bytesOf: V => Long) {
     private val totalBytes = new java.util.concurrent.atomic.AtomicLong()
-    private[graft] def currentBytes: Long = totalBytes.get()
-    private val m = new java.util.concurrent.ConcurrentHashMap[String, Entry]()
+    private val m = new java.util.concurrent.ConcurrentHashMap[String, V]()
+    def currentBytes: Long = totalBytes.get()
     /** Non-assembling lookup for the warm-serving fast path: a task that
-      * grabs the returned Entry holds a strong reference, so a concurrent
+      * grabs the returned value holds a strong reference, so a concurrent
       * eviction (map removal) cannot invalidate it mid-search. */
-    def peek(key: String): Entry = m.get(key)
-    def getOrCompute(key: String, f: => Entry): Entry = {
+    def peek(key: String): V = m.get(key)
+    def getOrCompute(key: String, f: => V): V = {
       // computeIfAbsent: per-key locking — concurrent chunk tasks of the
       // same segment must NOT each assemble a full graph copy (a ~chunks-x
       // transient memory spike at 1M-row segments)
-      var created: Entry = null
-      val e = m.computeIfAbsent(key, _ => { created = f; created })
-      if (e eq created) {
-        totalBytes.addAndGet(e.approxBytes)
-        // evict single OTHER entries while over budget (iteration order is
-        // effectively arbitrary ~ random eviction) — wholesale clear()
-        // would cold-start EVERY warm segment because one new one arrived.
-        // The just-inserted entry never evicts itself: a single segment
-        // larger than the whole budget must still be servable.
+      var created: V = null.asInstanceOf[V]
+      val v = m.computeIfAbsent(key, _ => { created = f; created })
+      if (v eq created) {
+        totalBytes.addAndGet(bytesOf(v))
         val it = m.entrySet().iterator()
         while (totalBytes.get() > maxBytes && it.hasNext) {
           val ent = it.next()
-          if ((ent.getValue ne e) && m.remove(ent.getKey, ent.getValue))
-            totalBytes.addAndGet(-ent.getValue.approxBytes)
+          if ((ent.getValue ne v) && m.remove(ent.getKey, ent.getValue))
+            totalBytes.addAndGet(-bytesOf(ent.getValue))
         }
       }
-      e
+      v
     }
     def clear(): Unit = {
       // entry-by-entry removal keeps the byte accounting consistent with
@@ -166,7 +84,79 @@ object Ann extends Sessions {
       val it = m.entrySet().iterator()
       while (it.hasNext) {
         val e = it.next()
-        if (m.remove(e.getKey, e.getValue)) totalBytes.addAndGet(-e.getValue.approxBytes)
+        if (m.remove(e.getKey, e.getValue)) totalBytes.addAndGet(-bytesOf(e.getValue))
+      }
+    }
+  }
+
+  /** Approximate resident size of a graph's vectors, adjacency and norm
+    * cache. */
+  private def graphBytes(g: Vamana): Long = {
+    var edges = 0L
+    var i = 0
+    while (i < g.neighbors.length) { edges += g.neighbors(i).length; i += 1 }
+    val dim = if (g.vectors.nonEmpty && g.vectors(0) != null) g.vectors(0).length else 0
+    g.vectors.length.toLong * (dim * 4L + 40L) + edges * 4L
+  }
+
+  /** Per-executor cache of assembled segment graphs (index segments are
+    * immutable once written, so (path, seg, params) fully identifies one).
+    * This is the warm-index serving mode — the reference's benchmarks also
+    * search a resident index; cold parquet decode + adjacency assembly
+    * otherwise dominates repeated query batches. Bounded by bytes
+    * (4 GiB per executor JVM; segments reload lazily). */
+  private[graft] val SegmentCache = new ByteBudgetCache[SegmentEntry](4L << 30, _.approxBytes)
+
+  /** Cached segment assembly. `codesFlat` is the per-node PQ codes as ONE
+    * primitive array (node i's code at [i*m, (i+1)*m)) — the approx-scorer
+    * hot loop reads it without a per-neighbor object hop. */
+  private[graft] final class SegmentEntry(val ids: Array[Long], val graph: Vamana,
+      val codes: Array[Array[Int]],
+      /** Per-node RESIDUAL codes (r = v - cellCentroid under the tree's
+        * `_pqres_model`) for residual ADC serving on clustered trees —
+        * null on trees without them (FAISS IVF-PQ serving; the reference
+        * never cell-partitions, so its per-query ADC has no shift —
+        * `quantization/PQVectors.java:210`). */
+      val resCodes: Array[Array[Int]] = null,
+      /** The k-means cell centroid the residual codes were encoded
+        * against (one per segment) — null when resCodes is null. */
+      val cell: Array[Double] = null) {
+    /** Approximate resident size: ids + vectors + adjacency + norm cache
+      * + codes, computed at insert for the byte budget. */
+    val approxBytes: Long = {
+      var b = 64L + (if (ids != null) ids.length * 8L else 0L)
+      if (graph != null) b += graphBytes(graph)
+      if (codes != null && codes.length > 0 && codes(0) != null)
+        b += codes.length.toLong * (codes(0).length * 4L + 16L)
+      if (resCodes != null && resCodes.length > 0 && resCodes(0) != null)
+        b += resCodes.length.toLong * (resCodes(0).length * 4L + 16L)
+      b
+    }
+    lazy val codesFlat: Array[Int] = {
+      if (codes == null || codes.length == 0 || codes(0) == null) null
+      else {
+        val m = codes(0).length
+        val flat = new Array[Int](codes.length * m)
+        var i = 0
+        while (i < codes.length) {
+          System.arraycopy(codes(i), 0, flat, i * m, m)
+          i += 1
+        }
+        flat
+      }
+    }
+    /** Flat residual-code array, same layout as [[codesFlat]]. */
+    lazy val resCodesFlat: Array[Int] = {
+      if (resCodes == null || resCodes.length == 0 || resCodes(0) == null) null
+      else {
+        val m = resCodes(0).length
+        val flat = new Array[Int](resCodes.length * m)
+        var i = 0
+        while (i < resCodes.length) {
+          System.arraycopy(resCodes(i), 0, flat, i * m, m)
+          i += 1
+        }
+        flat
       }
     }
   }
@@ -503,66 +493,39 @@ object Ann extends Sessions {
   /** Per-executor cache for TRANSIENT (build-and-search-in-one-pass) segment
     * graphs, content-keyed: the seeded build over a deterministic partition
     * makes (params, ids, vector bytes) fully identify the graph. Repeated
-    * `Ann.search` calls over the same table then skip the O(n) graph build. */
-  private[index] object TransientGraphCache {
-    /** BYTE budget, not entry count: a 64-entry cap would let 64 large
-      * per-partition graphs (vectors + adjacency, GBs each at ~1M rows x
-      * high dim) pin executor memory until OOM — the exact flaw
-      * [[SegmentCache]]'s own sizing note calls out. Transient graphs are
-      * recomputable, so the budget is a fraction of SegmentCache's. */
-    @volatile private[graft] var maxBytes: Long = 1L << 30
-    private val totalBytes = new java.util.concurrent.atomic.AtomicLong(0L)
-    private def graphBytes(g: Vamana): Long = {
-      var edges = 0L
-      var i = 0
-      while (i < g.neighbors.length) { edges += g.neighbors(i).length; i += 1 }
-      val dim = if (g.vectors.nonEmpty && g.vectors(0) != null) g.vectors(0).length else 0
-      64L + g.vectors.length.toLong * (dim * 4L + 40L) + edges * 4L
-    }
-    private val m = new java.util.concurrent.ConcurrentHashMap[String, Vamana]()
-    def key(ids: Array[Long], vecs: Array[Array[Float]], p: Params): String = {
-      // two independent 64-bit chains over full vector CONTENT (~128-bit
-      // key): accidental collision probability is negligible, unlike a
-      // single 31-chain over 32-bit Arrays.hashCode values
-      var h1 = 1125899906842597L
-      var h2 = -3750763034362895579L // FNV-1a offset basis
-      var i = 0
-      while (i < ids.length) {
-        h1 = h1 * 31 + ids(i)
-        h2 = (h2 ^ ids(i)) * 1099511628211L
-        var j = 0
-        val v = vecs(i)
-        while (j < v.length) {
-          val bits = java.lang.Float.floatToIntBits(v(j)).toLong
-          h1 = h1 * 31 + bits
-          h2 = (h2 ^ bits) * 1099511628211L
-          j += 1
-        }
-        i += 1
+    * `Ann.search` calls over the same table then skip the O(n) graph build.
+    * Transient graphs are recomputable, so the byte budget is a quarter of
+    * [[SegmentCache]]'s (1 GiB per executor JVM). */
+  private[graft] val TransientGraphCache = new ByteBudgetCache[Vamana](1L << 30, 64L + graphBytes(_))
+
+  /** [[TransientGraphCache]] key of one partition's rows under `p`. */
+  private def transientGraphKey(ids: Array[Long], vecs: Array[Array[Float]], p: Params): String = {
+    // two independent 64-bit chains over full vector CONTENT (~128-bit
+    // key): accidental collision probability is negligible, unlike a
+    // single 31-chain over 32-bit Arrays.hashCode values
+    var h1 = 1125899906842597L
+    var h2 = -3750763034362895579L // FNV-1a offset basis
+    var i = 0
+    while (i < ids.length) {
+      h1 = h1 * 31 + ids(i)
+      h2 = (h2 ^ ids(i)) * 1099511628211L
+      var j = 0
+      val v = vecs(i)
+      while (j < v.length) {
+        val bits = java.lang.Float.floatToIntBits(v(j)).toLong
+        h1 = h1 * 31 + bits
+        h2 = (h2 ^ bits) * 1099511628211L
+        j += 1
       }
-      // buildThreads is part of the identity: the parallel build's
-      // prefix-doubling + chunked-Jacobi refine produces a different
-      // (equally valid) graph than the sequential Gauss-Seidel path
-      // maxDegreeByLevel is build-affecting too (layer-0 prune degree,
-      // hierarchy degrees) — same-data searches under different degree
-      // lists must not share a graph
-      s"$h1|$h2|${ids.length}|${p.metric}|${p.maxDegree}|${p.beamWidth}|${p.alpha}|${p.neighborOverflow}|${p.seed}|${p.buildThreads}|${p.maxDegreeByLevel.mkString(",")}"
+      i += 1
     }
-    def getOrCompute(k: String, f: => Vamana): Vamana = {
-      while (totalBytes.get() > maxBytes) { // single-entry eviction, not wholesale
-        val it = m.keys()
-        if (it.hasMoreElements) {
-          val victim = it.nextElement()
-          val g = m.remove(victim)
-          if (g != null) totalBytes.addAndGet(-graphBytes(g))
-        } else { m.clear(); totalBytes.set(0L) }
-      }
-      var inserted = false
-      val g = m.computeIfAbsent(k, _ => { inserted = true; f }) // build once per executor
-      if (inserted) totalBytes.addAndGet(graphBytes(g))
-      g
-    }
-    def clear(): Unit = { m.clear(); totalBytes.set(0L) }
+    // buildThreads is part of the identity: the parallel build's
+    // prefix-doubling + chunked-Jacobi refine produces a different
+    // (equally valid) graph than the sequential Gauss-Seidel path
+    // maxDegreeByLevel is build-affecting too (layer-0 prune degree,
+    // hierarchy degrees) — same-data searches under different degree
+    // lists must not share a graph
+    s"$h1|$h2|${ids.length}|${p.metric}|${p.maxDegree}|${p.beamWidth}|${p.alpha}|${p.neighborOverflow}|${p.seed}|${p.buildThreads}|${p.maxDegreeByLevel.mkString(",")}"
   }
 
   case class Params(
@@ -954,23 +917,13 @@ object Ann extends Sessions {
     unpin(path)
   }
 
-  /** Locality-aware index build (SPANN-style coarse partitioning; jvector's
-    * production deployments likewise shard by locality before per-segment
-    * graphs): coarse k-means assigns rows to clusters, rows co-locate by
-    * cluster, one segment per cluster — segment centroids become
-    * informative, so `searchIndex(probeSegments = m)` keeps high recall
-    * while scanning m/nlist of the index. THIS is the 100 TB configuration:
-    * random segmentation makes routing useless (every segment holds a
-    * uniform sample of the space). */
   /** Write the `_clustered` routability marker at a tree's root: segment
     * centroids are informative, so [[AutoProbe]] may engage centroid
     * routing. */
   private def writeClusteredMarker(spark: SparkSession, path: String): Unit = {
     val root = path.stripSuffix("/*").stripSuffix("/")
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val out = fs.create(new org.apache.hadoop.fs.Path(s"$root/_clustered"), true)
-    try out.write("clustered".getBytes("UTF-8")) finally out.close()
+    writeSmall(new org.apache.hadoop.fs.Path(root).getFileSystem(spark.sessionState.newHadoopConf()),
+      new org.apache.hadoop.fs.Path(s"$root/_clustered"), "clustered")
   }
 
   /** One int preimage per partition id: `hash(x_p) % n == p` under the
@@ -993,6 +946,14 @@ object Ann extends Sessions {
     pre
   }
 
+  /** Locality-aware index build (SPANN-style coarse partitioning; jvector's
+    * production deployments likewise shard by locality before per-segment
+    * graphs): coarse k-means assigns rows to clusters, rows co-locate by
+    * cluster, one segment per cluster — segment centroids become
+    * informative, so `searchIndex(probeSegments = m)` keeps high recall
+    * while scanning m/nlist of the index. THIS is the 100 TB configuration:
+    * random segmentation makes routing useless (every segment holds a
+    * uniform sample of the space). */
   def buildIndexClustered(
       base: DataFrame,
       path: String,
@@ -1286,28 +1247,7 @@ object Ann extends Sessions {
         * segments a task searches sequentially, skipping reranks that
         * cannot improve the merged top-k (jvector rerankFloor,
         * `GraphSearcher.java:386-404`). Off switch exists for measurement. */
-      shareRerankFloor: Boolean = true,
-      /** Two-phase only, FLAT trees only: traverse on the fused transposed
-        * neighbor-code layout (Q7, jvector FusedPQ) instead of the gathered
-        * flat-code path. On clustered (residual-paired) trees this flag is
-        * a NO-OP by decision (r14): the residual payload takes precedence —
-        * fused blocks hold GLOBAL codes, which are ordering noise inside
-        * tight cells (1M x 64 cells: 0.16 vs 0.63 recall_abs), and
-        * composing fused blocks from residual codes was adjudicated and
-        * RETIRED (fused's measured end-to-end win on flat trees is ~2.4%
-        * — the beam is a minority of a serving batch — against degree-x
-        * residual-code memory and a third scorer variant; NOTES_r14 §6).
-        * Results are identical to gathered (spec-asserted). Default OFF —
-        * the data (kernel micro, 50k x 64d, AVX-512 box, Panama
-        * strip-gather `adcBlockF` active, re-measured r9 2026-08; NOTES_r14 §6):
-        * m=8 fused 66ms vs gathered 76ms (1.15x), m=16 fused 78ms vs
-        * gathered 89-117ms (1.15-1.30x, gathered-side variance) — real but
-        * under the 1.3x flip bar at the m=8 the gates serve, while the
-        * fused layout costs degree-times the code memory; end-to-end on
-        * the 2k bench corpus the Spark-side overhead inverts it
-        * (pq_fused_qps < pq_gathered_qps). Bench reports both QPS keys at
-        * EVERY shed level so the trade stays re-measured every round. */
-      fusedAdc: Boolean = false): DataFrame = {
+      shareRerankFloor: Boolean = true): DataFrame = {
     val p = params
     val qArr = collectQueries(queries)
     val perSegment = servePersisted(spark, path, qArr, p, deletes, probeSegments,
@@ -1326,10 +1266,8 @@ object Ann extends Sessions {
             // beam must over-visit relative to topK or PQ rank inversion
             // drops true neighbors below the cutoff
             val adcBeam = math.max(math.max(rerankK, ef), p.adcFrontierPerK * topK)
-            val (r, worstApprox) =
-              if (fusedAdc && seg.fusable) seg.searchFused(qi, qv, topK, adcBeam, floor)
-              else seg.graph.searchTwoPhaseWithFloor(qv, approx, topK, adcBeam,
-                seg.accept, seg.vc, rerankFloor = floor, rc = seg.rc)
+            val (r, worstApprox) = seg.graph.searchTwoPhase(qv, approx, topK, adcBeam,
+              seg.accept, seg.vc, rerankFloor = floor, rc = seg.rc)
             if (shareRerankFloor &&
                 worstApprox > floors.getOrElse(qi, Double.NegativeInfinity))
               floors(qi) = worstApprox
@@ -1575,24 +1513,6 @@ object Ann extends Sessions {
     def approx(qKey: Long, qv: Array[Float]): Option[Int => Double] =
       gMod.map(gm => pickApproxScorer(entry, resSeg, tabs, gm, qKey, qv, mc))
 
-    /** The fused traversal (Q7) applies: global codes with the transposed
-      * blocks built. The residual payload takes precedence over a fused
-      * opt-in: the fused blocks hold GLOBAL codes, which are ordering noise
-      * inside tight cells (the 1M A/B: 0.16 vs 0.63 recall_abs, NOTES_r13
-      * §1) — a Q7 throughput experiment must not silently cost 4x recall
-      * on clustered trees. */
-    def fusable: Boolean = gMod.isDefined && resSeg.isEmpty && entry.fused != null
-
-    /** Two-phase search over the fused transposed neighbor-code blocks:
-      * batch-score the unvisited neighbors of each expanded node. */
-    def searchFused(qKey: Long, qv: Array[Float], topK: Int, beam: Int,
-        floor: Double): (Array[(Int, Double)], Double) = {
-      val gm = gMod.get
-      val (dots, mags, qn) = tabs(gm, qKey, qv)
-      graph.searchTwoPhaseFused(qv, entry.codesFlat, entry.fused, dots, mags, qn,
-        gm.m, gm.codebooks(0).length, mc, topK, beam, accept, vc,
-        rerankFloor = floor, rc = rc)
-    }
   }
 
   /** The transient serving scaffold behind [[searchWithMetrics]],
@@ -1627,8 +1547,7 @@ object Ann extends Sessions {
           // transient searches over the same table reuse it instead of
           // rebuilding (~1k vec/s). The accept filter is NOT part of the
           // key — it applies per-query inside the beam.
-          val g = TransientGraphCache.getOrCompute(
-            TransientGraphCache.key(ids, vecs, p),
+          val g = TransientGraphCache.getOrCompute(transientGraphKey(ids, vecs, p),
             p.graph(vecs).build(p.buildThreads))
           val vc = new Vamana.VisitCounter
           val out = qB.value.iterator.flatMap { case (qid, qv) =>
@@ -1756,7 +1675,7 @@ object Ann extends Sessions {
     * tables (rdots = q·codebook LUT, |q|²) build in-task at first use
     * ([[TaskAdcTables]]); cell-dependent pieces (cdots = cell·codebook
     * LUT, |cell|², rmags) build in-task once per segment from
-    * [[SegmentCache.Entry.cell]] — each k·dim flops, noise vs the beam —
+    * [[SegmentEntry.cell]] — each k·dim flops, noise vs the beam —
     * so NOTHING broadcast grows with the batch size or the cell count
     * (10⁴–10⁵ cells, 10⁴+ query batches at 100 TB). */
   private[graft] final case class SidecarModels(
@@ -1788,7 +1707,7 @@ object Ann extends Sessions {
     * |cell|²). None when the segment carries no residual payload — callers
     * fall back to the global ADC scorer for that segment (mixed trees:
     * aligned-flush batches persist no residual codes). */
-  private[graft] def resSegState(entry: SegmentCache.Entry, segId: String,
+  private[graft] def resSegState(entry: SegmentEntry, segId: String,
       resB: Option[ResAdc])
       : Option[(graft.operators.PQModel, Array[Int], Array[Double], Array[Double], Double)] =
     resB.flatMap { ra =>
@@ -1835,7 +1754,7 @@ object Ann extends Sessions {
     * segment's paired model `gm`. `tabs` memoizes each query's tables
     * across the task's segments. */
   private def pickApproxScorer(
-      entry: SegmentCache.Entry,
+      entry: SegmentEntry,
       resSeg: Option[(graft.operators.PQModel, Array[Int], Array[Double], Array[Double], Double)],
       tabs: TaskAdcTables, gm: graft.operators.PQModel,
       qKey: Long, qv: Array[Float], mc: Int): Int => Double =
@@ -1853,7 +1772,8 @@ object Ann extends Sessions {
     }
 
   /** Metric code for the ADC score combiner (0 = EUCLIDEAN, 1 = DOT,
-    * 2 = COSINE) — must stay in lockstep with [[Vamana.adcCombine]]. */
+    * 2 = COSINE) — [[adcScorer]] and [[resAdcScorer]] branch on it and
+    * must stay in lockstep. */
   private[index] def adcMetricCode(metric: String): Int = metric.toUpperCase match {
     case "EUCLIDEAN" => 0
     case "DOT_PRODUCT" | "DOT" => 1
@@ -1994,7 +1914,7 @@ object Ann extends Sessions {
     val qIdx: Array[Int] =
       if (chunks <= 1) routed else routed.filter(_ % chunks == chunk)
     // strong ref: a concurrent eviction can't invalidate a held Entry
-    private val warm: SegmentCache.Entry =
+    private val warm: SegmentEntry =
       if (qIdx.isEmpty) null else SegmentCache.peek(key)
     // primitive growable pair — ArrayBuffer[Int]/[Boolean] would box every
     // element (one Integer alloc per row past the small-int cache: real GC
@@ -2028,7 +1948,7 @@ object Ann extends Sessions {
     }
     /** (assembled entry, live flags indexed by local id). Call once, after
       * the scan, only when qIdx is non-empty. */
-    def resolve(): (SegmentCache.Entry, Array[Boolean]) =
+    def resolve(): (SegmentEntry, Array[Boolean]) =
       if (heavy == null) {
         val lv = new Array[Boolean](count)
         if (liveConst) java.util.Arrays.fill(lv, true)
@@ -2091,11 +2011,11 @@ object Ann extends Sessions {
   /** Assemble a persisted segment: vectors, adjacency, entry node, persisted
     * multi-layer hierarchy, PQ codes. Identical across routes (see
     * [[segmentCacheKey]]). `sorted` must be local-id sorted. */
-  private def assembleSegment(sorted: Array[TreeRow], p: Params): SegmentCache.Entry = {
+  private def assembleSegment(sorted: Array[TreeRow], p: Params): SegmentEntry = {
     // residual serving payload: codes per node (null when the tree has
     // none) + the one-per-segment encoding cell (res_cell rides local 0)
     val resCodes = sorted.map(_.res_code)
-    SegmentCache.Entry(sorted.map(_.node_id), restoreGraph(sorted, p), sorted.map(_.pq_code),
+    new SegmentEntry(sorted.map(_.node_id), restoreGraph(sorted, p), sorted.map(_.pq_code),
       if (resCodes.exists(_ != null)) resCodes else null, segmentCell(sorted))
   }
 
@@ -2158,34 +2078,6 @@ object Ann extends Sessions {
       }
     }
     mergePaged(perSegmentFrame(spark, perSegment), pages)
-  }
-
-  /** Transposed neighbor-code blocks for fused-ADC traversal (Q7, jvector
-    * `FusedPQ.java:48-60`): block(u)[s * deg(u) + j] = code of u's j-th
-    * neighbor in subspace s. Built once per cached segment assembly.
-    * Returns null (gathered fallback) when the segment has no codes or the
-    * blocks would exceed ~128 MB — the fused layout multiplies code storage
-    * by the degree, a trade the reference also pays (on disk); in memory we
-    * cap it per segment so the executor cache stays bounded. */
-  private def buildFused(g: Vamana, codes: Array[Array[Int]]): Array[Array[Int]] = {
-    if (codes == null || codes.length == 0 || codes(0) == null) return null
-    val m = codes(0).length
-    var total = 0L
-    var i = 0
-    while (i < codes.length) { total += g.neighbors(i).length.toLong * m; i += 1 }
-    if (total > 32L * 1024 * 1024) return null
-    Array.tabulate(codes.length) { u =>
-      val nbrs = g.neighbors(u)
-      val deg = nbrs.length
-      val block = new Array[Int](m * deg)
-      var s = 0
-      while (s < m) {
-        var j = 0
-        while (j < deg) { block(s * deg + j) = codes(nbrs(j))(s); j += 1 }
-        s += 1
-      }
-      block
-    }
   }
 
   /** Threshold search over a persisted index (jvector T5 over an on-disk

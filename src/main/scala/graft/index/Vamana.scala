@@ -160,7 +160,7 @@ final class Vamana(
       * and the LAST ENTRY REPEATS for all deeper layers. Empty = the
       * single-degree default (layer 0 = `maxDegree`, upper layers =
       * `min(maxDegree, 8)`). When non-empty, the head governs all layer-0
-      * pruning and `maxDegree` is only a scratch-sizing hint. */
+      * pruning and `maxDegree` is unused. */
     val maxDegreeByLevel: Seq[Int] = Nil) extends Serializable {
 
   require(maxDegreeByLevel.forall(_ > 0), s"maxDegreeByLevel entries must be > 0: $maxDegreeByLevel")
@@ -509,8 +509,11 @@ final class Vamana(
     * `GraphSearcher.java:471-507`): the beam runs entirely on `approx`
     * scores keeping rerankK candidates; survivors are re-scored with the
     * exact similarity (late materialization — at scale the full-res
-    * vectors are the expensive fetch). Returns topK sorted score desc,
-    * id asc. */
+    * vectors are the expensive fetch). Returns (topK sorted score desc /
+    * id asc, worst APPROXIMATE score among the kept top-k) — the second is
+    * the value the reference propagates as the next segment's rerankFloor
+    * (`SearchResult.getWorstApproximateScoreInTopK`, `SearchResult.java:
+    * 82-84`); floors compare approx-to-approx, never across score scales. */
   def searchTwoPhase(q: Array[Float], approx: Int => Double, topK: Int, rerankK: Int,
       accept: Int => Boolean = _ => true, vc: Vamana.VisitCounter = null,
       /** Cross-segment rerank floor (jvector `GraphSearcher.java:386-404`,
@@ -521,32 +524,12 @@ final class Vamana(
         * trade the reference makes. */
       rerankFloor: Double = Double.NegativeInfinity,
       /** Counts performed exact reranks (effort metric, A8). */
-      rc: Vamana.VisitCounter = null): Array[(Int, Double)] =
-    searchTwoPhaseWithFloor(q, approx, topK, rerankK, accept, vc, rerankFloor, rc)._1
-
-  /** [[searchTwoPhase]] that additionally returns the worst APPROXIMATE
-    * score among the kept top-k — the value the reference propagates as the
-    * next segment's rerankFloor (`SearchResult.getWorstApproximateScoreInTopK`,
-    * `SearchResult.java:82-84`); floors compare approx-to-approx, never
-    * across score scales. */
-  def searchTwoPhaseWithFloor(q: Array[Float], approx: Int => Double, topK: Int, rerankK: Int,
-      accept: Int => Boolean = _ => true, vc: Vamana.VisitCounter = null,
-      rerankFloor: Double = Double.NegativeInfinity,
       rc: Vamana.VisitCounter = null): (Array[(Int, Double)], Double) = {
     // descend the upper layers on the same approx scorer before the layer-0
     // beam (jvector runs its compressed SSP through the full hierarchy,
     // GraphSearcher.java:263-282) — a no-op on hierarchy-less shells
     val candidates = searchInternalScored(approx, descendScored(approx, vc),
       math.max(rerankK, topK), accept, vc)
-    rerankPhase(q, candidates, topK, rerankFloor, rc)
-  }
-
-  /** Exact-rerank phase shared by the gathered and fused two-phase paths:
-    * drop candidates under the cross-segment rerank floor, re-score the
-    * survivors exactly, return (topK sorted score desc / id asc, worst
-    * APPROXIMATE score among the kept k). */
-  private def rerankPhase(q: Array[Float], candidates: Array[(Int, Double)], topK: Int,
-      rerankFloor: Double, rc: Vamana.VisitCounter): (Array[(Int, Double)], Double) = {
     val surviving =
       if (rerankFloor == Double.NegativeInfinity) candidates
       else candidates.filter(_._2 >= rerankFloor)
@@ -560,171 +543,6 @@ final class Vamana(
       if (kept.length < topK) Double.NegativeInfinity
       else kept.iterator.map { case (id, _) => approxOf(id) }.min
     (kept, worstApprox)
-  }
-
-  /** Fused-ADC two-phase search (jvector FusedPQ / Quicker-ADC, Q7:
-    * `graph/disk/feature/FusedPQ.java:48-60`, `quantization/FusedPQDecoder
-    * .java:34`): the beam runs on PQ-ADC scores computed from each node's
-    * TRANSPOSED block of its neighbors' codes — expanding a node scores all
-    * its neighbors in one subspace-major pass (sequential reads of the
-    * block and of each subspace's table row), instead of gathering one
-    * per-node code object per neighbor. The traversal runs on FLOAT table
-    * partials (the reference's fused kernels likewise gather float —
-    * `PanamaVectorUtilSupport.assembleAndSum`), so approx scores differ
-    * from the gathered double path in low-order bits; survivors rerank
-    * EXACTLY, so the final top-k is candidate-set-stable (gated equal to
-    * the gathered path on the fixtures).
-    *
-    * `fused(u)` holds the code of u's j-th neighbor in subspace s at index
-    * s*deg(u)+j; `codesFlat` holds node i's own code at [i*m, (i+1)*m)
-    * (entry seeding + final rescoring); `dots`/`mags` are the per-query ADC
-    * tables (m x k flattened); `adcMetric`: 0 = EUCLIDEAN, 1 = DOT,
-    * 2 = COSINE. */
-  def searchTwoPhaseFused(q: Array[Float], codesFlat: Array[Int], fused: Array[Array[Int]],
-      dots: Array[Double], mags: Array[Double], qNormSq: Double,
-      m: Int, kk: Int, adcMetric: Int, topK: Int, rerankK: Int,
-      accept: Int => Boolean = _ => true, vc: Vamana.VisitCounter = null,
-      rerankFloor: Double = Double.NegativeInfinity,
-      rc: Vamana.VisitCounter = null): (Array[(Int, Double)], Double) = {
-    val candidates = searchInternalFused(codesFlat, fused, dots, mags, qNormSq, m, kk,
-      adcMetric, math.max(rerankK, topK), accept, vc)
-    rerankPhase(q, candidates, topK, rerankFloor, rc)
-  }
-
-  @inline private def adcCombine(adcMetric: Int, dot: Double, mag: Double, qNormSq: Double): Double =
-    if (adcMetric == 0) 1.0 / (1.0 + (qNormSq - 2.0 * dot + mag))
-    else if (adcMetric == 1) (1.0 + dot) / 2.0
-    else (1.0 + dot / (math.sqrt(mag) * math.sqrt(qNormSq))) / 2.0
-
-  /** Beam search over the fused layout (see [[searchTwoPhaseFused]]). */
-  private def searchInternalFused(codesFlat: Array[Int], fused: Array[Array[Int]],
-      dots: Array[Double], mags: Array[Double], qNormSq: Double,
-      m: Int, kk: Int, adcMetric: Int, ef: Int,
-      accept: Int => Boolean, vc: Vamana.VisitCounter): Array[(Int, Double)] = {
-    if (n == 0) return Array.empty
-    // FLOAT copies of the per-query ADC tables (the reference's fused path
-    // gathers FLOAT partials — assembleAndSum family,
-    // `jvector-twenty/.../PanamaVectorUtilSupport.java:691-771` — which is
-    // where the fused layout pays: double the gather lanes, half the table
-    // bytes). One m*k cast per query; approx scores therefore differ from
-    // the gathered double path in low-order bits — the contract is
-    // candidate-set parity through exact rerank, not approx-bit equality.
-    val dotsF = new Array[Float](dots.length)
-    val magsF = new Array[Float](mags.length)
-    var ti = 0
-    while (ti < dots.length) { dotsF(ti) = dots(ti).toFloat; magsF(ti) = mags(ti).toFloat; ti += 1 }
-    def scoreOne(node: Int): Double = {
-      val base = node * m
-      var dot = 0.0f; var mag = 0.0f; var s = 0
-      while (s < m) {
-        val code = codesFlat(base + s)
-        dot += dotsF(s * kk + code); mag += magsF(s * kk + code); s += 1
-      }
-      adcCombine(adcMetric, dot, mag, qNormSq)
-    }
-    val visited = new java.util.BitSet(n)
-    val cand = new LongHeap(64, min = false)
-    val res = new LongHeap(ef + 1, min = true)
-    // scratch accumulators sized to the max degree seen (reused per expansion)
-    var dAcc = new Array[Float](maxDegree * 2)
-    var mAcc = new Array[Float](maxDegree * 2)
-    var colIdx = new Array[Int](maxDegree * 2)
-    var packedCodes = new Array[Int](maxDegree * 2 * m)
-    val wide = kernels.wideGather()
-    val entry = descendScored(scoreOne, vc)
-    cand.push(LongHeap.pack(scoreOne(entry), entry))
-    visited.set(entry)
-    var visits = 1L
-    var stop = false
-    while (!stop && cand.nonEmpty) {
-      val packed = cand.pop()
-      val cs = LongHeap.score(packed)
-      val c = LongHeap.id(packed)
-      if (res.size >= ef && cs < LongHeap.score(res.top)) {
-        stop = true
-      } else {
-        if (accept(c)) {
-          res.push(packed)
-          if (res.size > ef) res.pop()
-        }
-        if (vc != null) vc.expanded += 1
-        val nbrs = neighbors(c)
-        val deg = nbrs.length
-        if (deg > 0) {
-          if (dAcc.length < deg) {
-            dAcc = new Array[Float](deg); mAcc = new Array[Float](deg)
-            colIdx = new Array[Int](deg); packedCodes = new Array[Int](deg * m)
-          }
-          if (wide) {
-            // whole-block accumulate, visited columns included — exactly
-            // the reference's fused traversal (SIMD scores the entire
-            // neighbor block in one pass; per-column register accumulators
-            // across all m subspaces). Column selection happens AFTER
-            // scoring: at 2x gather lanes the whole block costs less than
-            // packing survivors first. Mid-beam many blocks are FULLY
-            // visited — detect that and skip the gather entirely.
-            var any = false
-            var j = 0
-            while (j < deg && !any) { if (!visited.get(nbrs(j))) any = true; j += 1 }
-            if (any) {
-              kernels.adcBlockF(dotsF, magsF, kk, fused(c), deg, m, dAcc, mAcc)
-              j = 0
-              while (j < deg) {
-                val nb = nbrs(j)
-                if (!visited.get(nb)) {
-                  visited.set(nb)
-                  visits += 1
-                  val sc = adcCombine(adcMetric, dAcc(j), mAcc(j), qNormSq)
-                  if (res.size < ef || sc > LongHeap.score(res.top))
-                    cand.push(LongHeap.pack(sc, nb))
-                }
-                j += 1
-              }
-            }
-          } else {
-            // scalar fallback: whole-block scoring is strictly more
-            // lookups, so pack the UNVISITED survivors' codes (stride
-            // nCols, subspace-major) and score only those — the pre-SIMD
-            // economics this path always had
-            var nCols = 0
-            var j = 0
-            while (j < deg) {
-              val nb = nbrs(j)
-              if (!visited.get(nb)) {
-                visited.set(nb)
-                colIdx(nCols) = j
-                nCols += 1
-              }
-              j += 1
-            }
-            visits += nCols
-            if (nCols > 0) {
-              val block = fused(c)
-              var s = 0
-              while (s < m) {
-                var jj = 0
-                while (jj < nCols) {
-                  packedCodes(s * nCols + jj) = block(s * deg + colIdx(jj)); jj += 1
-                }
-                s += 1
-              }
-              kernels.adcBlockF(dotsF, magsF, kk, packedCodes, nCols, m, dAcc, mAcc)
-              j = 0
-              while (j < nCols) {
-                val sc = adcCombine(adcMetric, dAcc(j), mAcc(j), qNormSq)
-                if (res.size < ef || sc > LongHeap.score(res.top))
-                  cand.push(LongHeap.pack(sc, nbrs(colIdx(j))))
-                j += 1
-              }
-            }
-          }
-        }
-      }
-    }
-    visitedAdder.add(visits)
-    if (vc != null) vc.n += visits
-    res.toArray.map { p => val id = LongHeap.id(p); (id, scoreOne(id)) }
-      .sortBy { case (id, s) => (-s, id) }
   }
 
   /** Resumable search (jvector T6): like `search`, but also returns a

@@ -832,33 +832,19 @@ object AnnQueries {
     ("rescore_topology_preserved", 1.0),
     ("rescore_euclidean_recall_ge_0.9", 0.9)))
 
-  /** Fused transposed-layout traversal (Q7, [[Vamana.searchTwoPhaseFused]]):
-    * bit-identical to the gathered path on the same persisted PQ index,
-    * and the two-phase result clears the recall gate. */
-  private def annFused(s: SparkSession, dir: String): DataFrame = {
-    val idx = persistedIndex(s, dir, pq = true)
-    def run(fused: Boolean) = RouteMemo.df(s, s"fused_$fused", dir) {
-      Ann.searchIndex(s, idx, queries0(s, dir), k, 64, annParams.copy(pqM = 8),
-        rerankK = 60, shareRerankFloor = false, fusedAdc = fused)
-        .select("qid", "rank", "nid", "score")
+  /** The default two-phase route (beam on PQ-ADC scores, exact rerank of
+    * the survivors, rerank floors shared across segments) over the
+    * exact-built PQ tree clears the recall gate. */
+  private def annTwophase(s: SparkSession, dir: String): DataFrame = {
+    val res = RouteMemo.df(s, "ann_twophase", dir) {
+      Ann.searchIndex(s, persistedIndex(s, dir, pq = true), queries0(s, dir), k, 64,
+        annParams.copy(pqM = 8), rerankK = 60)
     }
-    val f = run(true)
-    val g = run(false)
-    // bit-identity over the two memoized 50-row routes, driver-side
-    def rows(df: DataFrame): Seq[Seq[Any]] =
-      df.select(col("qid"), col("rank"), col("nid"), col("score"))
-        .collect().toSeq.map(_.toSeq)
-    val (fr, gr) = (rows(f), rows(g))
-    val identical = fr.length == gr.length && fr.toSet == gr.toSet
-    val rec = recallOf(f, exactKnn(s, dir))
-    Gates.df(s, Seq(
-      ("fused_identical_to_gathered", 1.0, identical),
-      ("fused_twophase_recall_ge_0.85", 0.85, rec >= 0.85)))
+    val rec = recallOf(res, exactKnn(s, dir))
+    Gates.df(s, Seq(("twophase_recall_ge_0.85", 0.85, rec >= 0.85)))
   }
 
-  private val annFusedSql: String = Gates.sql(Seq(
-    ("fused_identical_to_gathered", 1.0),
-    ("fused_twophase_recall_ge_0.85", 0.85)))
+  private val annTwophaseSql: String = Gates.sql(Seq(("twophase_recall_ge_0.85", 0.85)))
 
   /** PQ-scored construction (the reference's DEFAULT build mode:
     * default.yml build `compression: PQ`,
@@ -1392,7 +1378,7 @@ object AnnQueries {
     "ann_threshold" -> (annThreshold _),
     "ann_threshold_idx" -> (annThresholdIdx _),
     "ann_rescore" -> (annRescore _),
-    "ann_fused" -> (annFused _),
+    "ann_twophase" -> (annTwophase _),
     "ann_pq_build" -> (annPqBuild _),
     "ann_pqres_clustered" -> (annPqresClustered _),
     "ann_lifecycle" -> (annLifecycle _),
@@ -1417,7 +1403,7 @@ object AnnQueries {
     "ann_threshold" -> annThresholdSql,
     "ann_threshold_idx" -> annThresholdIdxSql,
     "ann_rescore" -> annRescoreSql,
-    "ann_fused" -> annFusedSql,
+    "ann_twophase" -> annTwophaseSql,
     "ann_pq_build" -> annPqBuildSql,
     "ann_pqres_clustered" -> annPqresClusteredSql,
     "ann_lifecycle" -> annLifecycleSql,

@@ -171,7 +171,7 @@ class AnnSpec extends SparkSpec {
         }
         (1.0 + dot / (math.sqrt(mag) * math.sqrt(qnorm))) / 2.0
       }
-      val got = g.searchTwoPhase(q, approx, topK = 10, rerankK = 60).map(_._1).toSet
+      val got = g.searchTwoPhase(q, approx, topK = 10, rerankK = 60)._1.map(_._1).toSet
       val want = vecs.indices.map(i => (i, g.sim(q, vecs(i))))
         .sortBy { case (i, s) => (-s, i) }.take(10).map(_._1).toSet
       recallSum += got.intersect(want).size.toDouble / want.size
@@ -196,36 +196,6 @@ class AnnSpec extends SparkSpec {
     val want = KnnExact.knn(base, queries, 10, "COSINE")
     val r = recallOf(got, want)
     assert(r >= 0.9, s"PQ two-phase recall $r < 0.9")
-  }
-
-  test("fused-ADC traversal (Q7) returns results identical to the gathered path") {
-    val tmp = java.nio.file.Files.createTempDirectory("annfused").toString
-    val base = randVectors(4000, 16, seed = 43).toDF("id", "vec").repartition(3)
-    val queries = randVectors(16, 16, seed = 44).toDF("qid", "qvec")
-    val params = Ann.Params(metric = "COSINE", maxDegree = 16, beamWidth = 64, pqM = 4, pqK = 32)
-    Ann.buildIndex(base, s"$tmp/idx", params)
-    def run(fused: Boolean, dels: Option[Seq[Long]] = None): Set[(Long, Int, Long, Double)] = {
-      Ann.clearSegmentCache() // force reassembly so both runs build fresh entries
-      Ann.searchIndex(spark, s"$tmp/idx", queries, 10, 64, params, rerankK = 60,
-        deletes = dels.map(_.toDF("id")), shareRerankFloor = false, fusedAdc = fused)
-        .select("qid", "rank", "nid", "score")
-        .as[(Long, Int, Long, Double)].collect().toSet
-    }
-    val fused = run(true)
-    val gathered = run(false)
-    // the fused traversal runs on FLOAT table partials (reference
-    // assembleAndSum shape), so approx scores differ from the gathered
-    // double path in low-order bits — but the rerankK=60 candidate margin
-    // absorbs that and survivors rerank EXACTLY, so the emitted rows
-    // (ids AND scores) still match bit-for-bit on this fixture
-    assert(fused === gathered, "fused and gathered two-phase paths must be identical")
-    assert(fused.nonEmpty)
-    // identity must hold under merge-on-read tombstones too (the live
-    // filter gates results, not traversal, on both paths)
-    val dels = Some((0L until 200L).toSeq)
-    val fusedDel = run(true, dels)
-    assert(fusedDel === run(false, dels), "fused/gathered diverge under deletes")
-    assert(fusedDel.forall(_._3 >= 200L), "tombstoned ids must not appear")
   }
 
   test("buildIndexClustered: locality-aligned segments keep routing recall with few probes") {
@@ -1278,29 +1248,39 @@ class AnnSpec extends SparkSpec {
   test("SegmentCache evicts by BYTES: large segments stay under a configured budget") {
     val tmp = java.nio.file.Files.createTempDirectory("annbudget").toString
     // 8 segments x 1000 rows x 64d floats: ~0.3 MB resident each
-    val base = randVectors(8000, 64, seed = 77).toDF("id", "vec").repartition(8)
+    val base = randVectors(8000, 64, seed = 77).toDF("id", "vec").repartition(8).cache()
     val params = Ann.Params(metric = "COSINE", maxDegree = 8, beamWidth = 32,
       segmentRows = 0)
     Ann.buildIndex(base, s"$tmp/idx", params)
     val queries = randVectors(4, 64, seed = 78).toDF("qid", "qvec")
-    val prevBudget = Ann.SegmentCache.maxBytes
-    try {
-      Ann.clearSegmentCache()
-      Ann.SegmentCache.maxBytes = 600 * 1024 // fits ~2 segments, not 8
-      val got = Ann.searchIndex(spark, s"$tmp/idx", queries, 5, 32, params)
-      assert(got.groupBy("qid").count().count() === 4L, "results unaffected by eviction")
-      val resident = Ann.SegmentCache.currentBytes
-      assert(resident > 0L, "cache must hold something after a search")
-      // bound: budget + in-flight slack (an insert never evicts itself, and
-      // local[4] can be mid-insert on up to 4 entries concurrently)
-      assert(resident <= Ann.SegmentCache.maxBytes + 4L * 400L * 1024L,
-        s"resident $resident exceeds budget ${Ann.SegmentCache.maxBytes} + slack")
-      // the full tree (~2.4 MB) must NOT be resident — eviction really ran
-      assert(resident < 8L * 300L * 1024L, s"no eviction happened: $resident bytes resident")
-    } finally {
-      Ann.SegmentCache.maxBytes = prevBudget
-      Ann.clearSegmentCache()
+    // the persisted segment cache and the transient graph cache (Ann.search
+    // over the same 8 partitions) share one byte-budget policy
+    val inputs = Seq[(String, Ann.ByteBudgetCache[_], () => DataFrame)](
+      ("persisted", Ann.SegmentCache,
+        () => Ann.searchIndex(spark, s"$tmp/idx", queries, 5, 32, params)),
+      ("transient", Ann.TransientGraphCache,
+        () => Ann.search(base, queries, 5, 32, params)))
+    for ((name, cache, search) <- inputs) {
+      val prevBudget = cache.maxBytes
+      try {
+        Ann.clearSegmentCache()
+        cache.maxBytes = 600 * 1024 // fits ~2 segments, not 8
+        val got = search()
+        assert(got.groupBy("qid").count().count() === 4L, s"$name: results unaffected by eviction")
+        val resident = cache.currentBytes
+        assert(resident > 0L, s"$name: cache must hold something after a search")
+        // bound: budget + in-flight slack (an insert never evicts itself, and
+        // local[4] can be mid-insert on up to 4 entries concurrently)
+        assert(resident <= cache.maxBytes + 4L * 400L * 1024L,
+          s"$name: resident $resident exceeds budget ${cache.maxBytes} + slack")
+        // the full tree (~2.4 MB) must NOT be resident — eviction really ran
+        assert(resident < 8L * 300L * 1024L, s"$name: no eviction happened: $resident bytes resident")
+      } finally {
+        cache.maxBytes = prevBudget
+        Ann.clearSegmentCache()
+      }
     }
+    base.unpersist()
   }
 
   test("identityPreimages: repartition(n, preimage) IS the identity partition map") {

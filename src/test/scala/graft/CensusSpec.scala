@@ -6,10 +6,11 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Census of the operator-facing surface: the `SPARK_GRAFT_*` environment
-  * knobs that src/main/scala and build.sbt name, and the objects under
-  * src/main/scala and src/test/scala that define `def main`. Each set is
-  * pinned to an explicit list, so a new knob or entry point (or a stale
-  * one kept after its code is gone) is a deliberate, reviewed edit here. */
+  * knobs that src/main/scala and build.sbt name, the objects under
+  * src/main/scala and src/test/scala that define `def main`, the
+  * `SparkEntry.queries` count, and the `VectorKernels` seam's callers.
+  * Each is pinned, so a new knob, entry point or query (or a stale one
+  * kept after its code is gone) is a deliberate, reviewed edit here. */
 class CensusSpec extends AnyFunSuite {
 
   private val Knobs = Set(
@@ -21,6 +22,8 @@ class CensusSpec extends AnyFunSuite {
     "graft.tools.ClusterBuildDecomp")
 
   private val TestEntryPoints = Set("graft.RunQuery")
+
+  private val QueryCount = 103
 
   private def read(p: Path): String = new String(Files.readAllBytes(p), UTF_8)
 
@@ -62,5 +65,23 @@ class CensusSpec extends AnyFunSuite {
   test(s"src/test/scala defines exactly the ${TestEntryPoints.size} pinned def-main objects") {
     val found = mainObjects(scalaSources("src/test/scala"))
     assert(found == TestEntryPoints, diff(found, TestEntryPoints))
+  }
+
+  test(s"SparkEntry.queries has $QueryCount entries and no key shadowed across its nine maps") {
+    import graft.queries._
+    val parts = Seq(RelationalQueries.queries, VectorSearchQueries.queries,
+      TextDedupQueries.queries, QuantizationQueries.queries, AnnQueries.queries,
+      MultimodalQueries.queries, CorpusPrepQueries.queries, ServiceQueries.queries,
+      RetrievalQueries.queries)
+    val shadowed = parts.flatMap(_.keys).groupBy(identity).collect { case (k, v) if v.size > 1 => k }
+    assert(SparkEntry.queries.size == parts.map(_.size).sum, s"keys in more than one map: $shadowed")
+    assert(SparkEntry.queries.size == QueryCount)
+  }
+
+  test("every VectorKernels method but name is called under src/main/scala") {
+    val texts = scalaSources("src/main/scala")
+    val methods = classOf[graft.simd.VectorKernels].getDeclaredMethods.map(_.getName).toSet - "name"
+    val uncalled = methods.filterNot(m => texts.exists(("""\.""" + m + """\(""").r.findFirstIn(_).isDefined))
+    assert(uncalled.isEmpty, s"VectorKernels methods with no caller: ${uncalled.toSeq.sorted}")
   }
 }

@@ -45,25 +45,6 @@ class SimdSpec extends AnyFunSuite {
     }
   }
 
-  test("adcAccumulate gather is bit-identical to the scalar loop") {
-    val p = new PanamaKernels
-    val rnd = new scala.util.Random(8)
-    val m = 4; val kk = 64
-    val dots = Array.fill(m * kk)(rnd.nextDouble())
-    val mags = Array.fill(m * kk)(rnd.nextDouble())
-    for (n <- Seq(1, 7, 8, 9, 32, 33)) { // sub-lane, lane-exact, odd tails
-      val codes = Array.fill(m * n)(rnd.nextInt(kk))
-      val (dP, mP) = (new Array[Double](n), new Array[Double](n))
-      val (dS, mS) = (new Array[Double](n), new Array[Double](n))
-      for (s <- 0 until m) {
-        p.adcAccumulate(dots, mags, s * kk, codes, s * n, n, dP, mP)
-        scalar.adcAccumulate(dots, mags, s * kk, codes, s * n, n, dS, mS)
-      }
-      assert(dP.toSeq === dS.toSeq, s"dAcc n=$n")
-      assert(mP.toSeq === mS.toSeq, s"mAcc n=$n")
-    }
-  }
-
   test("contract: bit-symmetric dot/l2sq and normSq bit-equal to dot(a,a)") {
     for (k <- Seq(new PanamaKernels, scalar: graft.simd.VectorKernels); dim <- Seq(7, 64, 100)) {
       val Array(a, b) = vecs(2, dim, 7 * dim)
